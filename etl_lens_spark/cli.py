@@ -31,11 +31,6 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 def _parse_sort(spec: str | None) -> list[tuple[str, bool]]:
     """``col,other:desc`` → [(col, asc), (other, False)]."""
@@ -60,13 +55,6 @@ def _emit(df: DataFrame, limit: int, fmt: str, out=sys.stdout) -> None:
     else:
         # show() prints to stdout; _jdf keeps the limit in the plan
         print(df._jdf.showString(limit, 40, False), file=out)
-
-
-def _register_views(spark: SparkSession, sf_dir: str) -> None:
-    from etl_lens_spark.sources.tables import load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def cmd_catalog(spark: SparkSession, args, out=sys.stdout) -> int:
@@ -103,7 +91,9 @@ def cmd_query(spark: SparkSession, args, out=sys.stdout) -> int:
 def cmd_sql(spark: SparkSession, args, out=sys.stdout) -> int:
     """The latent SQL surface: every fixture table registered as a
     view, arbitrary Spark SQL against them."""
-    _register_views(spark, args.sf_dir)
+    from etl_lens_spark.sources.tables import register_views
+
+    register_views(spark, args.sf_dir)
     _emit(spark.sql(args.statement), args.limit, args.format, out)
     return 0
 

@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_lens_spark.dedup.exact import normalized_text
-from etl_lens_spark.operators.staging import stage
 
 
 def add_shingles(

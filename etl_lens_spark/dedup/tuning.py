@@ -8,10 +8,10 @@ Closes the loop on the ``spark.etl_lens.minhash.*`` configuration
 (config.py): given "collide pairs with Jaccard ≥ t" and "I can
 afford k hash components", the tuner returns the banding that
 minimizes the weighted false-positive/false-negative probability
-mass around t, and the probe helpers report the curve so the choice
-is auditable. Pure deterministic arithmetic — no data pass, no RNG;
-at 100 TB the tune costs microseconds and decides the size of the
-banded self-join, which is the whole cost of MinHash-LSH dedup.
+mass around t, and ``lsh_collision_prob`` reports the curve so the
+choice is auditable. Pure deterministic arithmetic — no data pass, no
+RNG; at 100 TB the tune costs microseconds and decides the size of
+the banded self-join, which is the whole cost of MinHash-LSH dedup.
 """
 
 from __future__ import annotations
@@ -69,12 +69,3 @@ def tune_lsh_params(
             best = (err, b, r)
     assert best is not None
     return best[1], best[2]
-
-
-def curve_points(
-    r: int, b: int, at: list[float] | None = None
-) -> list[tuple[float, float]]:
-    """(s, P(candidate)) samples of the S-curve — the audit artifact
-    to log next to a chosen banding."""
-    ss = at if at is not None else [i / 20 for i in range(1, 20)]
-    return [(s, lsh_collision_prob(s, r, b)) for s in ss]

@@ -2,10 +2,32 @@
 over plain parquet files (public Delta Lake PROTOCOL.md semantics,
 re-implemented from scratch — no table-format library needed).
 
-A table is a directory of parquet data files plus ``_log/N.json``
-commit files. Each commit is a JSON list of actions
-(``{"add": path}`` / ``{"remove": path}``); the table state at
-version V is the replay of commits 0..V. This gives the three
+On-disk layout of a table directory:
+
+- ``_log/{v:08d}.json`` — commit ``v``, a JSON list of actions:
+  ``{"add": rel, ...}`` (plus optional stats, ``num_records``,
+  ``spec_id``, ``dv``, ``data_change``), ``{"remove": rel}``,
+  ``txn``, the metadata families ``metaData`` / ``columnMapping`` /
+  ``partitionSpec`` / ``constraint`` / ``dropConstraint``, ``cdc``,
+  and markers (``op``, ``wap``, ``restore``, ``gdprPurge``).
+  Created with O_EXCL; read only through ``commit_actions``.
+- ``_log/{v:08d}.checkpoint.json`` — the folded state at ``v``: the
+  active ``add`` actions in first-added order, then
+  ``{"txns": {appId: version}}`` when any app committed one, then
+  ``{"metaState": {...}}``. Written tmp + rename; read only through
+  ``_checkpoint``. Commit files at or below a checkpoint may be
+  retired.
+- ``_log/_staged/{tag}.json`` — a write-audit-publish batch,
+  ``{"base_version": v, "actions": [...]}``.
+- ``_dv/*.json`` — deletion-vector sidecars,
+  ``{physical_rel: [row positions]}``.
+- ``_cdc/cdc_{v:08d}/`` — commit ``v``'s row-level change record
+  (parquet carrying ``_change_type``).
+- every other entry — parquet data referenced by add actions.
+
+The table state at version V is the newest checkpoint ≤ V plus the
+commits after it, folded once by ``_fold`` into the active file set,
+the txn high-water marks and the metadata state. This gives the three
 lakehouse properties the CDC family (operators/cdc.py) tracks at ROW
 level, at FILE level instead:
 
@@ -15,7 +37,7 @@ level, at FILE level instead:
   two writers racing to the same version: exactly one wins, the
   loser re-reads and retries (test-pinned).
 - **time travel** — any historical version is reconstructable while
-  its files survive (VACUUM is deliberately out of scope here).
+  its commits and files survive (``vacuum`` sets the horizon).
 
 Scale posture: the log is O(commits) tiny JSON on the driver-visible
 store; data files are never rewritten on commit (append/remove are
@@ -31,6 +53,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from etl_lens_spark.operators.staging import stage as stage_frame
@@ -46,16 +69,136 @@ def _log_dir(table_dir: str) -> str:
     return d
 
 
+def _versions(table_dir: str, suffix: str) -> list[int]:
+    """Versions of the ``_log/{v:08d}{suffix}`` files on disk."""
+    n = len(suffix)
+    return [
+        int(f[:-n])
+        for f in os.listdir(_log_dir(table_dir))
+        if f.endswith(suffix) and f[:-n].isdigit()
+    ]
+
+
+def _commit_path(table_dir: str, version: int) -> str:
+    return os.path.join(table_dir, "_log", f"{version:08d}.json")
+
+
 def commit(table_dir: str, version: int, actions: list[dict]) -> None:
     """Write commit ``version`` atomically; O_EXCL enforces optimistic
     concurrency (raises CommitConflict on a lost race)."""
-    path = os.path.join(_log_dir(table_dir), f"{version:08d}.json")
+    path = _commit_path(table_dir, version)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     try:
         fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
     except FileExistsError as e:
         raise CommitConflict(f"version {version} already committed") from e
     with os.fdopen(fd, "w") as f:
         json.dump(actions, f)
+
+
+def commit_actions(table_dir: str, version: int) -> list[dict]:
+    """The actions of commit ``version`` — the one reader of commit
+    files. A missing file raises: the log has a hole there, or the
+    commit was retired after a checkpoint, and either way its actions
+    are unknowable."""
+    try:
+        with open(_commit_path(table_dir, version)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise ValueError(
+            f"missing commit {version}: the log has a hole, or the "
+            "file was retired after a checkpoint"
+        ) from None
+
+
+def _checkpoint(
+    table_dir: str, version: int
+) -> tuple[int, Iterator[dict]]:
+    """The newest checkpoint at or before ``version`` and its entries
+    — the one reader of checkpoint files; ``(-1, <empty>)`` when there
+    is none. The entries are read on first iteration, so a caller that
+    only needs the checkpoint's version opens nothing."""
+    cv = max(
+        (c for c in _versions(table_dir, ".checkpoint.json")
+         if c <= version),
+        default=-1,
+    )
+
+    def entries() -> Iterator[dict]:
+        if cv >= 0:
+            name = f"{cv:08d}.checkpoint.json"
+            with open(os.path.join(_log_dir(table_dir), name)) as f:
+                loaded = json.load(f)
+            yield from loaded
+
+    return cv, entries()
+
+
+class _LogState(NamedTuple):
+    active: dict[str, dict]  # rel → add action, first-added order
+    txns: dict[str, int]  # appId → latest txn version
+    meta: dict  # metaData / columnMapping / partitionSpecs / constraints
+    start: int  # first commit replayed after the checkpoint
+    n_replayed: int
+
+
+def _fold(table_dir: str, version: int | None = None) -> _LogState:
+    """Table state at ``version`` (default: latest) in one pass: the
+    newest checkpoint ≤ version, then every commit after it (a
+    missing one raises). The active set maps each live rel to its add
+    action; ``txns`` holds each app's latest ``txn`` version; ``meta``
+    is the last-wins state of every metadata family::
+
+        {"metaData": fields|None, "columnMapping": fields|None,
+         "partitionSpecs": {spec_id: spec}, "constraints": {name: expr}}
+
+    Cost is O(commits since the checkpoint), and pre-checkpoint commit
+    files are never opened, so they may be retired."""
+    if version is None:
+        version = latest_version(table_dir)
+    active: dict[str, dict] = {}
+    txns: dict[str, int] = {}
+    meta: dict = {
+        "metaData": None,
+        "columnMapping": None,
+        "partitionSpecs": {},
+        "constraints": {},
+    }
+    cv, entries = _checkpoint(table_dir, version)
+    for e in entries:
+        if "add" in e:
+            active[e["add"]] = e
+        elif "txns" in e:
+            txns.update({a: int(v) for a, v in e["txns"].items()})
+        elif "metaState" in e:
+            s = e["metaState"]
+            meta["metaData"] = s.get("metaData")
+            meta["columnMapping"] = s.get("columnMapping")
+            meta["partitionSpecs"] = {
+                int(k): v for k, v in s.get("partitionSpecs", {}).items()
+            }
+            meta["constraints"] = dict(s.get("constraints", {}))
+    for v in range(cv + 1, version + 1):
+        for a in commit_actions(table_dir, v):
+            if "add" in a:
+                active[a["add"]] = a
+            elif "remove" in a:
+                active.pop(a["remove"], None)
+            elif a.get("txn"):
+                txns[a["txn"]["appId"]] = int(a["txn"]["version"])
+            elif "metaData" in a:
+                meta["metaData"] = a["metaData"]["fields"]
+            elif "columnMapping" in a:
+                meta["columnMapping"] = a["columnMapping"]["fields"]
+            elif "partitionSpec" in a:
+                s = a["partitionSpec"]
+                meta["partitionSpecs"][int(s["spec_id"])] = s
+            elif "constraint" in a:
+                c = a["constraint"]
+                meta["constraints"][c["name"]] = c["expr"]
+            elif "dropConstraint" in a:
+                meta["constraints"].pop(a["dropConstraint"], None)
+    return _LogState(active, txns, meta, cv + 1, version - cv)
 
 
 def try_commit_rebase(
@@ -103,15 +246,11 @@ def try_commit_rebase(
         head = latest_version(table_dir)
         n_rebased = 0
         for v in range(base_version + 1, head + 1):
-            path = os.path.join(_log_dir(table_dir), f"{v:08d}.json")
-            if not os.path.exists(path):
-                raise ValueError(f"missing commit {v} (log has a hole)")
-            with open(path) as f:
-                theirs = {
-                    a.get("add") or a.get("remove")
-                    for a in json.load(f)
-                    if "add" in a or "remove" in a
-                }
+            theirs = {
+                a.get("add") or a.get("remove")
+                for a in commit_actions(table_dir, v)
+                if "add" in a or "remove" in a
+            }
             overlap = mine & theirs
             if overlap:
                 raise CommitConflict(
@@ -244,17 +383,16 @@ def shallow_clone(
     At 100 TB this is how dev/test tables, experiment branches and
     reproducible-snapshot handoffs are made: instant, free, isolated.
     """
-    _assert_no_dv(snapshot_actions(src_dir, version), "shallow_clone")
-    actions = []
-    # carry the committed schema: snapshot_actions tracks only the
-    # file set, but a schema-evolved source's reads are governed by
-    # its last metaData action — a clone without it would silently
-    # fall back to the physical parquet schema (dropped columns
-    # reappearing), diverging from Delta SHALLOW CLONE semantics
-    schema = table_schema(src_dir, version)
-    if schema is not None:
-        actions.append({"metaData": {"fields": [list(x) for x in schema]}})
-    for rel, action in snapshot_actions(src_dir, version).items():
+    state = _fold(src_dir, version)
+    _assert_no_dv(state.active, "shallow_clone")
+    # carry the folded table metadata — schema, column mapping,
+    # partition specs and constraints: a clone without them would
+    # read renamed columns under their physical names, fall back to
+    # the physical parquet schema and accept rows the source's
+    # constraints refuse, diverging from Delta SHALLOW CLONE semantics
+    actions = _meta_actions(state.meta)
+    n_meta = len(actions)
+    for rel, action in state.active.items():
         new = dict(action)
         new["add"] = os.path.relpath(
             os.path.normpath(os.path.join(src_dir, rel)), dst_dir
@@ -263,23 +401,34 @@ def shallow_clone(
     os.makedirs(dst_dir, exist_ok=True)
     commit(dst_dir, 0, actions)
     return {
-        "n_files_referenced": len(actions) - (schema is not None),
-        "schema_cloned": schema is not None,
+        "n_files_referenced": len(actions) - n_meta,
+        "schema_cloned": state.meta["metaData"] is not None,
     }
 
 
-def latest_version(table_dir: str) -> int:
-    files = [
-        f
-        for f in os.listdir(_log_dir(table_dir))
-        if f.endswith(".json") and ".checkpoint." not in f
+def _meta_actions(meta: dict) -> list[dict]:
+    """Actions that recreate a folded metadata state (``_fold``) as
+    the first commit of a fresh log."""
+    actions = []
+    if meta["metaData"] is not None:
+        actions.append({"metaData": {"fields": meta["metaData"]}})
+    if meta["columnMapping"] is not None:
+        actions.append({"columnMapping": {"fields": meta["columnMapping"]}})
+    actions += [{"partitionSpec": s} for s in meta["partitionSpecs"].values()]
+    actions += [
+        {"constraint": {"name": name, "expr": expr}}
+        for name, expr in meta["constraints"].items()
     ]
-    return max((int(f[:-5]) for f in files), default=-1)
+    return actions
+
+
+def latest_version(table_dir: str) -> int:
+    return max(_versions(table_dir, ".json"), default=-1)
 
 
 def write_checkpoint(table_dir: str, version: int | None = None) -> dict:
-    """Delta-style LOG CHECKPOINT: consolidate the replay of commits
-    0..version into ``_log/{version}.checkpoint.json`` — the full
+    """Delta-style LOG CHECKPOINT: consolidate the table state at
+    ``version`` into ``_log/{version}.checkpoint.json`` — the full
     active action set (adds with their stats) as one file. Readers
     thereafter start from the newest checkpoint ≤ their target and
     replay only the commits after it, turning snapshot construction
@@ -289,31 +438,27 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> dict:
     weeks — this is the feature that keeps metadata reads O(1)."""
     if version is None:
         version = latest_version(table_dir)
-    active = _replay(table_dir, version)[0]
+    state = _fold(table_dir, version)
     log = _log_dir(table_dir)
-    # txn HIGH-WATER MARKS consolidate too (the Delta checkpoint
-    # carries setTransaction actions for exactly this reason): the
-    # streaming exactly-once check (txn_version) can then answer from
-    # the newest checkpoint + tail instead of walking the whole log —
-    # without this, a checkpointed table still paid O(log) per
-    # idempotent commit when the app had not written recently
-    txns = _txn_marks(table_dir, version)
     path = os.path.join(log, f"{version:08d}.checkpoint.json")
     # write-then-rename so a concurrent reader (the module's headline
     # story) can never json.load a truncated checkpoint: os.rename
     # within one directory is atomic on POSIX — readers see either no
     # checkpoint or a complete one, never a partial write
     tmp = os.path.join(log, f".{version:08d}.checkpoint.json.tmp")
-    entries = list(active.values())
-    if txns:
-        entries.append({"txns": txns})
-    # table METADATA consolidates too (round-8 review fix — Delta
-    # checkpoints carry metaData for the same reason): schema /
-    # column-mapping / partition-spec / constraint resolution then
-    # starts from the checkpoint instead of replaying every commit
-    # since table creation — O(tail) per read instead of O(log), and
-    # still answerable after pre-checkpoint commit files are retired
-    entries.append({"metaState": _meta_state(table_dir, version)})
+    entries = list(state.active.values())
+    # txn HIGH-WATER MARKS consolidate too (the Delta checkpoint
+    # carries setTransaction actions for exactly this reason): the
+    # streaming exactly-once check (txn_version) then answers from
+    # the newest checkpoint + tail instead of walking the whole log
+    if state.txns:
+        entries.append({"txns": state.txns})
+    # table METADATA consolidates too (Delta checkpoints carry
+    # metaData for the same reason): schema / column-mapping /
+    # partition-spec / constraint resolution then starts from the
+    # checkpoint — O(tail) per read instead of O(log), and still
+    # answerable after pre-checkpoint commit files are retired
+    entries.append({"metaState": state.meta})
     with open(tmp, "w") as f:
         json.dump(entries, f)
         f.flush()
@@ -321,137 +466,18 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> dict:
     os.rename(tmp, path)
     return {
         "version": version,
-        "n_active_files": len(active),
-        "n_txn_apps": len(txns),
+        "n_active_files": len(state.active),
+        "n_txn_apps": len(state.txns),
     }
-
-
-def _meta_state(table_dir: str, version: int) -> dict:
-    """Consolidated table metadata as of ``version`` — the last-wins
-    state of every metadata action family, resolved CHECKPOINT-FIRST
-    (newest checkpoint ≤ version, then the tail commits), so every
-    metadata reader is O(commits since last checkpoint) and survives
-    retirement of pre-checkpoint commit files. Returns::
-
-        {"metaData": fields|None, "columnMapping": fields|None,
-         "partitionSpecs": {spec_id: spec}, "constraints": {name: expr}}
-    """
-    log = _log_dir(table_dir)
-    ckpts = [
-        int(f.split(".")[0])
-        for f in os.listdir(log)
-        if f.endswith(".checkpoint.json")
-        and int(f.split(".")[0]) <= version
-    ]
-    state: dict = {
-        "metaData": None,
-        "columnMapping": None,
-        "partitionSpecs": {},
-        "constraints": {},
-    }
-    start = 0
-    if ckpts:
-        cv = max(ckpts)
-        with open(os.path.join(log, f"{cv:08d}.checkpoint.json")) as f:
-            for entry in json.load(f):
-                if "metaState" in entry:
-                    s = entry["metaState"]
-                    state["metaData"] = s.get("metaData")
-                    state["columnMapping"] = s.get("columnMapping")
-                    state["partitionSpecs"] = {
-                        int(k): v
-                        for k, v in s.get("partitionSpecs", {}).items()
-                    }
-                    state["constraints"] = dict(s.get("constraints", {}))
-        start = cv + 1
-    for v in range(start, version + 1):
-        path = os.path.join(log, f"{v:08d}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"log hole at version {v}")
-        with open(path) as f:
-            for a in json.load(f):
-                if "metaData" in a:
-                    state["metaData"] = a["metaData"]["fields"]
-                elif "columnMapping" in a:
-                    state["columnMapping"] = a["columnMapping"]["fields"]
-                elif "partitionSpec" in a:
-                    s = a["partitionSpec"]
-                    state["partitionSpecs"][int(s["spec_id"])] = s
-                elif "constraint" in a:
-                    c = a["constraint"]
-                    state["constraints"][c["name"]] = c["expr"]
-                elif "dropConstraint" in a:
-                    state["constraints"].pop(a["dropConstraint"], None)
-    return state
-
-
-def _txn_marks(table_dir: str, version: int) -> dict[str, int]:
-    """Latest txn version per appId as of ``version``, itself
-    resolved checkpoint-first (newest checkpoint ≤ version, then the
-    tail commits) so consolidation never re-reads the whole log."""
-    log = _log_dir(table_dir)
-    ckpts = [
-        int(f.split(".")[0])
-        for f in os.listdir(log)
-        if f.endswith(".checkpoint.json")
-        and int(f.split(".")[0]) <= version
-    ]
-    marks: dict[str, int] = {}
-    start = 0
-    if ckpts:
-        cv = max(ckpts)
-        with open(os.path.join(log, f"{cv:08d}.checkpoint.json")) as f:
-            for entry in json.load(f):
-                if "txns" in entry:
-                    marks.update(
-                        {a: int(v) for a, v in entry["txns"].items()}
-                    )
-        start = cv + 1
-    for v in range(start, version + 1):
-        path = os.path.join(log, f"{v:08d}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"log hole at version {v}")
-        with open(path) as f:
-            for a in json.load(f):
-                t = a.get("txn")
-                if t:
-                    marks[t["appId"]] = int(t["version"])
-    return marks
 
 
 def _replay(
     table_dir: str, version: int
 ) -> tuple[dict[str, dict], int, int]:
-    """Active action set at ``version`` starting from the newest
-    checkpoint ≤ version (if any). Returns (active, start_version,
-    n_commits_replayed)."""
-    log = _log_dir(table_dir)
-    ckpts = [
-        int(f.split(".")[0])
-        for f in os.listdir(log)
-        if f.endswith(".checkpoint.json")
-        and int(f.split(".")[0]) <= version
-    ]
-    active: dict[str, dict] = {}
-    start = 0
-    if ckpts:
-        cv = max(ckpts)
-        with open(os.path.join(log, f"{cv:08d}.checkpoint.json")) as f:
-            for action in json.load(f):
-                if "add" in action:  # skip the txns summary entry
-                    active[action["add"]] = action
-        start = cv + 1
-    for v in range(start, version + 1):
-        path = os.path.join(log, f"{v:08d}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"missing commit {v} (log has a hole)")
-        with open(path) as f:
-            for action in json.load(f):
-                if "add" in action:
-                    active[action["add"]] = action
-                elif "remove" in action:
-                    active.pop(action["remove"], None)
-    return active, start, version + 1 - start
+    """Active action set at ``version`` (see ``_fold``). Returns
+    (active, start_version, n_commits_replayed)."""
+    state = _fold(table_dir, version)
+    return state.active, state.start, state.n_replayed
 
 
 def snapshot_files(table_dir: str, version: int | None = None) -> list[str]:
@@ -594,17 +620,13 @@ def merge_upsert(
     """
     from pyspark.sql import functions as F
 
-    _assert_no_dv(
-        _replay(table_dir, latest_version(table_dir))[0], "merge_upsert"
-    )
-    files = snapshot_files(table_dir)
-    if not files:
+    active = snapshot_actions(table_dir)
+    _assert_no_dv(active, "merge_upsert")
+    if not active:
         raise ValueError("merge into empty snapshot")
+    files = [os.path.join(table_dir, r) for r in active]
     snap = spark.read.parquet(*files).withColumn(
-        "_file",
-        _rel_file_expr(
-            table_dir, [os.path.relpath(f, table_dir) for f in files]
-        ),
+        "_file", _rel_file_expr(table_dir, list(active))
     )
     # the distinct source keys feed the prune semi-join, the rewrite
     # anti-join and (under cdf) both change-classification joins —
@@ -691,17 +713,13 @@ def delete_where(
     read, so CDF consumers can serve the commit (see merge_upsert)."""
     from pyspark.sql import functions as F
 
-    _assert_no_dv(
-        _replay(table_dir, latest_version(table_dir))[0], "delete_where"
-    )
-    files = snapshot_files(table_dir)
-    if not files:
+    active = snapshot_actions(table_dir)
+    _assert_no_dv(active, "delete_where")
+    if not active:
         raise ValueError("delete from empty snapshot")
+    files = [os.path.join(table_dir, r) for r in active]
     snap = spark.read.parquet(*files).withColumn(
-        "_file",
-        _rel_file_expr(
-            table_dir, [os.path.relpath(f, table_dir) for f in files]
-        ),
+        "_file", _rel_file_expr(table_dir, list(active))
     )
     touched = [
         r[0]
@@ -934,17 +952,13 @@ def apply_cdc(
     contradictory delete+preimage pair for one old row."""
     from pyspark.sql import functions as F
 
-    _assert_no_dv(
-        _replay(table_dir, latest_version(table_dir))[0], "apply_cdc"
-    )
-    files = snapshot_files(table_dir)
-    if not files:
+    active = snapshot_actions(table_dir)
+    _assert_no_dv(active, "apply_cdc")
+    if not active:
         raise ValueError("apply_cdc into empty snapshot")
+    files = [os.path.join(table_dir, r) for r in active]
     snap = spark.read.parquet(*files).withColumn(
-        "_file",
-        _rel_file_expr(
-            table_dir, [os.path.relpath(f, table_dir) for f in files]
-        ),
+        "_file", _rel_file_expr(table_dir, list(active))
     )
     keys = changes.select(*key_cols).distinct()
     touched = [
@@ -1343,7 +1357,7 @@ def _recover_staged_rel_debris(table_dir: str) -> None:
     Top-level rels are covered by the root pre-pass; this visits
     only the extra nesting levels, once per distinct parent."""
     rels: set[str] = set()
-    for entry in _staged_entries(table_dir):
+    for entry in _staged_entries(table_dir).values():
         for a in entry["actions"]:
             if a.get("add"):
                 rels.add(a["add"])
@@ -1435,7 +1449,7 @@ def vacuum(
         protected |= {a.split("/", 1)[0] for a in active}
         # a DV sidecar rel rides in the action dict, not the key
         live_dv |= {a["dv"] for a in active.values() if a.get("dv")}
-    for entry in _staged_entries(table_dir):
+    for entry in _staged_entries(table_dir).values():
         for a in entry["actions"]:
             if "add" in a:
                 protected.add(a["add"].split("/", 1)[0])
@@ -1505,13 +1519,12 @@ def read_table_snapshot(
     uniform / multi-table-txn property; single-table Delta gets this
     only within one table). State resolution is the same log replay;
     this just projects the active set onto one subtree."""
-    _assert_no_dv(
-        snapshot_actions(parent_dir, version), "read_table_snapshot"
-    )
+    active = snapshot_actions(parent_dir, version)
+    _assert_no_dv(active, "read_table_snapshot")
     files = [
-        f
-        for f in snapshot_files(parent_dir, version)
-        if os.path.relpath(f, parent_dir).startswith(table + "/")
+        os.path.join(parent_dir, r)
+        for r in active
+        if r.startswith(table + "/")
     ]
     if not files:
         raise ValueError(f"empty snapshot for table {table!r}")
@@ -1530,10 +1543,8 @@ def table_schema(
     action at or before it wins (the Delta protocol's rule). Returns
     ``[(name, sql_type), ...]`` or None if no metaData was ever
     committed (pre-evolution tables keep their physical schema).
-    Checkpoint-aware via _meta_state (round-8 review fix)."""
-    if version is None:
-        version = latest_version(table_dir)
-    fields = _meta_state(table_dir, version)["metaData"]
+    Checkpoint-aware via _fold."""
+    fields = _fold(table_dir, version).meta["metaData"]
     return [tuple(x) for x in fields] if fields is not None else None
 
 
@@ -1549,14 +1560,14 @@ def read_snapshot_evolved(
     travel."""
     from pyspark.sql import functions as F
 
-    _assert_no_dv(
-        snapshot_actions(table_dir, version), "read_snapshot_evolved"
-    )
-    files = snapshot_files(table_dir, version)
-    if not files:
+    state = _fold(table_dir, version)
+    _assert_no_dv(state.active, "read_snapshot_evolved")
+    if not state.active:
         raise ValueError("empty snapshot")
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
-    schema = table_schema(table_dir, version)
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(table_dir, r) for r in state.active]
+    )
+    schema = state.meta["metaData"]
     if schema is None:
         return df
     cols = []
@@ -1626,26 +1637,28 @@ def staged_entry(table_dir: str, tag: str) -> dict:
         return json.load(f)
 
 
-def _staged_entries(table_dir: str) -> list[dict]:
-    """Every parseable staged entry. Unparseable ``.json`` files
-    (crash debris from pre-atomic ``stage`` writers) are skipped
-    defensively so one truncated entry can never turn table-wide
-    maintenance (vacuum / find_orphans) into a JSON outage; since
-    stage() became atomic such files cannot be produced anymore.
+def _staged_entries(table_dir: str) -> dict[str, dict]:
+    """Every parseable staged entry, keyed by its file path, in tag
+    order. Unparseable ``.json`` files (crash debris from pre-atomic
+    ``stage`` writers) are skipped defensively so one truncated entry
+    can never turn table-wide maintenance (vacuum / find_orphans /
+    the GDPR purge) into a JSON outage; since stage() became atomic
+    such files cannot be produced anymore.
 
     Only PARSE failures are skipped: an entry that cannot even be
     READ (EACCES, I/O error) propagates — deleting data because its
     protection record was temporarily unreadable would be
     fail-unsafe (round-8 review fix)."""
     staged_dir = os.path.join(_log_dir(table_dir), "_staged")
-    out: list[dict] = []
+    out: dict[str, dict] = {}
     if os.path.isdir(staged_dir):
         for f in sorted(os.listdir(staged_dir)):
             if not f.endswith(".json"):
                 continue
+            path = os.path.join(staged_dir, f)
             try:
-                with open(os.path.join(staged_dir, f)) as fh:
-                    out.append(json.load(fh))
+                with open(path) as fh:
+                    out[path] = json.load(fh)
             except (json.JSONDecodeError, UnicodeDecodeError):
                 continue
     return out
@@ -1702,12 +1715,8 @@ def _find_wap_commit(
     """Version of the commit carrying {'wap': tag} after
     ``base_version``, or None if the tag never published."""
     for v in range(base_version + 1, latest_version(table_dir) + 1):
-        path = os.path.join(_log_dir(table_dir), f"{v:08d}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"log hole at version {v}")
-        with open(path) as f:
-            if any(a.get("wap") == tag for a in json.load(f)):
-                return v
+        if any(a.get("wap") == tag for a in commit_actions(table_dir, v)):
+            return v
     return None
 
 
@@ -1769,10 +1778,8 @@ def partition_specs(
 ) -> dict[int, dict]:
     """All partitionSpec declarations at or before ``version``
     (later re-declaration of an id wins, mirroring metaData).
-    Checkpoint-aware via _meta_state (round-8 review fix)."""
-    if version is None:
-        version = latest_version(table_dir)
-    return _meta_state(table_dir, version)["partitionSpecs"]
+    Checkpoint-aware via _fold."""
+    return _fold(table_dir, version).meta["partitionSpecs"]
 
 
 def _transform_col(transform: str, col):
@@ -1981,15 +1988,14 @@ def _load_dv_positions(
 ) -> list[tuple[str, int]]:
     """(physical_rel, row_index) pairs of every dead row across the
     active file set — O(deleted rows), the read-side DV state."""
-    pairs: list[tuple[str, int]] = []
-    for action in active.values():
-        dv_rel = action.get("dv")
-        if not dv_rel:
-            continue
-        with open(os.path.join(table_dir, dv_rel)) as f:
-            for phys, positions in json.load(f).items():
-                pairs.extend((phys, int(p)) for p in positions)
-    return pairs
+    return [
+        (phys, p)
+        for action in active.values()
+        for phys, positions in _dv_positions_by_phys(
+            table_dir, action.get("dv")
+        ).items()
+        for p in positions
+    ]
 
 
 def _anti_join_dead(
@@ -2152,13 +2158,10 @@ def delete_where_mor(
         merged: dict[str, set[int]] = {
             p: set(v) for p, v in new_pos.items()
         }
-        old_dv = active[rel].get("dv")
-        if old_dv:
-            with open(os.path.join(table_dir, old_dv)) as f:
-                for phys, positions in json.load(f).items():
-                    merged.setdefault(phys, set()).update(
-                        int(p) for p in positions
-                    )
+        for phys, positions in _dv_positions_by_phys(
+            table_dir, active[rel].get("dv")
+        ).items():
+            merged.setdefault(phys, set()).update(positions)
         dv_rel = f"_dv/{rel.replace('/', '__')}.v{version:08d}.json"
         with open(os.path.join(table_dir, dv_rel), "w") as f:
             json.dump(
@@ -2225,35 +2228,22 @@ def txn_version(table_dir: str, app_id: str) -> int | None:
     cost of a healthy stream is O(commits since that app's last
     commit) ≈ O(1), not O(log length) (round-7 review fix — the
     forward full scan made ingestion O(batches²)). Same semantics as
-    Delta: the latest writer's version is THE version; a production
-    log would also fold these high-water marks into checkpoints."""
-    log = _log_dir(table_dir)
+    Delta: the latest writer's version is THE version. The scan stops
+    at the newest checkpoint, whose consolidated high-water marks
+    cover everything at or before it — no pre-checkpoint commit file
+    is ever opened, and the checkpoint itself only when the app has
+    not committed since."""
     head = latest_version(table_dir)
-    ckpts = [
-        int(f.split(".")[0])
-        for f in os.listdir(log)
-        if f.endswith(".checkpoint.json") and int(f.split(".")[0]) <= head
-    ]
-    floor = max(ckpts) if ckpts else -1
+    floor, entries = _checkpoint(table_dir, head)
     for v in range(head, floor, -1):
-        path = os.path.join(log, f"{v:08d}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"log hole at version {v}")
-        with open(path) as f:
-            for a in json.load(f):
-                t = a.get("txn")
-                if t and t.get("appId") == app_id:
-                    return int(t["version"])
-    if floor >= 0:
-        # the checkpoint's consolidated high-water marks cover
-        # everything at or before it — no pre-checkpoint commit file
-        # is ever opened (the O(1) claim, physically pinned in tests
-        # by DELETING those files)
-        with open(os.path.join(log, f"{floor:08d}.checkpoint.json")) as f:
-            for entry in json.load(f):
-                if "txns" in entry:
-                    v = entry["txns"].get(app_id)
-                    return int(v) if v is not None else None
+        for a in commit_actions(table_dir, v):
+            t = a.get("txn")
+            if t and t.get("appId") == app_id:
+                return int(t["version"])
+    for entry in entries:
+        if "txns" in entry:
+            v = entry["txns"].get(app_id)
+            return int(v) if v is not None else None
     return None
 
 
@@ -2345,14 +2335,26 @@ def rewrite_minus_ids(
 
 
 def find_orphans(table_dir: str) -> list[str]:
-    """Data entries on disk that NO commit in the whole log has ever
-    referenced (failed/retried writer debris — e.g. the files a
-    skipped idempotent retry wrote). Distinct from vacuum's job
-    (removed-but-once-referenced files): an orphan was never visible
-    at ANY version, so deleting it can break no reader. Batches
-    currently STAGED for a WAP audit are NOT orphans (the auditor
-    reads them and publish will reference them — round-7 review
-    fix).
+    """Data entries on disk that nothing in the log references
+    (failed/retried writer debris — e.g. the files a skipped
+    idempotent retry wrote). Referenced means named by:
+
+    - the adds and their ``dv`` sidecars of every checkpoint on
+      disk — time travel to a checkpoint's version is served from
+      that checkpoint alone, even after the commits around it are
+      retired;
+    - any action of every surviving commit file (add, remove, dv,
+      cdc) — the whole log until commits are retired behind a
+      checkpoint;
+    - a batch currently STAGED for a WAP audit (the auditor reads it
+      and publish will reference it).
+
+    Distinct from vacuum's job (removed-but-once-referenced files,
+    bounded by a retention horizon): an orphan is visible at no
+    version a surviving commit or checkpoint can still serve, so
+    deleting it can break no reader. A file that only retired
+    commits named, and that no checkpoint holds, is referenced by
+    nothing any more and counts as an orphan.
 
     NESTED rels are resolved correctly (round-10 fix for multi-table
     logs and hidden-partitioned adds): a directory that is itself an
@@ -2363,16 +2365,20 @@ def find_orphans(table_dir: str) -> list[str]:
     epoch is found while its committed siblings are protected.
     Previously only top-level entries were classified, so such
     debris accumulated invisibly."""
+    head = latest_version(table_dir)
+    checkpoints = sorted(_versions(table_dir, ".checkpoint.json"))
+    floor = max(checkpoints, default=-1)
+    # every commit after the newest checkpoint must be present (a
+    # hole raises); at or below it, whichever commit files survive
+    versions = set(_versions(table_dir, ".json")) | set(
+        range(floor + 1, head + 1)
+    )
+    action_lists = [list(_checkpoint(table_dir, c)[1]) for c in checkpoints]
+    action_lists += [commit_actions(table_dir, v) for v in sorted(versions)]
+    action_lists += [e["actions"] for e in _staged_entries(table_dir).values()]
     referenced: set[str] = set()
-    for v in range(latest_version(table_dir) + 1):
-        path = os.path.join(_log_dir(table_dir), f"{v:08d}.json")
-        with open(path) as f:
-            for a in json.load(f):
-                for key in ("add", "remove", "dv", "cdc"):
-                    if key in a:
-                        referenced.add(a[key])
-    for entry in _staged_entries(table_dir):
-        for a in entry["actions"]:
+    for actions in action_lists:
+        for a in actions:
             for key in ("add", "remove", "dv", "cdc"):
                 if key in a:
                     referenced.add(a[key])
@@ -2486,22 +2492,16 @@ def commit_change_plan(table_dir: str, version: int) -> dict:
          "position_deletes": [(path, positions), ...]}
                                             # listed rows = deletes
 
-    Raises ValueError for a CoW rewrite commit with no cdc record.
+    Raises ValueError for a CoW rewrite commit with no cdc record,
+    and for a commit whose file is missing (a hole, or retired after
+    a checkpoint): CDF can only serve commit ranges whose files
+    survive, exactly like Delta after log cleanup.
     """
     # absolute from the start: the batch reader compares these paths
     # against _metadata.file_path (always absolute) — a relative
     # table_dir would silently match nothing (round-8 review fix)
     table_dir = os.path.abspath(table_dir)
-    path = os.path.join(_log_dir(table_dir), f"{version:08d}.json")
-    if not os.path.exists(path):
-        raise ValueError(
-            f"commit {version} is not in the log (hole, or its file "
-            "was retired after a checkpoint) — CDF can only serve "
-            "commit ranges whose files survive, exactly like Delta "
-            "after log cleanup"
-        )
-    with open(path) as f:
-        actions = json.load(f)
+    actions = commit_actions(table_dir, version)
     plan: dict = {
         "cdc_files": [],
         "insert_files": [],
@@ -2598,6 +2598,8 @@ def commit_change_plan(table_dir: str, version: int) -> dict:
 def _dv_positions_by_phys(
     table_dir: str, dv_rel: str | None
 ) -> dict[str, list[int]]:
+    """A deletion-vector sidecar's dead positions per physical file —
+    the one reader of ``_dv`` files; ``{}`` for no sidecar."""
     if not dv_rel:
         return {}
     with open(os.path.join(table_dir, dv_rel)) as f:
@@ -2780,9 +2782,7 @@ def column_mapping(
     """The mapping as of ``version``: the LAST columnMapping action
     at or before it wins (same rule as metaData / partitionSpec).
     None if the table never enabled mapping."""
-    if version is None:
-        version = latest_version(table_dir)
-    fields = _meta_state(table_dir, version)["columnMapping"]
+    fields = _fold(table_dir, version).meta["columnMapping"]
     return [tuple(x) for x in fields] if fields is not None else None
 
 
@@ -2824,20 +2824,47 @@ def drop_column(table_dir: str, name: str) -> dict:
     return _commit_mapping(table_dir, out)
 
 
+def _file_columns(table_dir: str, rels) -> set[str]:
+    """Column names in the parquet footers of the data entries
+    ``rels`` (a file, or a directory of part files)."""
+    import pyarrow.parquet as pq
+
+    cols: set[str] = set()
+    for rel in rels:
+        path = os.path.join(table_dir, rel)
+        parts = [path] if os.path.isfile(path) else [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(path)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        for part in parts:
+            cols.update(pq.read_schema(part).names)
+    return cols
+
+
 def add_column(table_dir: str, name: str, sql_type: str) -> dict:
     """ADD COLUMN — one metadata commit binding the logical name to a
     FRESH physical name (``<name>__p<version>``), so files written
     before the add surface it as NULL and a column dropped earlier
-    under the same logical name can never resurrect its old bytes."""
-    fields = column_mapping(table_dir)
+    under the same logical name can never resurrect its old bytes.
+    The version alone does not make the name fresh: a shallow clone
+    numbers its own log from 0 yet reads the source's files, whose
+    dropped columns may carry that very name. So the name must also
+    be absent from every live file's footer."""
+    state = _fold(table_dir)
+    fields = state.meta["columnMapping"]
     if fields is None:
         raise ValueError("table has no column mapping enabled")
     if any(logical == name for logical, _, _ in fields):
         raise ValueError(f"column {name!r} already exists")
     phys = f"{name}__p{latest_version(table_dir) + 1}"
-    used = {p for _, p, _ in fields}
-    while phys in used:  # paranoia: physical names are never reused
+    used = {p for _, p, _ in fields} | _file_columns(
+        table_dir, state.active
+    )
+    while phys in used:  # physical names are never reused
         phys += "_"
+    fields = [tuple(f) for f in fields]
     return _commit_mapping(table_dir, [*fields, (name, phys, sql_type)])
 
 
@@ -2888,16 +2915,12 @@ def read_snapshot_mapped(
     type, and physical columns outside the mapping (dropped ones)
     disappear. Version-accurate under time travel: each version
     reads under ITS OWN mapping."""
-    from pyspark.sql import functions as F
-
-    if version is None:
-        version = latest_version(table_dir)
-    fields = column_mapping(table_dir, version)
+    state = _fold(table_dir, version)
+    fields = state.meta["columnMapping"]
     if fields is None:
         raise ValueError("table has no column mapping enabled")
-    active = _replay(table_dir, version)[0]
-    _assert_no_dv(active, "read_snapshot_mapped")
-    files = [os.path.join(table_dir, r) for r in active]
+    _assert_no_dv(state.active, "read_snapshot_mapped")
+    files = [os.path.join(table_dir, r) for r in state.active]
     if not files:
         raise ValueError("empty snapshot")
     df = spark.read.option("mergeSchema", "true").parquet(*files)
@@ -2929,9 +2952,7 @@ def table_constraints(
 ) -> dict[str, str]:
     """Active constraints as of ``version``: name → SQL expression
     (constraint adds minus dropConstraint actions, in log order)."""
-    if version is None:
-        version = latest_version(table_dir)
-    return dict(_meta_state(table_dir, version)["constraints"])
+    return dict(_fold(table_dir, version).meta["constraints"])
 
 
 def _count_violations(df: DataFrame, constraints: dict[str, str]):
@@ -3106,8 +3127,9 @@ def restore_table(
         raise ValueError(
             f"restore target {to_version} outside log [0, {head}]"
         )
-    target = _replay(table_dir, to_version)[0]
-    current = _replay(table_dir, head)[0]
+    state_t = _fold(table_dir, to_version)
+    state_h = _fold(table_dir, head)
+    target, current = state_t.active, state_h.active
     re_add = {
         r: a for r, a in target.items() if r not in current
     }
@@ -3117,8 +3139,7 @@ def restore_table(
         for r, a in target.items()
         if r in current and current[r] != a
     }
-    meta_t = _meta_state(table_dir, to_version)
-    meta_h = _meta_state(table_dir, head)
+    meta_t, meta_h = state_t.meta, state_h.meta
     meta_actions: list[dict] = []
     for key, action_key in (
         ("columnMapping", "columnMapping"),
@@ -3292,15 +3313,10 @@ def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
     (marker actions first, then add/remove shape), so history needs
     no writer cooperation and is O(log) driver-side metadata — the
     Delta/Iceberg history and snapshots metadata-table shape."""
-    log = _log_dir(table_dir)
-    rows = []
-    for fname in sorted(os.listdir(log)):
-        if not fname.endswith(".json") or ".checkpoint." in fname:
-            continue
-        v = int(fname.split(".")[0])
-        with open(os.path.join(log, fname)) as f:
-            actions = json.load(f)
-        rows.append((v, *_classify_commit(actions)))
+    rows = [
+        (v, *_classify_commit(commit_actions(table_dir, v)))
+        for v in sorted(_versions(table_dir, ".json"))
+    ]
     return spark.createDataFrame(
         rows,
         "version int, operation string, n_add int, n_remove int, "
@@ -3547,19 +3563,7 @@ def gdpr_purge_change_records(
     # serve them (stats-only reads would report purged rows).
     n_staged = 0
     live = set(_replay(table_dir, latest_version(table_dir))[0])
-    staged_dir = os.path.join(_log_dir(table_dir), "_staged")
-    tags = (
-        sorted(f for f in os.listdir(staged_dir) if f.endswith(".json"))
-        if os.path.isdir(staged_dir)
-        else []
-    )
-    for tag_file in tags:
-        path = os.path.join(staged_dir, tag_file)
-        try:
-            with open(path) as fh:
-                entry = json.load(fh)
-        except (json.JSONDecodeError, UnicodeDecodeError):
-            continue  # pre-atomic crash debris, skipped everywhere
+    for path, entry in _staged_entries(table_dir).items():
         rewritten_rels: set[str] = set()
         for a in entry["actions"]:
             rel = a.get("add")

@@ -67,16 +67,3 @@ def salted_join(
     salted_r = right.select("*", salts)
     out = salted_l.join(salted_r, [*on, "__salt"], how)
     return out.drop("__salt")
-
-
-def top_frequencies(df: DataFrame, cols: list[str], n: int = 5) -> DataFrame:
-    """Key-skew diagnostic: the n heaviest key values and their share
-    of rows — the number you look at before choosing salt/broadcast."""
-    total = df.count()
-    return (
-        df.groupBy(*cols)
-        .count()
-        .orderBy(F.col("count").desc())
-        .limit(n)
-        .withColumn("share", F.col("count") / F.lit(total))
-    )

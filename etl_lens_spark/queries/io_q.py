@@ -868,8 +868,6 @@ def lake_log_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     walking the log (O(commits) driver-side metadata) plus one count
     per snapshot; the oracle pins both the log arithmetic and the
     snapshot contents."""
-    import json
-    import os
     import shutil
 
     from etl_lens_spark.operators import lakelog
@@ -886,8 +884,7 @@ def lake_log_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     lakelog.commit(base, 2, [{"remove": "fileB"}, {"add": "fileD"}])
     rows = []
     for v in range(lakelog.latest_version(base) + 1):
-        with open(os.path.join(base, "_log", f"{v:08d}.json")) as f:
-            actions = json.load(f)
+        actions = lakelog.commit_actions(base, v)
         n_adds = sum(1 for a in actions if "add" in a)
         n_removes = sum(1 for a in actions if "remove" in a)
         files = lakelog.snapshot_files(base, v)

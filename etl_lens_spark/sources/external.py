@@ -1,4 +1,5 @@
-"""External connector surface: JDBC and Kafka readers/writers
+"""External connector surface: JDBC readers/writers, Kafka JSON
+decode and keyed write
 (SURVEY §2.2 sources/sinks row — the analog of SQLite's loadable
 virtual-table sources, ``third_party/sqlite3/sqlite3.h:7586-7592``).
 
@@ -16,9 +17,6 @@ option plumbing, and scale posture are real:
 - JDBC pushdown: Catalyst pushes filters/projections into the remote
   query (``PushedFilters`` in the scan node) — filter EARLY on the
   DataFrame so the database does the scan, not Spark.
-- Kafka batch reads bound their offsets explicitly; streaming reads
-  carry watermarks downstream (see streaming/stream_ops.py for the
-  windowed operators they feed).
 - Kafka writes serialize to the (key, value) binary contract the
   broker expects; everything else rides in headers.
 """
@@ -103,53 +101,6 @@ def write_jdbc(
     for k, v in (properties or {}).items():
         writer = writer.option(k, v)
     writer.save()
-
-
-def read_kafka_batch(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    *,
-    starting_offsets: str = "earliest",
-    ending_offsets: str = "latest",
-) -> DataFrame:
-    """Bounded (batch) read of a Kafka topic: one row per record with
-    the standard (key, value, topic, partition, offset, timestamp)
-    columns; key/value arrive as binary — decode with
-    ``decode_kafka_json`` or your own schema."""
-    return (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .option("endingOffsets", ending_offsets)
-        .load()
-    )
-
-
-def read_kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    *,
-    starting_offsets: str = "latest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming read of a Kafka topic (feeds the Structured
-    Streaming operators in streaming/stream_ops.py).
-    ``max_offsets_per_trigger`` bounds micro-batch size — the back-
-    pressure knob that keeps replay-from-lag from OOMing executors."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option(
-            "maxOffsetsPerTrigger", str(max_offsets_per_trigger)
-        )
-    return reader.load()
 
 
 def decode_kafka_json(df: DataFrame, schema: str) -> DataFrame:

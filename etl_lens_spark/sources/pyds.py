@@ -330,8 +330,9 @@ class LakeLogStreamReader(DataSourceStreamReader):
         return {"version": self._pos}
 
     def partitions(self, start, end):
-        import json as _json
         import os as _os
+
+        from etl_lens_spark.operators import lakelog
 
         s, e = int(start["version"]), int(end["version"])
         # clamp the pacing cursor to observed progress: an
@@ -339,11 +340,7 @@ class LakeLogStreamReader(DataSourceStreamReader):
         self._pos = max(self._pos if self._pos is not None else -1, s, e)
         slices = []
         for v in range(s + 1, e + 1):
-            path = _os.path.join(
-                self.table_dir, "_log", f"{v:08d}.json"
-            )
-            with open(path) as f:
-                actions = _json.load(f)
+            actions = lakelog.commit_actions(self.table_dir, v)
             if actions and all(
                 a.get("data_change") is False
                 for a in actions

@@ -9,6 +9,18 @@ from etl_lens_spark import get_spark
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _named_nodeids(config) -> set[str]:
+    """Nodeids given as ``path::name`` arguments, rooted like
+    ``item.nodeid``."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            rel = os.path.relpath(os.path.abspath(path), config.rootpath)
+            named.add(rel.replace(os.sep, "/") + "::" + rest)
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
     """Two-tier suite (round-12 verdict item 7): the default run —
     what the driver's bounded-window ``pytest tests/ -x -q`` gate
@@ -28,6 +40,10 @@ def pytest_collection_modifyitems(config, items):
       (tools/oracle_check.py executes every query anyway); headline
       queries stay in the fast tier because the bench depends on
       them.
+
+    A test named on the command line (``path::name``, or a class or
+    parametrization under it) always runs: selecting it is the
+    request to run it.
     """
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
@@ -45,8 +61,14 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="slow tier — set SPARK_GRAFT_FULL_TESTS=1 to run"
     )
+    named = _named_nodeids(config)
     for item in items:
         nodeid = item.nodeid
+        if any(
+            nodeid == n or nodeid.startswith((n + "::", n + "["))
+            for n in named
+        ):
+            continue
         if "slow" in item.keywords or nodeid in slow_ids:
             item.add_marker(skip)
             continue

@@ -1081,6 +1081,11 @@ def test_checkpoint_carries_txn_high_water_marks(tmp_path):
     assert sorted(
         os.path.basename(p) for p in lakelog.snapshot_files(base)
     ) == ["a0", "a1", "b0", "b1"]
+    # orphan detection reads checkpoint + tail as well: the live
+    # files (put on disk here) stay referenced, debris does not
+    for rel in ("a0", "a1", "b0", "b1", "debris"):
+        os.makedirs(os.path.join(base, rel))
+    assert lakelog.find_orphans(base) == ["debris"]
     # a SECOND checkpoint consolidates checkpoint-first (its marks
     # merge the first checkpoint's with the tail — the deleted
     # pre-checkpoint commits are never needed again) and the merged
@@ -1674,6 +1679,126 @@ def test_metadata_consolidates_into_checkpoints(spark, tmp_path):
                                   "k long, v long, d date"),
             "s_bad",
         )
+
+
+def test_orphans_on_retired_log_keep_live_files_and_sidecars(
+    spark, tmp_path
+):
+    """find_orphans / remove_orphans on a log whose pre-checkpoint
+    commits were retired: the adds and DV sidecars of EVERY checkpoint
+    stay referenced — an older checkpoint still serves time travel to
+    its version, so a file removed after it must survive — and
+    cleanup removes only the never-committed debris."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "t")
+    spark.range(10).coalesce(1).write.parquet(f"{base}/s0")
+    spark.range(10, 15).coalesce(1).write.parquet(f"{base}/s1")
+    lakelog.commit(base, 0, [{"add": "s0"}])
+    lakelog.commit(base, 1, [{"add": "s1"}])
+    lakelog.delete_where_mor(spark, base, F.col("id") == 3)  # v2
+    ck1 = lakelog.write_checkpoint(base)["version"]
+    lakelog.commit(base, ck1 + 1, [{"remove": "s1"}])
+    ck2 = lakelog.write_checkpoint(base)["version"]
+    lakelog.commit(base, ck2 + 1, [])  # new head
+    for v in range(ck2 + 1):
+        os.remove(os.path.join(base, "_log", f"{v:08d}.json"))
+    spark.range(3).write.parquet(f"{base}/debris")
+    (sidecar,) = os.listdir(os.path.join(base, "_dv"))
+    assert lakelog.find_orphans(base) == ["debris"]
+    assert lakelog.remove_orphans(base)["removed"] == ["debris"]
+    assert sorted(os.listdir(base)) == ["_dv", "_log", "s0", "s1"]
+    assert os.listdir(os.path.join(base, "_dv")) == [sidecar]
+    assert sorted(
+        r.id for r in lakelog.read_snapshot(spark, base).collect()
+    ) == [i for i in range(10) if i != 3]
+    # time travel to the older checkpoint still reads the removed file
+    assert sorted(
+        r.id for r in lakelog.read_snapshot(spark, base, ck1).collect()
+    ) == [i for i in range(15) if i != 3]
+
+
+def test_shallow_clone_carries_table_metadata(spark, tmp_path):
+    """A shallow clone's v0 carries the source's folded metadata —
+    schema, column mapping, partition specs and constraints — so a
+    renamed column reads back under its logical name and the clone
+    refuses the rows the source's constraints refuse."""
+    base = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, 10), (2, 20)], "k long, v long"
+    ).coalesce(1).write.parquet(f"{base}/s0")
+    lakelog.commit(
+        base,
+        0,
+        [
+            {"add": "s0"},
+            {"metaData": {"fields": [["k", "long"], ["v", "long"]]}},
+            lakelog.mapping_action([("k", "k", "long"), ("v", "v", "long")]),
+            lakelog.spec_action(1, "k", "identity"),
+        ],
+    )
+    lakelog.add_constraint(spark, base, "v_pos", "v > 0")  # v1
+    lakelog.rename_column(base, "v", "value")  # v2
+    clone = str(tmp_path / "clone")
+    assert lakelog.shallow_clone(base, clone) == {
+        "n_files_referenced": 1,
+        "schema_cloned": True,
+    }
+    assert lakelog.column_mapping(clone) == lakelog.column_mapping(base)
+    assert ("value", "v", "long") in lakelog.column_mapping(clone)
+    assert lakelog.partition_specs(clone) == lakelog.partition_specs(base)
+    assert lakelog.partition_specs(clone)[1]["transform"] == "identity"
+    assert lakelog.table_constraints(clone) == {"v_pos": "v > 0"}
+    assert lakelog.table_constraints(clone) == lakelog.table_constraints(
+        base
+    )
+    assert lakelog.table_schema(clone) == lakelog.table_schema(base)
+
+    def rows(d):
+        return sorted(
+            tuple(r) for r in lakelog.read_snapshot_mapped(spark, d).collect()
+        )
+
+    assert lakelog.read_snapshot_mapped(spark, clone).columns == [
+        "k", "value"
+    ]
+    assert rows(clone) == rows(base) == [(1, 10), (2, 20)]
+    with pytest.raises(lakelog.ConstraintViolation):
+        lakelog.constrained_append(
+            spark,
+            clone,
+            spark.createDataFrame([(3, -1)], "k long, v long"),
+            "s_bad",
+        )
+
+
+def test_shallow_clone_re_added_column_reads_null(spark, tmp_path):
+    """Drop on the source, clone, then re-add the same logical name on
+    the clone: the clone's log restarts at version 0, so the
+    version-derived physical name would be the dropped column's — the
+    re-added column must still read NULL from the source's files,
+    never the dropped bytes."""
+    base = str(tmp_path / "src")
+    spark.createDataFrame([(1,), (2,)], "k long").coalesce(1).write.parquet(
+        f"{base}/s0"
+    )
+    lakelog.commit(
+        base, 0, [lakelog.mapping_action([("k", "k", "long")]), {"add": "s0"}]
+    )
+    dropped = lakelog.add_column(base, "x", "long")["fields"][-1][1]  # v1
+    spark.createDataFrame([(3, 7)], f"k long, {dropped} long").coalesce(
+        1
+    ).write.parquet(f"{base}/s1")
+    lakelog.commit(base, 2, [{"add": "s1"}])
+    lakelog.drop_column(base, "x")  # v3
+    clone = str(tmp_path / "clone")
+    lakelog.shallow_clone(base, clone)
+    lakelog.add_column(clone, "x", "long")
+    phys = dict((lg, ph) for lg, ph, _ in lakelog.column_mapping(clone))
+    assert phys["x"] != dropped
+    assert sorted(
+        tuple(r) for r in lakelog.read_snapshot_mapped(spark, clone).collect()
+    ) == [(1, None), (2, None), (3, None)]
 
 
 def test_apply_cdc_cdf_same_key_delete_and_upsert_nets_update(

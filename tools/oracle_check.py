@@ -21,10 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def canon_value(v):
     import datetime
@@ -94,7 +90,7 @@ def duck_type_to_spark(t: str) -> str:
 
 
 def main(names):
-    from etl_lens_spark import get_spark
+    from etl_lens_spark import TABLE_NAMES, get_spark
     from etl_lens_spark.queries import REGISTRY, _load
 
     json_out = None
@@ -110,7 +106,7 @@ def main(names):
     spark = get_spark(shuffle_partitions=8)
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
