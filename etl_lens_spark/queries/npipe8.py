@@ -129,7 +129,10 @@ def rank_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes that previously overlapped inside one job; this
     # formulation needs only this one O(docs)-wide pass, no barrier).
     # Identical algebra: a NULL-text doc contributed no toks rows,
-    # hence no dl row — the isNotNull filter reproduces that; explode
+    # hence no dl row — the text IS NOT NULL filter reproduces that
+    # (not dlen IS NOT NULL: size(NULL) is -1, not NULL, with
+    # spark.sql.ansi.enabled=false, which would count those docs with
+    # dlen -1 in n_docs/avgdl); explode
     # counted every split element including empty strings, as size
     # does; per-(doc, term) groups existed only where tf >= 1, hence
     # the tf > 0 filter after the stack unpivot.
@@ -140,14 +143,14 @@ def rank_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2-parameter lambda in F.filter as (element, index)
         return F.size(F.filter(words, lambda x: x == F.lit(term)))
 
-    per_doc = docs.select(
+    per_doc = docs.filter(F.col("text").isNotNull()).select(
         "doc_id",
         F.size(words).alias("dlen"),
         *[
             _tf_count(t).alias(f"__tf{i}")
             for i, t in enumerate(_RRF_TERMS)
         ],
-    ).filter(F.col("dlen").isNotNull())
+    )
     # O(docs) narrow rollup consumed by the corpus stats, the df
     # counts and the score join — stage it once (guide §5)
     per_doc = stage(per_doc, "rrf_per_doc")
@@ -1120,7 +1123,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest price — hash-exact cross-engine. 100 TB: the grouped
     (value, counts) table is the only corpus-sized shuffle; the
     prefix-sum operator's offsets join is O(P²) over partition
-    counts, measured in tools/probe_conf_tuning.py."""
+    counts, measured in the round-5 conf-tuning sweep (PLANS.md)."""
     from etl_lens_spark.operators.prefix import ordered_prefix_sums
 
     t = load_table(spark, sf_dir, "orders").select(

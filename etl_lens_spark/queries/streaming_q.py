@@ -1575,9 +1575,8 @@ def streaming_holt_winters_live(
     per-series-calendar oracle variant (a stream keyed by nation
     cannot see the GLOBAL max day the batch dense calendar uses; the
     oracle generator pads each series to its own last day instead)."""
-    cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .select("c_custkey", "c_nationkey")
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
     )
     src = (
         so.orders_stream(spark, sf_dir)
@@ -1600,7 +1599,7 @@ def streaming_holt_winters_live(
     from pyspark.sql import Window
 
     w = Window.partitionBy("nk")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
+    nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
     return (

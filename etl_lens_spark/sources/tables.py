@@ -6,14 +6,31 @@ source is columnar parquet read through the Spark DataSource V2 path,
 which gives us predicate pushdown, column pruning, and partition-level
 parallelism for free — the properties the reference's single-threaded
 scan lacks and that matter at 100 TB.
+
+Every table read goes through ``_read_parquet``, which memoizes the
+schema Spark infers from the parquet footers. Without it each
+``spark.read.parquet`` runs a one-task schema-inference job, and in an
+interactive session (a click, a SQL statement that registers all ten
+views) those jobs cost more than the query itself. What is memoized
+is the inferred ``StructType`` only, keyed by the realpath, the
+``(st_size, st_mtime_ns, st_ino)`` of the file (of every file under a
+directory) and the session values of the confs that change
+inference (``_INFERENCE_CONFS``): a rewritten file or a changed conf
+re-infers. A hit reads with ``spark.read.schema(memo)``, which runs
+no job. A path ``os.stat`` cannot reach (a non-local scheme) is
+read plainly. The DataFrame itself is never memoized: two reads
+must stay distinct Datasets, or a self-join of two ``load_table``
+results fails as ambiguous.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -38,9 +55,72 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# session confs that change the schema parquet inference yields
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# realpath -> (footer stamp, inferred schema); one entry per path. Two
+# threads missing at once both infer and store the same value.
+_FOOTER_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _footer_stamp(spark: SparkSession, real: str) -> tuple | None:
+    """What the inferred schema of ``real`` depends on, or None when
+    it cannot be stat'ed locally."""
+
+    def key(st: os.stat_result) -> tuple:
+        return st.st_size, st.st_mtime_ns, st.st_ino
+
+    try:
+        st = os.stat(real)
+        if stat.S_ISDIR(st.st_mode):
+            files = sorted(
+                os.path.join(d, f) for d, _, fs in os.walk(real) for f in fs
+            )
+            stats = tuple((f, key(os.stat(f))) for f in files)
+        else:
+            stats = key(st)
+    except OSError:
+        return None
+    return stats, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized
+    (see the module docstring): a fresh DataFrame every call, but no
+    schema-inference job while the footers and confs are unchanged."""
+    real = os.path.realpath(path)
+    stamp = _footer_stamp(spark, real)
+    if stamp is None:
+        return spark.read.parquet(path)
+    hit = _FOOTER_SCHEMAS.get(real)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _FOOTER_SCHEMAS[real] = (stamp, df.schema)
+    return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet at ``path``, from the
+    same memo as ``load_table`` (no Spark job on a hit)."""
+    return _read_parquet(spark, path).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. Plain ``spark.read.parquet`` — filters/projections
-    composed on top are pushed into the scan by Catalyst.
+    """Read one table as a fresh DataFrame. Filters/projections composed
+    on top are pushed into the scan by Catalyst.
+
+    The schema Spark infers from the footer is memoized per realpath,
+    footer stat and inference confs (module docstring), so a repeat
+    call on an unchanged file runs no Spark job. The DataFrame is not
+    memoized: a self-join of two results of this function (e.g.
+    ``nation`` twice) needs two distinct Datasets, and a shared one
+    fails with an ambiguous-reference AnalysisException.
 
     ``events.ts`` has shipped in two physical layouts across fixture
     generations — TIMESTAMP(NANOS) (no Spark type: read as raw ns via
@@ -57,7 +137,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # get_spark for sessions we build ourselves)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # integer div — a double division would lose precision on
@@ -67,7 +147,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # naive wall time == UTC instant under the pinned UTC tz
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -27,10 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# physical ts-type per sf_dir, probed once from the parquet footer —
-# repeated stream constructions (bench loops, full-registry oracle
-# runs) skip re-listing and re-reading footers for the same fixture
-_TS_TYPE_CACHE: dict = {}
+from etl_lens_spark.sources.tables import parquet_schema
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,21 +36,17 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The stream schema must be declared up front, and ``ts`` has
     shipped both as TIMESTAMP(NANOS) (→ raw ns LongType under
-    ``nanosAsLong``) and as plain µs-naive (→ TIMESTAMP_NTZ). A
-    one-row batch probe of the actual file picks the physical type —
-    force-declaring ``long`` over a µs file would silently misread
-    every timestamp (µs values interpreted as ns collapse the whole
-    stream into 1970). Normalized to utc-instant TimestampType
+    ``nanosAsLong``) and as plain µs-naive (→ TIMESTAMP_NTZ). The
+    file's footer schema (memoized by ``sources.tables``) picks the
+    physical type — force-declaring ``long`` over a µs file would
+    silently misread every timestamp (µs values interpreted as ns
+    collapse the whole stream into 1970). Normalized to utc-instant TimestampType
     exactly like sources.tables.load_table.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path = os.path.join(sf_dir, "events.parquet")
-    ts_type = _TS_TYPE_CACHE.get(table_path)
-    if ts_type is None:
-        # footer-only schema probe (no action runs); cached per path
-        ts_type = dict(spark.read.parquet(table_path).dtypes).get("ts")
-        _TS_TYPE_CACHE[table_path] = ts_type
+    ts_type = parquet_schema(spark, table_path)["ts"].dataType.simpleString()
     schema = (
         f"event_id long, ts {ts_type}, user_id long, event_type string, "
         "value double, props string"
@@ -1137,13 +1130,10 @@ def orders_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path = os.path.join(sf_dir, "orders.parquet")
-    key = (table_path, "o_orderdate")
-    od_type = _TS_TYPE_CACHE.get(key)
-    if od_type is None:
-        od_type = dict(spark.read.parquet(table_path).dtypes).get(
-            "o_orderdate"
-        )
-        _TS_TYPE_CACHE[key] = od_type
+    od_type = (
+        parquet_schema(spark, table_path)["o_orderdate"]
+        .dataType.simpleString()
+    )
     schema = (
         "o_orderkey long, o_custkey long, o_orderstatus string, "
         f"o_totalprice double, o_orderdate {od_type}, "

@@ -69,6 +69,59 @@ def test_rrf_query_top1_is_probe_neighbor(spark, sf_dir):
     assert scores == sorted(scores, reverse=True)
 
 
+def test_rrf_query_null_text_doc_is_ansi_neutral(spark, tmp_path):
+    """A NULL-text doc has no BM25 row in either ANSI mode. Without
+    ANSI, size(NULL) is -1 rather than NULL; had the doc kept that
+    dlen, avgdl would drop from 5 to 3.5 and the short doc 1 would
+    overtake doc 2 on the text side."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_lens_spark.queries import REGISTRY, all_queries
+
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([1, 2, 3, 4], pa.int64()),
+            "text": [
+                "spark",
+                "spark spark spark x y z",
+                "a b c d e f g h",
+                None,
+            ],
+        }),
+        tmp_path / "documents.parquet",
+    )
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([0, 1, 2, 3, 4], pa.int64()),
+            "embedding": pa.array(
+                [[1.0, 0.0], [0.2, 1.0], [0.9, 0.1], [0.5, 0.5],
+                 [0.0, 1.0]],
+                pa.list_(pa.float32()),
+            ),
+            "label": pa.array([0] * 5, pa.int32()),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    all_queries()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    got = {}
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            got[mode] = sorted(
+                tuple(r)
+                for r in REGISTRY["rank_rrf_fusion"]
+                .fn(spark, str(tmp_path))
+                .collect()
+            )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got["true"] == got["false"]
+    text_ranks = {r[0]: r[1] for r in got["false"] if r[1] is not None}
+    assert text_ranks == {2: 1, 1: 2}
+
+
 def test_doremi_reweight_trajectory_properties(spark, sf_dir):
     """EG reweighting contract: weights are a distribution each
     iteration, every domain keeps >= eps/D mass (smoothing), and the

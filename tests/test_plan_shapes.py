@@ -540,7 +540,11 @@ def test_staged_interior_plan_pin(spark, sf_dir, name):
 
     with staging.capture() as cap:
         REGISTRY[name].fn(spark, sf_dir)
+        labels = [label for label, _ in cap]
         frames = dict(cap)
+    assert len(frames) == len(labels), (
+        f"{name}: duplicate stage() labels in {labels}"
+    )
     pins = STAGED_INTERIOR_PINS[name]
     missing = set(pins) - set(frames)
     assert not missing, (

@@ -1,0 +1,115 @@
+"""load_table's footer-schema memo: a repeat read of an unchanged file
+runs no Spark job, a rewritten file re-infers, and every call still
+returns its own DataFrame."""
+
+import datetime as dt
+import functools
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from etl_lens_spark.sources.tables import load_table
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number
+    of Spark jobs the group saw."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(path, **cols):
+    pq.write_table(pa.table(cols), path)
+
+
+def _epoch_us(t):
+    return (t - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+
+
+def test_repeat_load_runs_no_spark_job(spark, tmp_path):
+    _write(tmp_path / "region.parquet", r_regionkey=[0, 1], r_name=["A", "B"])
+    load = functools.partial(load_table, spark, str(tmp_path), "region")
+    first, n_first = _jobs_in(spark, "tables-memo-first", load)
+    second, n_second = _jobs_in(spark, "tables-memo-second", load)
+    # the first read infers the schema with a job; the repeat does not
+    assert n_first >= 1
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_rewritten_file_shows_new_column(spark, tmp_path):
+    path = tmp_path / "region.parquet"
+    _write(path, r_regionkey=[0, 1], r_name=["A", "B"])
+    assert load_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey", "r_name",
+    ]
+    _write(path, r_regionkey=[0, 1], r_name=["A", "B"], r_extra=[7, 8])
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_extra"]
+    assert sorted(r.r_extra for r in df.collect()) == [7, 8]
+
+
+def test_rewritten_part_in_table_dir_shows_new_column(spark, tmp_path):
+    part = tmp_path / "region.parquet" / "part-0.parquet"
+    part.parent.mkdir()
+    _write(part, r_regionkey=[0, 1])
+    load = functools.partial(load_table, spark, str(tmp_path), "region")
+    assert load().columns == ["r_regionkey"]
+    _, n_jobs = _jobs_in(spark, "tables-memo-dir", load)
+    assert n_jobs == 0
+    _write(part, r_regionkey=[0, 1], r_extra=[7, 8])
+    assert load().columns == ["r_regionkey", "r_extra"]
+
+
+def test_two_loads_self_join(spark, sf_dir):
+    a = load_table(spark, sf_dir, "nation")
+    b = load_table(spark, sf_dir, "nation")
+    assert a is not b
+    rows = (
+        a.join(b, a["n_nationkey"] == b["n_regionkey"])
+        .select(a["n_nationkey"], b["n_name"])
+        .collect()
+    )
+    nation = pq.read_table(f"{sf_dir}/nation.parquet").to_pylist()
+    keys = {n["n_nationkey"] for n in nation}
+    want = sorted(
+        (n["n_regionkey"], n["n_name"])
+        for n in nation
+        if n["n_regionkey"] in keys
+    )
+    assert sorted(tuple(r) for r in rows) == want
+
+
+def test_events_ts_ns_and_us_layouts_load_alike(spark, tmp_path):
+    base = dt.datetime(2024, 3, 1, 12, 0, 0)
+    us = [base + dt.timedelta(microseconds=k * 1_000_003) for k in range(5)]
+    # the ns layout carries a sub-µs remainder that the load floors away
+    ns = pa.array(
+        [_epoch_us(t) * 1000 + 999 for t in us],
+        pa.timestamp("ns"),
+    )
+    layouts = {"ns": ns, "us": pa.array(us, pa.timestamp("us"))}
+    got = {}
+    for unit, ts in layouts.items():
+        d = tmp_path / unit
+        d.mkdir()
+        _write(d / "events.parquet", event_id=list(range(5)), ts=ts)
+        for call in ("first", "second"):
+            df = load_table(spark, str(d), "events")
+            assert dict(df.dtypes)["ts"] == "timestamp", (unit, call)
+            got[unit, call] = sorted(
+                (r.event_id, r.ts_us)
+                for r in df.selectExpr(
+                    "event_id", "unix_micros(ts) AS ts_us"
+                ).collect()
+            )
+    want = sorted((i, _epoch_us(t)) for i, t in enumerate(us))
+    assert all(v == want for v in got.values()), got
