@@ -15,7 +15,7 @@ graph via iterative min-label propagation — each iteration is one
 shuffle (join on edge endpoints + min-aggregate), converging in
 O(diameter) ≤ O(log n) iterations for near-dup clusters (which are
 small and dense). Lineage is truncated per iteration with
-``localCheckpoint`` so the plan doesn't grow unboundedly — the classic
+``freeze`` so the plan doesn't grow unboundedly — the classic
 Spark iterative-algorithm discipline. No driver-side collect except
 the O(1) convergence check.
 
@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze, stage
 from etl_lens_spark.similarity.knn import (
     _as_double,
     _srp_bits,
@@ -161,14 +162,14 @@ def connected_components(
     """
     from etl_lens_spark.operators.fixpoint import CHANGED_COL, iterate_fixpoint
 
-    edges = edges.localCheckpoint(eager=True)
+    edges = stage(edges, "cc_edges")
     sym = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionByName(
             edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
         )
         .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=True)
+        .transform(freeze, "bounded loop lineage")
     )
 
     labels0 = nodes.select(F.col("node"), F.col("node").alias("component"))

@@ -4,13 +4,13 @@ recursive CTEs via its parser, ``third_party/sqlite3/sqlite3.h``
 window/CTE surface).
 
 Spark has no recursive-plan node, so recursion becomes driver-side
-iteration over checkpointed DataFrames. Two shapes cover the SQL
-semantics:
+iteration over frozen DataFrames (``staging.freeze``). Two shapes
+cover the SQL semantics:
 
 - ``iterate_fixpoint``: recursion as repeated WHOLE-STATE
   transformation (label propagation, PageRank-style updates). The
   step emits a ``__changed`` flag column; the loop truncates lineage
-  per iteration (``localCheckpoint``) and does an O(1) driver check —
+  per iteration (``freeze``) and does an O(1) driver check —
   never a data collect. The connected-components operator
   (dedup/embedding.py) is this loop with a two-join step.
 
@@ -31,6 +31,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze
+
 CHANGED_COL = "__changed"
 
 
@@ -43,14 +45,14 @@ def iterate_fixpoint(
 
     ``step`` takes the current state and returns the next state with
     one extra boolean column ``__changed`` (per-row change flag; any
-    true row keeps iterating). State is ``localCheckpoint``-ed every
-    iteration so lineage stays O(1) deep, and the convergence check is
+    true row keeps iterating). State is frozen every iteration so
+    lineage stays O(1) deep, and the convergence check is
     a ``limit(1).count()`` — O(1) rows to the driver regardless of
     state size.
     """
-    state = initial.localCheckpoint(eager=True)
+    state = freeze(initial, "bounded loop lineage")
     for _ in range(max_iter):
-        nxt = step(state).localCheckpoint(eager=True)
+        nxt = freeze(step(state), "bounded loop lineage")
         changed = nxt.filter(F.col(CHANGED_COL)).limit(1).count()
         state = nxt.drop(CHANGED_COL)
         if changed == 0:
@@ -73,17 +75,17 @@ def recursive_closure(
     Raises if ``max_iter`` rounds don't converge (a recursion depth
     guard, like the engines' own).
     """
-    acc = base.distinct().localCheckpoint(eager=True)
+    acc = freeze(base.distinct(), "bounded loop lineage")
     frontier = acc
     for _ in range(max_iter):
         new = (
             expand(frontier)
             .subtract(acc)  # EXCEPT DISTINCT: dedup + already-known
-            .localCheckpoint(eager=True)
+            .transform(freeze, "bounded loop lineage")
         )
         if new.limit(1).count() == 0:
             return acc
-        acc = acc.unionByName(new).localCheckpoint(eager=True)
+        acc = freeze(acc.unionByName(new), "bounded loop lineage")
         frontier = new
     raise RuntimeError(
         f"recursive_closure did not converge in {max_iter} iterations"

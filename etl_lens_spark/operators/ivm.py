@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze
+
 __all__ = [
     "changes_to_zset",
     "consolidate",
@@ -189,8 +191,8 @@ def maintain_distinct(
         F.col("__dw"), zero
     )
     # Round-9 review fix: the underflow guard rides INSIDE the count
-    # column (raise_error fires during the same localCheckpoint job
-    # that materializes the merge) instead of a second eager
+    # column (raise_error fires during the freeze() job that
+    # materializes the merge) instead of a second eager
     # .filter().count() job — at streaming rates that was one extra
     # job per epoch for a check the materialization can carry.
     guarded = F.when(
@@ -209,7 +211,7 @@ def maintain_distinct(
     try:
         # materialize once: without this the full-outer merge (plus
         # its CDF lineage) would recompute on every downstream action
-        merged = plan.localCheckpoint()
+        merged = freeze(plan, "raise fires in the try")
     except Exception as exc:  # translate the in-plan raise back
         if "distinct-support underflow" in str(exc):
             raise ValueError(

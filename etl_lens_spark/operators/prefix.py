@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze
+
 _PID = "__prefix_pid"
 _LOCAL = "__prefix_local"
 _OFF = "__prefix_off"
@@ -48,11 +50,10 @@ def ordered_prefix_sums(
     broadcast — a two-column ECDF costs the same shuffle as a
     one-column running total.
 
-    The frame is materialized once (lazy ``localCheckpoint``) after
-    the range exchange so the totals pass and the main pass read the
-    SAME partition assignment — two independent recomputations could
-    otherwise be re-planned (AQE) into different pid spaces and
-    corrupt the offsets.
+    The frame is frozen once after the range exchange so the totals
+    pass and the main pass read the SAME partition assignment — two
+    independent recomputations could otherwise be re-planned (AQE)
+    into different pid spaces and corrupt the offsets.
     """
     spark = df.sparkSession
     n = num_partitions or int(
@@ -61,7 +62,7 @@ def ordered_prefix_sums(
     d = (
         df.repartitionByRange(n, *order_by)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(freeze, "pins spark_partition_id")
     )
     w_local = (
         Window.partitionBy(_PID)
@@ -143,7 +144,7 @@ def ordered_global_rank(
     d = (
         df.repartitionByRange(n, *order_by)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(freeze, "pins spark_partition_id")
     )
     w_local = Window.partitionBy(_PID).orderBy(*order_by)
     local = d.withColumn(_LOCAL, F.row_number().over(w_local))
@@ -191,7 +192,7 @@ def ordered_prefix_max(
     d = (
         df.repartitionByRange(n, *order_by)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(freeze, "pins spark_partition_id")
     )
     end = 0 if inclusive else -1
     w_local = (

@@ -1,36 +1,30 @@
-"""Staged-lineage materialization, behind one switchable helper.
+"""Every materialization in the engine, under one of two intents.
 
-Round 11 cut multiply-referenced lineages (a frame consumed by 2-4
-downstream branches re-executes its whole lineage per consumer, and
-AQE's broadcast promotion defeats ReusedExchange on self-joins) by
-inserting ``localCheckpoint(eager=False)`` at the natural
-materialization points. Two review findings against that (ADVICE
-r11):
+``stage(df, label)`` is for SPEED: a frame with two or more consumers
+(a self-join, a count plus a join, a loop input) is computed once
+instead of once per consumer. Results never depend on it, and the
+mode comes from session conf, ``spark.etl_lens.stage.mode``:
+  - ``localCheckpoint`` (default): lazy, non-replicated executor-local
+    blocks — cheapest, but an executor loss on a cluster kills the job;
+  - ``persist``: MEMORY_AND_DISK, lineage kept, so a lost executor
+    recomputes. The frames stay in the session's cache manager until
+    the session ends (a lazily returned plan can never unpersist
+    them), so this mode is for one-shot runs;
+  - ``none``: pass-through; every consumer recomputes.
+A frame with ONE consumer is not staged: that saves no recomputation.
 
-- ``localCheckpoint`` stores non-replicated executor-local blocks:
-  on a real cluster an executor loss makes the job unrecoverable
-  (unsafe with dynamic allocation), so deployments need an opt-out;
-- truncating the plan at the checkpoint blinded the plan-shape pins
-  to everything upstream of it.
+``freeze(df, reason)`` is for CORRECTNESS: it ignores the mode and
+checkpoints eagerly, so the frame is computed exactly once, now. Use
+it to truncate an iterative loop's lineage, pin a non-deterministic
+column (``spark_partition_id``), fire an in-plan ``raise_error``
+inside the ``try`` that translates it, pin a view later DML must not
+leak into, keep memory-sink / ``foreachBatch`` frames alive past
+their table or batch, and keep ``@bench_setup`` work out of the timed
+region. ``reason`` names the invariant at the call site.
 
-``stage()`` answers both. The materialization mode is read from
-session conf so a cluster deployment can pick its safety/cost point
-without touching query code:
-
-``spark.etl_lens.stage.mode``:
-  - ``localCheckpoint`` (default): cheapest, right for local/driver
-    bench runs and for ephemeral O(delta)/O(groups) rollups;
-  - ``persist``: MEMORY_AND_DISK cache, lineage kept — an executor
-    loss recomputes instead of killing the job (the cluster-safe
-    choice; frames stay pinned until GC or unpersist, same as any
-    cache);
-  - ``none``: pass-through (correctness is unaffected by staging —
-    every consumer just recomputes the lineage).
-
-Plan-pin support: tests flip ``capture()`` on and every ``stage()``
-call records the *pre-materialization* DataFrame with its label, so
-the interior plan shape (exchanges, join strategies upstream of the
-truncation point) stays assertable (VERDICT r11 item 10).
+``capture()`` records every ``stage()``'d frame before
+materialization, so tests can pin the interior plan shape upstream
+of the truncation point.
 """
 
 from __future__ import annotations
@@ -48,12 +42,9 @@ _capture_on = False
 
 
 def stage(df: DataFrame, label: str = "") -> DataFrame:
-    """Materialize a multiply-consumed frame once (guide §5).
-
-    Callers pass O(groups)/O(delta)-bounded rollups — never the raw
-    corpus (corpus-sized frames use an explicit ``persist``; see
-    text/pipeline.py::segment_dedup).
-    """
+    """Materialize a multiply-consumed frame once, per the session's
+    stage mode. Corpus-sized frames use an explicit, managed
+    ``persist`` instead (see text/pipeline.py::segment_dedup)."""
     if _capture_on:
         _captured.append((label, df))
     mode = df.sparkSession.conf.get(_MODE_CONF, "localCheckpoint")
@@ -62,6 +53,13 @@ def stage(df: DataFrame, label: str = "") -> DataFrame:
     if mode == "persist":
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=False)
+
+
+def freeze(df: DataFrame, reason: str) -> DataFrame:
+    """Compute ``df`` exactly once, now, whatever the stage mode —
+    for a frame whose recomputation would be wrong, not just slow.
+    ``reason`` names the invariant the pin keeps."""
+    return df.localCheckpoint(eager=True)
 
 
 @contextmanager

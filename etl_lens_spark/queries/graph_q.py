@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from etl_lens_spark.dedup import embedding as emb_dedup
 from etl_lens_spark.operators.partitioning import parallelize_compute
+from etl_lens_spark.operators.staging import freeze, stage
 from etl_lens_spark.queries import query
 from etl_lens_spark.sources.tables import load_table
 
@@ -223,7 +224,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedges = (
         edges.join(outdeg, "src")
         .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("w"))
-        .localCheckpoint(eager=True)
+        .transform(stage, "wedges")
     )
     nodes = wedges.select(F.col("src").alias("node")).distinct()
     n_nodes = nodes.count()
@@ -304,7 +305,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.l_partkey").alias("s1"), F.col("b.l_partkey").alias("s2")
         )
         .distinct()
-        .localCheckpoint(eager=True)  # edges materialize once, 3 reuses
+        .transform(stage, "triangle_edges")  # 3 reuses
     )
     deg = (
         e.select(F.col("s1").alias("v"))
@@ -382,7 +383,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = base.unionAll(
         base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    ).transform(stage, "edges")
     spark_ = edges.sparkSession
     seen = spark_.createDataFrame([("s0", 0)], "node string, hops int")
     frontier = seen
@@ -393,11 +394,11 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .join(seen.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(d + 1))
-            .localCheckpoint(eager=True)
+            .transform(freeze, "bounded loop lineage")
         )
         if nxt.limit(1).count() == 0:
             break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
+        seen = freeze(seen.unionByName(nxt), "bounded loop lineage")
         frontier = nxt
     return seen.select(
         "node", F.col("hops").cast("long").alias("hops")
@@ -632,7 +633,7 @@ def graph_shortest_path_weighted(
         .select(
             "src", "dst", (F.lit(1) + F.col("cnt") % 7).alias("w")
         )
-        .localCheckpoint(eager=True)
+        .transform(stage, "edges")
     )
     dist = spark.createDataFrame([(0, 0)], "node long, dist long")
     for _ in range(4):
@@ -644,7 +645,7 @@ def graph_shortest_path_weighted(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+            .transform(freeze, "bounded loop lineage")
         )
     return dist.select(
         "node", F.col("dist").cast("long").alias("dist")
@@ -775,7 +776,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree < k until the remainder is stable; what survives is the
     maximal subgraph where EVERYONE keeps ≥ k connections. Spark
     runs the peel as a degree-aggregate + semi-join fixpoint loop
-    (lineage truncated per round with localCheckpoint, O(1) driver
+    (lineage truncated per round with freeze(), O(1) driver
     convergence check — the connected-components discipline); the
     oracle is the same peel UNROLLED past the measured convergence
     depth (2 rounds at sf0.01, 4 at sf0.1; extra rounds idempotent),
@@ -789,7 +790,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") + 1000000).alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(stage, "kcore_edges")
     )
     k = 3
     while True:
@@ -805,7 +806,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.join(deg.withColumnRenamed("n", "u"), "u", "leftsemi")
             .join(deg.withColumnRenamed("n", "v"), "v", "leftsemi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
+            .transform(freeze, "bounded loop lineage")
         )
         if e2.count() == e.count():
             break
@@ -892,7 +893,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ed = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    ).transform(stage, "ed")
     labels = ed.select(F.col("u").alias("n")).distinct().select(
         "n", F.col("n").alias("lbl")
     )
@@ -906,7 +907,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("lbl", F.struct(F.col("cnt"), (-F.col("lbl")))).alias(
                 "lbl"
             )
-        ).localCheckpoint(eager=True)
+        ).transform(freeze, "bounded loop lineage")
     return labels.select("n", F.col("lbl").alias("community")).orderBy("n")
 
 
@@ -1295,7 +1296,7 @@ def graph_ktruss_decomposition(
     Spark runs the peel as a triangle-join + support-aggregate +
     semi-join fixpoint: edges oriented u < v so each triangle is
     enumerated once, each triangle credits its three edges via one
-    explode-free union, every round localCheckpoints the shrinking
+    explode-free union, every round freezes the shrinking
     edge set (the k-core/fixpoint discipline — lineage stays O(1),
     convergence is an O(1) driver count). The oracle is the same
     peel UNROLLED past measured convergence depth (3 rounds at both
@@ -1323,7 +1324,7 @@ def graph_ktruss_decomposition(
             F.col("b.l_partkey").alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(stage, "ktruss_edges")
     )
 
     def support(edges: DataFrame) -> DataFrame:
@@ -1359,7 +1360,7 @@ def graph_ktruss_decomposition(
                 ["u", "v"],
                 "left_semi",
             )
-            .localCheckpoint(eager=True)
+            .transform(freeze, "bounded loop lineage")
         )
         m = kept.count()
         if m == n:

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from etl_lens_spark.operators.kmv import SCALE as _MD5_SCALE
 from etl_lens_spark.operators.kmv import kmv_value
 from etl_lens_spark.operators.prefix import ordered_prefix_sum
+from etl_lens_spark.operators.staging import stage
 from etl_lens_spark.queries import query
 from etl_lens_spark.sources.tables import load_table
 
@@ -3805,7 +3806,7 @@ def events_markov_stationary(
             F.col("c").cast("double")
             / F.sum(F.col("c").cast("double")).over(ws)
         ).alias("p"),
-    ).localCheckpoint(eager=True)
+    ).transform(stage, "markov_transitions")
     states = p.select("s").distinct()
     n_states = states.count()
     pi = states.select("s", F.lit(1.0 / n_states).alias("v"))

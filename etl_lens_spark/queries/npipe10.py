@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from etl_lens_spark.queries import bench_setup, query
 from etl_lens_spark.sources import sinks
 from etl_lens_spark.sources.tables import load_table
-from etl_lens_spark.operators.staging import stage
+from etl_lens_spark.operators.staging import freeze, stage
 
 # ---------------------------------------------------------------------------
 # CDF per commit: the canonical four-commit lake fixture
@@ -243,7 +243,9 @@ def streaming_lake_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("schema_ddl", "k long, price_cents long")
         .load()
     )
-    streamed = so.run_to_memory(stream, "q_stream_cdf").localCheckpoint()
+    streamed = freeze(
+        so.run_to_memory(stream, "q_stream_cdf"), "outlives the sink"
+    )
 
     # read-path audit: streamed rows ≡ batch table_changes rows as a
     # MULTISET (±1 tag + one grouped sum — one shuffle, no exceptAll
@@ -274,7 +276,7 @@ def streaming_lake_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dim = scd2_apply_changes(
             dim, feed, ["k"], ["price_cents"], (v + 1) * 1000
-        ).localCheckpoint()
+        ).transform(freeze, "bounded loop lineage")
 
     out = (
         dim.groupBy((F.col("k") % 20).cast("int").alias("key_mod"))
@@ -447,7 +449,7 @@ def sim_ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Sweep discipline (the 100 TB posture): ALL max-L bucket columns
     are hashed onto the corpus in ONE pass
-    (knn.srp_multitable_index) and localCheckpointed once — at scale
+    (knn.srp_multitable_index) and staged once — at scale
     the corpus shuffle is the whole cost, and the L-axis sweep
     re-probes only the 20-query side; candidate sets are
     PREFIX-UNIONS (tables 0..L−1), so recall and candidates are
@@ -477,27 +479,25 @@ def sim_ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     from etl_lens_spark.similarity.knn import norm
 
-    # hashed ONCE for every table and every L, norms materialized
-    # into the checkpoint (multitable_candidates reuses a present
-    # __cnorm instead of recomputing it per sweep action)
+    # hashed ONCE for every table and L, norms staged with it
+    # (multitable_candidates reuses a present __cnorm)
     index = (
         knn.srp_multitable_index(emb, planes)
         .withColumn("__cnorm", norm(F.col("embedding")))
-        .localCheckpoint()
+        .transform(stage, "index")
     )
 
     out_rows = []
     denom = len(truth)
     for n_tables in _MT_TABLES:
-        # scored once per L: the count (the sweep's honest scan
-        # cost) and the ranking ride the SAME checkpointed frame
+        # scored once per L: the count and the ranking share it
         scored = knn.multitable_candidates(
             index,
             queries_df,
             planes,
             probes=_MT_PROBES,
             n_tables=n_tables,
-        ).localCheckpoint()
+        ).transform(stage, "scored")
         # ranking delegates to the SAME function the maintained-index
         # path serves with — the anti-drift claim covers ranking too
         top = knn.multitable_probe_topk(
@@ -770,7 +770,7 @@ def streaming_lake_cdf_exactly_once(
 
     def sink(batch_df, epoch_id):
         res = _apply_batch(
-            batch_df.localCheckpoint(), int(epoch_id)
+            freeze(batch_df, "outlives its batch"), int(epoch_id)
         )
         if res is not None:
             sink_log.append({"epoch": int(epoch_id), **res})
@@ -1289,7 +1289,7 @@ def warehouse_ivm_join_view(
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.sum("cents").cast("long").alias("cents_sum"),
         )
-        .localCheckpoint()  # materialized: later DML must not leak in
+        .transform(freeze, "later DML must not leak in")
     )
 
     # maintenance: the view sees ONLY the change feeds
@@ -1364,7 +1364,9 @@ def streaming_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("schema_ddl", ddl)
             .load()
         )
-        return so.run_to_memory(stream, name).localCheckpoint()
+        return so.run_to_memory(stream, name).transform(
+            freeze, "outlives the sink"
+        )
 
     so_feed = tail(ot, "k long, custkey long, cents long", "q_sivm_o")
     sc_feed = tail(ct, "custkey long, nk int", "q_sivm_c")
@@ -1378,7 +1380,6 @@ def streaming_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.sum("cents").cast("long").alias("cents_sum"),
         )
-        .localCheckpoint()
     )
 
     # one maintenance step per commit epoch, in true commit order
@@ -1392,7 +1393,7 @@ def streaming_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta = F.broadcast(dz).join(c0, ["custkey"])
         view = ivm.maintain_agg(
             view, delta, ["nk"], "n_orders", {"cents_sum": F.col("cents")}
-        ).localCheckpoint()
+        )
     dzc = ivm.consolidate(
         ivm.changes_to_zset(
             sc_feed.filter(F.col("_commit_version") == 1),
@@ -1403,7 +1404,7 @@ def streaming_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = o_head.join(F.broadcast(dzc), ["custkey"])
     view = ivm.maintain_agg(
         view, delta, ["nk"], "n_orders", {"cents_sum": F.col("cents")}
-    ).localCheckpoint()
+    ).transform(stage, "view")
 
     recompute = (
         o_head.join(lakelog.read_snapshot(spark, ct), "custkey")
@@ -1556,7 +1557,7 @@ def _bench_ivm_join_view(spark: SparkSession, sf_dir: str):
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.sum("cents").cast("long").alias("cents_sum"),
         )
-        .localCheckpoint()
+        .transform(freeze, "untimed bench setup")
     )
 
     def answer() -> DataFrame:
@@ -1690,7 +1691,7 @@ def warehouse_ivm_three_table(
 
     # level 1: Δ(L⋈O); level 2: feed it as the R-delta of (L⋈O)⋈C
     r1_old = l0.join(o0, "okey")
-    d_r1 = ivm.delta_join(l0, dz_l, o0, dz_o, ["okey"]).localCheckpoint()
+    d_r1 = stage(ivm.delta_join(l0, dz_l, o0, dz_o, ["okey"]), "d_r1")
     d_view = ivm.delta_join(r1_old, d_r1, c0, dz_c, ["custkey"])
 
     view0 = (
@@ -1700,7 +1701,6 @@ def warehouse_ivm_three_table(
             F.count(F.lit(1)).cast("long").alias("n_lines"),
             F.sum("price_cents").cast("long").alias("cents_sum"),
         )
-        .localCheckpoint()
     )
     maintained = ivm.maintain_agg(
         view0, d_view, ["nk"], "n_lines", {"cents_sum": F.col("price_cents")}
@@ -1804,7 +1804,6 @@ def warehouse_ivm_distinct_view(
         o0.select(bucket, "custkey")
         .groupBy("bucket", "custkey")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
     )
     dz = ivm.consolidate(
         ivm.changes_to_zset(
@@ -1902,7 +1901,7 @@ def warehouse_ivm_minmax_view(
         o0.select(bucket, "cents")
         .groupBy("bucket", "cents")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
+        .transform(stage, "support0")
     )
     view0 = support0.groupBy("bucket").agg(
         F.min("cents").alias("vmin"),
@@ -1916,7 +1915,7 @@ def warehouse_ivm_minmax_view(
             ),
             ["bucket", "cents"],
         )
-    ).localCheckpoint()
+    ).transform(stage, "dz")
     support1 = ivm.maintain_distinct(support0, dz, ["bucket"], "cents")
     touched = dz.select("bucket").distinct()
     maintained = ivm.maintain_minmax(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze, stage
 from etl_lens_spark.queries import bench_setup, query
 from etl_lens_spark.sources import sinks
 from etl_lens_spark.sources.tables import load_table
@@ -305,7 +306,9 @@ def warehouse_ivm_restartable(
         return lakelog.commit_idempotent(vt, app_id, epoch, actions)
 
     def sink(batch_df, epoch_id):
-        res = _refresh(batch_df.localCheckpoint(), int(epoch_id))
+        res = _refresh(
+            freeze(batch_df, "outlives its batch"), int(epoch_id)
+        )
         sink_log.append({"epoch": int(epoch_id), **res})
         if int(epoch_id) == 0 and crash["armed"]:
             crash["armed"] = False
@@ -544,9 +547,11 @@ class _LshLiveState:
     def apply_inserts(self, ins: DataFrame) -> None:
         from etl_lens_spark.dedup.minhash import merge_support
 
-        delta_banded = _lsh_banded(ins).localCheckpoint()
+        delta_banded = freeze(_lsh_banded(ins), "outlives its batch")
         deltas = _lsh_insert_deltas(delta_banded, self.index_view())
-        self.pairs = merge_support(self.pairs, deltas).localCheckpoint()
+        self.pairs = freeze(
+            merge_support(self.pairs, deltas), "outlives its batch"
+        )
         self.idx.append(delta_banded)
 
     def apply_deletes(self, gone_rows: DataFrame) -> None:
@@ -558,7 +563,7 @@ class _LshLiveState:
         gone = (
             gone_rows.select(F.col("doc_id").alias("__gone"))
             .distinct()
-            .localCheckpoint()
+            .transform(freeze, "outlives its batch")
         )
         regrants = _lsh_delete_deltas(_lsh_banded(gone_rows), pre, gone)
         dropped = (
@@ -566,7 +571,9 @@ class _LshLiveState:
             if self.pairs is not None
             else None
         )
-        self.pairs = merge_support(dropped, regrants).localCheckpoint()
+        self.pairs = freeze(
+            merge_support(dropped, regrants), "outlives its batch"
+        )
         self.idx.delete(gone)
 
 
@@ -650,12 +657,12 @@ def dedup_incremental_lsh_cdf(
     # --- seed: index + pair-support state over the v0 corpus
     seed_banded = _lsh_banded(
         lakelog.read_snapshot(spark, dt, 0)
-    ).localCheckpoint()
+    ).transform(stage, "seed_banded")
     seed_banded.write.parquet(f"{bt}/s0")
     lakelog.commit(bt, 0, [{"add": "s0"}])
     pairs = merge_support(
         None, _lsh_insert_deltas(seed_banded)
-    ).localCheckpoint()
+    ).transform(stage, "pairs")
 
     # --- v1 inserts: probe the index, then append to it
     ins = (
@@ -663,11 +670,11 @@ def dedup_incremental_lsh_cdf(
         .filter(F.col("_change_type") == "insert")
         .select("doc_id", "text")
     )
-    delta_banded = _lsh_banded(ins).localCheckpoint()
+    delta_banded = stage(_lsh_banded(ins), "delta_banded")
     index0 = spark.read.parquet(*lakelog.snapshot_files(bt, 0))
     pairs = merge_support(
         pairs, _lsh_insert_deltas(delta_banded, index0)
-    ).localCheckpoint()
+    ).transform(stage, "pairs_2")
     delta_banded.write.parquet(f"{bt}/s1")
     lakelog.commit(bt, 1, [{"add": "s1"}])
 
@@ -680,33 +687,32 @@ def dedup_incremental_lsh_cdf(
         lakelog.table_changes(spark, dt, 1, 2)
         .filter(F.col("_change_type") == "delete")
         .select("doc_id", "text")
-        .localCheckpoint()
+        .transform(stage, "del_rows")
     )
     dels = (
         del_rows.select(F.col("doc_id").alias("__gone"))
         .distinct()
-        .localCheckpoint()
+        .transform(stage, "dels")
     )
     gone_banded = _lsh_banded(del_rows)
     pre_index = lakelog.read_snapshot(spark, bt)
     regrants = _lsh_delete_deltas(gone_banded, pre_index, dels)
     pairs = merge_support(
         _lsh_drop_pairs(pairs, dels), regrants
-    ).localCheckpoint()
+    ).transform(stage, "pairs_3")
     lakelog.rewrite_minus_ids(spark, bt, dels, "__id")
 
     # --- proof: from-scratch GUARDED LSH over the head snapshot
-    # (read ONCE; the count rides the same checkpointed frame —
-    # review fix). guard_banded is the identical rule the
-    # maintenance applied, so the equality pin now covers the skew
-    # guard on BOTH sides.
-    head_docs = lakelog.read_snapshot(spark, dt).localCheckpoint()
+    # (read ONCE, staged for the count too). guard_banded is the
+    # maintenance's own rule, so the pin covers the skew guard on
+    # BOTH sides.
+    head_docs = stage(lakelog.read_snapshot(spark, dt), "head_docs")
     scratch = pairs_from_bands(
         guard_banded(
-            _lsh_banded(head_docs).localCheckpoint(), _LSH_MAX_BUCKET
+            stage(_lsh_banded(head_docs), "head_banded"), _LSH_MAX_BUCKET
         ),
         min_est_jaccard=_LSH_THETA,
-    ).localCheckpoint()
+    ).transform(stage, "scratch")
     key = ["doc_a", "doc_b"]
     missing = scratch.join(pairs, key, "left_anti").count()
     extra = pairs.join(scratch, key, "left_anti").count()
@@ -747,26 +753,26 @@ def _bench_dedup_incremental(spark: SparkSession, sf_dir: str):
     dt = _lsh_dedup_build(spark, sf_dir, "ilsh_bench_docs")
     seed_banded = _lsh_banded(
         lakelog.read_snapshot(spark, dt, 0)
-    ).localCheckpoint()
+    ).transform(freeze, "untimed bench setup")
     seed_pairs = merge_support(
         None, _lsh_insert_deltas(seed_banded)
-    ).localCheckpoint()
+    ).transform(freeze, "untimed bench setup")
     ins = (
         lakelog.table_changes(spark, dt, 0, 1)
         .filter(F.col("_change_type") == "insert")
         .select("doc_id", "text")
-        .localCheckpoint()
+        .transform(freeze, "untimed bench setup")
     )
     del_rows = (
         lakelog.table_changes(spark, dt, 1, 2)
         .filter(F.col("_change_type") == "delete")
         .select("doc_id", "text")
-        .localCheckpoint()
+        .transform(freeze, "untimed bench setup")
     )
     dels = (
         del_rows.select(F.col("doc_id").alias("__gone"))
         .distinct()
-        .localCheckpoint()
+        .transform(freeze, "untimed bench setup")
     )
 
     cached: list[DataFrame] = []
@@ -866,6 +872,7 @@ def streaming_dedup_lsh_live(
     from etl_lens_spark.dedup.minhash import guard_banded, pairs_from_bands
     from etl_lens_spark.operators import lakelog
     from etl_lens_spark.sources.pyds import LakeLogCDFStreamDataSource
+    from etl_lens_spark.streaming import live_index
 
     dt = _lsh_dedup_build(spark, sf_dir, "slsh_docs")
     try:
@@ -878,8 +885,6 @@ def streaming_dedup_lsh_live(
     def _apply_version(vdf) -> None:
         # Deletes BEFORE inserts within a version, upsert pre/post
         # images folded into the same two rules (live_index rules).
-        from etl_lens_spark.streaming import live_index
-
         dels, ins_rows = live_index.split_version_changes(vdf)
         gone_rows = dels.select("doc_id", "text")
         if not gone_rows.isEmpty():
@@ -888,17 +893,9 @@ def streaming_dedup_lsh_live(
         if not ins.isEmpty():
             state.apply_inserts(ins)
 
-    def sink(batch_df, epoch_id):
-        b = batch_df.localCheckpoint()
-        versions = sorted(
-            r[0]
-            for r in b.select("_commit_version").distinct().collect()
-        )
-        for v in versions:  # commit order inside the micro-batch
-            _apply_version(b.filter(F.col("_commit_version") == v))
-
     import uuid
 
+    sink = live_index.per_version_sink(_apply_version)
     ckpt = sinks.scratch_path(f"ckpt_slsh_{uuid.uuid4().hex}")
     q = (
         spark.readStream.format("lakelog_cdf")
@@ -912,13 +909,13 @@ def streaming_dedup_lsh_live(
     )
     q.awaitTermination()
 
-    head_docs = lakelog.read_snapshot(spark, dt).localCheckpoint()
+    head_docs = stage(lakelog.read_snapshot(spark, dt), "head_docs")
     scratch = pairs_from_bands(
         guard_banded(
-            _lsh_banded(head_docs).localCheckpoint(), _LSH_MAX_BUCKET
+            _lsh_banded(head_docs), _LSH_MAX_BUCKET
         ),
         min_est_jaccard=_LSH_THETA,
-    ).localCheckpoint()
+    ).transform(stage, "scratch")
     key = ["doc_a", "doc_b"]
     missing = scratch.join(state.pairs, key, "left_anti").count()
     extra = state.pairs.join(scratch, key, "left_anti").count()
@@ -1028,7 +1025,7 @@ def warehouse_ivm_topk_view(
         )
         .filter(F.col("rank") <= K)
         .select("bucket", "rank", "cents", "cnt")
-        .localCheckpoint()  # materialized: DML must not leak in
+        .transform(freeze, "later DML must not leak in")
     )
     dz = ivm.consolidate(
         ivm.changes_to_zset(
@@ -1344,7 +1341,7 @@ def sketch_tdigest_persisted(
     )
     partials = tdigest.partial_digests(
         ev, ["event_type", "day"], "v", delta=_TD_DELTA
-    ).localCheckpoint()
+    ).transform(stage, "partials")
     days = sorted(
         r.day for r in partials.select("day").distinct().collect()
     )

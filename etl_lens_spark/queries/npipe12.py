@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze, stage
 from etl_lens_spark.queries import bench_setup, query
 from etl_lens_spark.sources import sinks
 from etl_lens_spark.sources.tables import load_table
@@ -181,21 +182,21 @@ def sim_ann_incremental_cdf(
     lakelog.commit(it, 1, [{"add": "s1"}])
 
     # --- v2 deletes: index rows leave by one anti-join rewrite
-    dels = dels.localCheckpoint()
+    dels = stage(dels, "dels")
     lakelog.rewrite_minus_ids(spark, it, dels, "vec_id")
 
-    maintained = lakelog.read_snapshot(spark, it).localCheckpoint()
-    head = lakelog.read_snapshot(spark, et).localCheckpoint()
+    maintained = stage(lakelog.read_snapshot(spark, it), "maintained")
+    head = stage(lakelog.read_snapshot(spark, et), "head")
     queries = head.filter(F.col("vec_id") < _ANN_QUERIES)
 
     # --- audits: rebuilt index, top-k equality, recall, staleness
-    rebuilt = ivf.assign_cells(head, centroids).localCheckpoint()
+    rebuilt = stage(ivf.assign_cells(head, centroids), "rebuilt")
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["vec_id", "cell"]
     )
     m_topk = ivf.ivf_probe_topk(
         maintained, queries, centroids, k=_ANN_K, nprobe=nprobe
-    ).localCheckpoint()
+    ).transform(stage, "m_topk")
     r_topk = ivf.ivf_probe_topk(
         rebuilt, queries, centroids, k=_ANN_K, nprobe=nprobe
     )
@@ -250,14 +251,16 @@ def _bench_sim_ann_incremental(spark: SparkSession, sf_dir: str):
     et = _ann_build(spark, sf_dir, "iann_bench_emb")
     seed = lakelog.read_snapshot(spark, et, 0)
     centroids = ivf.train_centroids(seed, k=n_cells, iters=train_iters)
-    seed_index = ivf.assign_cells(seed, centroids).localCheckpoint()
+    seed_index = freeze(
+        ivf.assign_cells(seed, centroids), "untimed bench setup"
+    )
     ins, dels = _ann_feeds(spark, et)
-    ins = ins.localCheckpoint()
-    dels = dels.localCheckpoint()
+    ins = freeze(ins, "untimed bench setup")
+    dels = freeze(dels, "untimed bench setup")
     head = lakelog.read_snapshot(spark, et)
     queries = head.filter(
         F.col("vec_id") < _ANN_QUERIES
-    ).localCheckpoint()
+    ).transform(freeze, "untimed bench setup")
 
     def _maintained() -> DataFrame:
         delta = ivf.assign_cells(ins, centroids)
@@ -338,27 +341,26 @@ def sim_srp_incremental_cdf(
     ins, dels = _ann_feeds(spark, et)
     knn.srp_bucket_index(ins, planes).write.parquet(f"{it}/s1")
     lakelog.commit(it, 1, [{"add": "s1"}])
-    dels = dels.localCheckpoint()
     lakelog.rewrite_minus_ids(spark, it, dels, "vec_id")
 
-    maintained = lakelog.read_snapshot(spark, it).localCheckpoint()
-    head = lakelog.read_snapshot(spark, et).localCheckpoint()
+    maintained = stage(lakelog.read_snapshot(spark, it), "maintained")
+    head = stage(lakelog.read_snapshot(spark, et), "head")
     queries = head.filter(F.col("vec_id") < _ANN_QUERIES)
 
-    rebuilt = knn.srp_bucket_index(head, planes).localCheckpoint()
+    rebuilt = stage(knn.srp_bucket_index(head, planes), "rebuilt")
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["vec_id", "bucket"]
     )
     m_topk = knn.lsh_probe_topk(
         maintained, queries, planes, k=_ANN_K, probes=probes
-    ).localCheckpoint()
+    ).transform(stage, "m_topk")
     r_topk = knn.lsh_probe_topk(
         rebuilt, queries, planes, k=_ANN_K, probes=probes
     )
     topk_missing, topk_extra = _ann_key_diff(
         m_topk, r_topk, ["qid", "neighbor_id", "rank_n"]
     )
-    bf = knn.brute_force_topk(head, queries, k=_ANN_K).localCheckpoint()
+    bf = stage(knn.brute_force_topk(head, queries, k=_ANN_K), "bf")
     n_bf = bf.count()
     m_hits = m_topk.join(bf, ["qid", "neighbor_id"], "left_semi").count()
     build_once = knn.lsh_topk(
@@ -576,7 +578,9 @@ def warehouse_ivm_restartable_topk(
         return lakelog.commit_idempotent(pt, app_id, epoch, actions)
 
     def sink(batch_df, epoch_id):
-        res = _refresh(batch_df.localCheckpoint(), int(epoch_id))
+        res = _refresh(
+            freeze(batch_df, "outlives its batch"), int(epoch_id)
+        )
         sink_log.append({"epoch": int(epoch_id), **res})
         if int(epoch_id) == 0 and crash["armed"]:
             crash["armed"] = False
@@ -749,28 +753,27 @@ def sim_multitable_incremental_cdf(
     ins, dels = _ann_feeds(spark, et)
     knn.srp_multitable_index(ins, planes_list).write.parquet(f"{it}/s1")
     lakelog.commit(it, 1, [{"add": "s1"}])
-    dels = dels.localCheckpoint()
     lakelog.rewrite_minus_ids(spark, it, dels, "vec_id")
 
-    maintained = lakelog.read_snapshot(spark, it).localCheckpoint()
-    head = lakelog.read_snapshot(spark, et).localCheckpoint()
-    queries = head.filter(F.col("vec_id") < NQ).localCheckpoint()
+    maintained = stage(lakelog.read_snapshot(spark, it), "maintained")
+    head = stage(lakelog.read_snapshot(spark, et), "head")
+    queries = stage(head.filter(F.col("vec_id") < NQ), "queries")
 
-    rebuilt = knn.srp_multitable_index(head, planes_list).localCheckpoint()
+    rebuilt = stage(knn.srp_multitable_index(head, planes_list), "rebuilt")
     bcols = [f"b{t}" for t in range(L)]
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["vec_id"] + bcols
     )
     m_topk = knn.multitable_probe_topk(
         maintained, queries, planes_list, k=K, probes=PROBES
-    ).localCheckpoint()
+    ).transform(stage, "m_topk")
     r_topk = knn.multitable_probe_topk(
         rebuilt, queries, planes_list, k=K, probes=PROBES
     )
     topk_missing, topk_extra = _ann_key_diff(
         m_topk, r_topk, ["qid", "neighbor_id", "rank_n"]
     )
-    bf = knn.brute_force_topk(head, queries, k=K).localCheckpoint()
+    bf = stage(knn.brute_force_topk(head, queries, k=K), "bf")
     m4 = m_topk.join(bf, ["qid", "neighbor_id"], "left_semi").count()
     m1 = (
         knn.multitable_probe_topk(
@@ -867,27 +870,26 @@ def sim_pq_incremental_cdf(
     ins, dels = _ann_feeds(spark, et)
     pq.encode(ins, books).write.parquet(f"{it}/s1")
     lakelog.commit(it, 1, [{"add": "s1"}])
-    dels = dels.localCheckpoint()
     lakelog.rewrite_minus_ids(spark, it, dels, "vec_id")
 
-    maintained = lakelog.read_snapshot(spark, it).localCheckpoint()
-    head = lakelog.read_snapshot(spark, et).localCheckpoint()
+    maintained = stage(lakelog.read_snapshot(spark, it), "maintained")
+    head = stage(lakelog.read_snapshot(spark, et), "head")
     queries = head.filter(F.col("vec_id") < _ANN_QUERIES)
 
-    rebuilt = pq.encode(head, books).localCheckpoint()
+    rebuilt = stage(pq.encode(head, books), "rebuilt")
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["vec_id", "codes"]
     )
     m_topk = pq.pq_probe_topk(
         maintained, head, queries, books, k=K, rerank=RERANK
-    ).localCheckpoint()
+    ).transform(stage, "m_topk")
     r_topk = pq.pq_probe_topk(
         rebuilt, head, queries, books, k=K, rerank=RERANK
     )
     topk_missing, topk_extra = _ann_key_diff(
         m_topk, r_topk, ["qid", "neighbor_id", "rank_n"]
     )
-    bf = knn.brute_force_topk(head, queries, k=K).localCheckpoint()
+    bf = stage(knn.brute_force_topk(head, queries, k=K), "bf")
     hits = m_topk.join(bf, ["qid", "neighbor_id"], "left_semi").count()
     recall = hits / max(bf.count(), 1)
     candidate = pq.refine_codebooks(head, books)
@@ -1011,22 +1013,16 @@ def streaming_ann_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("__gone")
         ).distinct()
         if not gone.isEmpty():
-            state.delete(gone.localCheckpoint())
+            state.delete(freeze(gone, "outlives its batch"))
         ins = ins_rows.select("vec_id", "embedding")
         if not ins.isEmpty():
             state.append(
-                ivf.assign_cells(ins, centroids).localCheckpoint()
+                ivf.assign_cells(ins, centroids).transform(
+                    freeze, "outlives its batch"
+                )
             )
 
-    def sink(batch_df, epoch_id):
-        b = batch_df.localCheckpoint()
-        versions = sorted(
-            r[0]
-            for r in b.select("_commit_version").distinct().collect()
-        )
-        for v in versions:  # commit order inside the micro-batch
-            _apply_version(b.filter(F.col("_commit_version") == v))
-
+    sink = live_index.per_version_sink(_apply_version)
     ckpt = sinks.scratch_path(f"ckpt_sann_{uuid.uuid4().hex}")
     q = (
         spark.readStream.format("lakelog_cdf")
@@ -1040,16 +1036,16 @@ def streaming_ann_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    maintained = state.view().localCheckpoint()
-    head = lakelog.read_snapshot(spark, et).localCheckpoint()
+    maintained = stage(state.view(), "maintained")
+    head = stage(lakelog.read_snapshot(spark, et), "head")
     queries = head.filter(F.col("vec_id") < _ANN_QUERIES)
-    rebuilt = ivf.assign_cells(head, centroids).localCheckpoint()
+    rebuilt = stage(ivf.assign_cells(head, centroids), "rebuilt")
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["vec_id", "cell"]
     )
     m_topk = ivf.ivf_probe_topk(
         maintained, queries, centroids, k=_ANN_K, nprobe=nprobe
-    ).localCheckpoint()
+    ).transform(stage, "m_topk")
     r_topk = ivf.ivf_probe_topk(
         rebuilt, queries, centroids, k=_ANN_K, nprobe=nprobe
     )

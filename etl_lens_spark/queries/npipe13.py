@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from etl_lens_spark.queries import bench_setup, query
 from etl_lens_spark.sources import sinks
 from etl_lens_spark.sources.tables import load_table
-from etl_lens_spark.operators.staging import stage
+from etl_lens_spark.operators.staging import freeze, stage
 
 # ---------------------------------------------------------------------------
 # Maintained BM25 postings index from the CDF
@@ -213,20 +213,20 @@ def text_bm25_incremental_cdf(
     lakelog.commit(it, 1, [{"add": "s1"}])
 
     # --- v2 deletes: postings leave by one anti-join rewrite
-    dels = dels.localCheckpoint()
+    dels = stage(dels, "dels")
     lakelog.rewrite_minus_ids(spark, it, dels, "doc_id")
 
-    maintained = lakelog.read_snapshot(spark, it).localCheckpoint()
-    head = lakelog.read_snapshot(spark, dt).localCheckpoint()
+    maintained = stage(lakelog.read_snapshot(spark, it), "maintained")
+    head = stage(lakelog.read_snapshot(spark, dt), "head")
 
     # --- audits: rebuilt postings, top-k equality, the drift dial
-    rebuilt = lexical.postings(head).localCheckpoint()
+    rebuilt = stage(lexical.postings(head), "rebuilt")
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["term", "doc_id", "tf", "dlen"]
     )
     m_topk = lexical.bm25_topk(
         maintained, _LEX_TERMS, n_docs, avgdl, df_map, k=_LEX_TOPK
-    ).localCheckpoint()
+    ).transform(stage, "m_topk")
     r_topk = lexical.bm25_topk(
         rebuilt, _LEX_TERMS, n_docs, avgdl, df_map, k=_LEX_TOPK
     )
@@ -270,12 +270,12 @@ def _bench_bm25_incremental(spark: SparkSession, sf_dir: str):
     dt = _lsh_dedup_build(spark, sf_dir, "ibm25_bench_docs")
     seed_post = lexical.postings(
         lakelog.read_snapshot(spark, dt, 0)
-    ).localCheckpoint()
+    ).transform(freeze, "untimed bench setup")
     n_docs, avgdl = lexical.corpus_stats(seed_post)
     df_map = lexical.df_stats(seed_post, _LEX_TERMS)
     ins, dels = _docs_feeds(spark, dt)
-    ins = ins.localCheckpoint()
-    dels = dels.localCheckpoint()
+    ins = freeze(ins, "untimed bench setup")
+    dels = freeze(dels, "untimed bench setup")
 
     def _maintained() -> DataFrame:
         delta = lexical.postings(ins)
@@ -365,12 +365,10 @@ def text_phrase_incremental_cdf(
     ins, dels = _docs_feeds(spark, dt)
     lexical.positional_tokens(ins).write.parquet(f"{it}/s1")
     lakelog.commit(it, 1, [{"add": "s1"}])
-    lakelog.rewrite_minus_ids(
-        spark, it, dels.localCheckpoint(), "doc_id"
-    )
+    lakelog.rewrite_minus_ids(spark, it, dels, "doc_id")
 
-    maintained = lakelog.read_snapshot(spark, it).localCheckpoint()
-    head = lakelog.read_snapshot(spark, dt).localCheckpoint()
+    maintained = stage(lakelog.read_snapshot(spark, it), "maintained")
+    head = stage(lakelog.read_snapshot(spark, dt), "head")
     rebuilt = lexical.positional_tokens(head)
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["doc_id", "pos", "term"]
@@ -531,10 +529,10 @@ def rank_rrf_incremental_cdf(
     lexical.postings(d_ins).write.parquet(f"{lt}/s1")
     lakelog.commit(lt, 1, [{"add": "s1"}])
     lakelog.rewrite_minus_ids(
-        spark, lt, d_dels.localCheckpoint(), "doc_id"
+        spark, lt, stage(d_dels, "lex_dels"), "doc_id"
     )
-    m_lex = lakelog.read_snapshot(spark, lt).localCheckpoint()
-    d_head = lakelog.read_snapshot(spark, dt).localCheckpoint()
+    m_lex = stage(lakelog.read_snapshot(spark, lt), "m_lex")
+    d_head = stage(lakelog.read_snapshot(spark, dt), "d_head")
     r_lex = lexical.postings(d_head)
     lex_missing, lex_extra = _ann_key_diff(
         m_lex, r_lex, ["term", "doc_id", "tf", "dlen"]
@@ -553,10 +551,10 @@ def rank_rrf_incremental_cdf(
     ivf.assign_cells(e_ins, centroids).write.parquet(f"{at}/s1")
     lakelog.commit(at, 1, [{"add": "s1"}])
     lakelog.rewrite_minus_ids(
-        spark, at, e_dels.localCheckpoint(), "vec_id"
+        spark, at, stage(e_dels, "ann_dels"), "vec_id"
     )
-    m_ann = lakelog.read_snapshot(spark, at).localCheckpoint()
-    e_head = lakelog.read_snapshot(spark, et).localCheckpoint()
+    m_ann = stage(lakelog.read_snapshot(spark, at), "m_ann")
+    e_head = stage(lakelog.read_snapshot(spark, et), "e_head")
     r_ann = ivf.assign_cells(e_head, centroids)
     emb_missing, emb_extra = _ann_key_diff(
         m_ann, r_ann, ["vec_id", "cell"]
@@ -639,19 +637,23 @@ def _bench_rrf_incremental(spark: SparkSession, sf_dir: str):
     dt = _lsh_dedup_build(spark, sf_dir, "irrf_bench_docs")
     seed_post = lexical.postings(
         lakelog.read_snapshot(spark, dt, 0)
-    ).localCheckpoint()
+    ).transform(freeze, "untimed bench setup")
     n_docs, avgdl = lexical.corpus_stats(seed_post)
     df_map = lexical.df_stats(seed_post, _LEX_TERMS)
     d_ins, d_dels = _docs_feeds(spark, dt)
-    d_ins, d_dels = d_ins.localCheckpoint(), d_dels.localCheckpoint()
+    d_ins = freeze(d_ins, "untimed bench setup")
+    d_dels = freeze(d_dels, "untimed bench setup")
 
     n_cells, _nprobe, train_iters = ivf_params(spark)
     et = _ann_build(spark, sf_dir, "irrf_bench_emb")
     e_seed = lakelog.read_snapshot(spark, et, 0)
     centroids = ivf.train_centroids(e_seed, k=n_cells, iters=train_iters)
-    seed_cells = ivf.assign_cells(e_seed, centroids).localCheckpoint()
+    seed_cells = freeze(
+        ivf.assign_cells(e_seed, centroids), "untimed bench setup"
+    )
     e_ins, e_dels = _ann_feeds(spark, et)
-    e_ins, e_dels = e_ins.localCheckpoint(), e_dels.localCheckpoint()
+    e_ins = freeze(e_ins, "untimed bench setup")
+    e_dels = freeze(e_dels, "untimed bench setup")
 
     def _served() -> DataFrame:
         lex = seed_post.unionByName(lexical.postings(d_ins)).join(
@@ -863,7 +865,7 @@ def sim_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.parquet(f"{it}/cells/s1")
     lakelog.commit(it, 1, [{"add": "cells/s1"}])
 
-    head = lakelog.read_snapshot(spark, et).localCheckpoint()
+    head = stage(lakelog.read_snapshot(spark, et), "head")
     n_head = head.count()
     queries = head.filter(
         (F.col("vec_id") < _SWAP_NQ)
@@ -871,8 +873,8 @@ def sim_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vec_id") >= _SWAP_ID_OFFSET)
             & (F.col("vec_id") < _SWAP_ID_OFFSET + _SWAP_NQ)
         )
-    ).localCheckpoint()
-    bf = knn.brute_force_topk(head, queries, k=_SWAP_K).localCheckpoint()
+    ).transform(stage, "queries")
+    bf = stage(knn.brute_force_topk(head, queries, k=_SWAP_K), "bf")
 
     def _serve(version: int):
         """Serve ENTIRELY from the table at one version: matched
@@ -901,7 +903,7 @@ def sim_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- pre-swap serving (reader at vN)
     v_pre = lakelog.latest_version(it)
     pre_topk, torn_pre, pre_cells = _serve(v_pre)
-    pre_topk = pre_topk.localCheckpoint()
+    pre_topk = stage(pre_topk, "pre_topk")
     n_rows_pre = pre_cells.count()
     hits_pre = pre_topk.join(
         bf, ["qid", "neighbor_id"], "left_semi"
@@ -1058,7 +1060,7 @@ def lake_auto_optimize_maintainer(
 
     final_files = len(lakelog.snapshot_actions(ta))
     plain_files = len(lakelog.snapshot_actions(tb))
-    a = lakelog.read_snapshot(spark, ta).localCheckpoint()
+    a = stage(lakelog.read_snapshot(spark, ta), "compacted_rows")
     b = lakelog.read_snapshot(spark, tb)
     content_missing, content_extra = _ann_key_diff(
         a, b, ["k", "cents"]
@@ -1160,10 +1162,7 @@ def lake_concurrent_maintainers(
         .cast("long")
         .alias("cents"),
     )
-    slices = [
-        src.filter(F.col("k") % 6 == i).localCheckpoint()
-        for i in range(6)
-    ]
+    slices = [src.filter(F.col("k") % 6 == i) for i in range(6)]
 
     # seed so both maintainers start from a live table
     slices[0].write.parquet(f"{t}/s0")
@@ -1186,7 +1185,7 @@ def lake_concurrent_maintainers(
         src.filter(F.col("k") % 100 == 17)
         .select(F.col("k").alias("__gone"))
         .distinct()
-        .localCheckpoint()
+        .transform(stage, "gone")
     )
     lakelog.rewrite_minus_ids(spark, t, gone, "k")  # B wins
     conflict_raised = 0
@@ -1202,7 +1201,7 @@ def lake_concurrent_maintainers(
         # loser recomputes against the winner's snapshot
         lakelog.optimize_compact(spark, t)
 
-    final = lakelog.read_snapshot(spark, t).localCheckpoint()
+    final = stage(lakelog.read_snapshot(spark, t), "final")
     # every append present, B's delete preserved
     expected = src.join(
         F.broadcast(gone), F.col("k") == F.col("__gone"), "left_anti"

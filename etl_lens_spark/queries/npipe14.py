@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze, stage
 from etl_lens_spark.queries import bench_setup, query
 from etl_lens_spark.sources import sinks
 from etl_lens_spark.sources.tables import load_table
@@ -247,13 +248,13 @@ def text_bm25_restats_swap(
     # --- pre-swap serving (frozen stats) + the dials
     v_pre = lakelog.latest_version(it)
     pre_topk, epoch_pre, frozen_n = _serve(v_pre)
-    pre_topk = pre_topk.localCheckpoint()
+    pre_topk = stage(pre_topk, "pre_topk")
     # the POST member only — a whole-table read would fold the stats
     # member's rows (NULL doc_id, term='spark' df rows) into the
     # aggregates and quietly inflate n_docs/df by one
     maintained = lakelog.read_table_snapshot(
         spark, it, "post", v_pre
-    ).localCheckpoint()
+    ).transform(stage, "maintained")
     cur_n, cur_avgdl = lexical.corpus_stats(maintained)
     restat_triggered = int(cur_n / max(frozen_n, 1) >= _RSTAT_GROWTH)
     cur_df = lexical.df_stats(maintained, _RSTAT_TERMS)
@@ -278,13 +279,13 @@ def text_bm25_restats_swap(
     # --- post-swap serving + the time-travel replay
     v_post = lakelog.latest_version(it)
     post_topk, epoch_post, _n = _serve(v_post)
-    post_topk = post_topk.localCheckpoint()
+    post_topk = stage(post_topk, "post_topk")
     replay_topk, epoch_replay, _n = _serve(v_pre)  # pinned old version
     replay_missing, replay_extra = _ann_key_diff(
         replay_topk, pre_topk, ["doc_id", "rank"]
     )
     head = lakelog.read_snapshot(spark, dt)
-    rebuilt = lexical.postings(head).localCheckpoint()
+    rebuilt = stage(lexical.postings(head), "rebuilt")
     rn, ravgdl = lexical.corpus_stats(rebuilt)
     rdf = lexical.df_stats(rebuilt, _RSTAT_TERMS)
     r_topk = lexical.bm25_topk(
@@ -429,7 +430,7 @@ def sim_pq_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.parquet(f"{it}/codes/s1")
     lakelog.commit(it, 1, [{"add": "codes/s1"}])
 
-    head = lakelog.read_snapshot(spark, et).localCheckpoint()
+    head = stage(lakelog.read_snapshot(spark, et), "head")
     n_head = head.count()
     queries = head.filter(
         (F.col("vec_id") < _PQS_NQ)
@@ -437,8 +438,8 @@ def sim_pq_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vec_id") >= _SWAP_ID_OFFSET)
             & (F.col("vec_id") < _SWAP_ID_OFFSET + _PQS_NQ)
         )
-    ).localCheckpoint()
-    bf = knn.brute_force_topk(head, queries, k=_PQS_K).localCheckpoint()
+    ).transform(stage, "queries")
+    bf = stage(knn.brute_force_topk(head, queries, k=_PQS_K), "bf")
 
     def _serve(version: int):
         """Serve ENTIRELY from the table at one version: matched
@@ -466,7 +467,7 @@ def sim_pq_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- pre-swap serving (reader at vN)
     v_pre = lakelog.latest_version(it)
     pre_topk, torn_pre, pre_codes = _serve(v_pre)
-    pre_topk = pre_topk.localCheckpoint()
+    pre_topk = stage(pre_topk, "pre_topk")
     n_codes_pre = pre_codes.count()
     recall_pre = pre_topk.join(
         bf, ["qid", "neighbor_id"], "left_semi"
@@ -640,20 +641,12 @@ def streaming_bm25_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         dels, ins_rows = live_index.split_version_changes(vdf)
         gone = dels.select(F.col("doc_id").alias("__gone")).distinct()
         if not gone.isEmpty():
-            state.delete(gone.localCheckpoint())
+            state.delete(freeze(gone, "outlives its batch"))
         ins = ins_rows.select("doc_id", "text")
         if not ins.isEmpty():
-            state.append(lexical.postings(ins).localCheckpoint())
+            state.append(freeze(lexical.postings(ins), "outlives its batch"))
 
-    def sink(batch_df, epoch_id):
-        b = batch_df.localCheckpoint()
-        versions = sorted(
-            r[0]
-            for r in b.select("_commit_version").distinct().collect()
-        )
-        for v in versions:  # commit order inside the micro-batch
-            _apply_version(b.filter(F.col("_commit_version") == v))
-
+    sink = live_index.per_version_sink(_apply_version)
     ckpt = sinks.scratch_path(f"ckpt_sbm25_{uuid.uuid4().hex}")
     q = (
         spark.readStream.format("lakelog_cdf")
@@ -667,15 +660,15 @@ def streaming_bm25_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    maintained = state.view().localCheckpoint()
-    head = lakelog.read_snapshot(spark, dt).localCheckpoint()
-    rebuilt = lexical.postings(head).localCheckpoint()
+    maintained = stage(state.view(), "maintained")
+    head = stage(lakelog.read_snapshot(spark, dt), "head")
+    rebuilt = stage(lexical.postings(head), "rebuilt")
     idx_missing, idx_extra = _ann_key_diff(
         maintained, rebuilt, ["term", "doc_id", "tf", "dlen"]
     )
     m_topk = lexical.bm25_topk(
         maintained, _RSTAT_TERMS, n_docs, avgdl, df_map, k=_RSTAT_TOPK
-    ).localCheckpoint()
+    ).transform(stage, "m_topk")
     r_topk = lexical.bm25_topk(
         rebuilt, _RSTAT_TERMS, n_docs, avgdl, df_map, k=_RSTAT_TOPK
     )
@@ -903,14 +896,14 @@ def pipeline_incremental_curation_cdf(
         .filter(F.col("_change_type") == "delete")
         .select(F.col("doc_id").alias("__gone"))
         .distinct()
-        .localCheckpoint()
+        .transform(stage, "gone")
     )
     support_cur = lakelog.read_table_snapshot(spark, ct, "support")
     support_new = support_cur.join(
         F.broadcast(gone),
         F.col("doc_id") == F.col("__gone"),
         "left_anti",
-    ).localCheckpoint()
+    ).transform(stage, "support_new")
     curated_cur = lakelog.read_table_snapshot(spark, ct, "curated")
     removed, promoted = curation.delete_deltas(
         support_new, curated_cur, gone
@@ -931,12 +924,12 @@ def pipeline_incremental_curation_cdf(
     # --- audits: from-scratch curation of the head snapshot
     m_support = lakelog.read_table_snapshot(
         spark, ct, "support"
-    ).localCheckpoint()
+    ).transform(stage, "m_support")
     m_curated = lakelog.read_table_snapshot(
         spark, ct, "curated"
-    ).localCheckpoint()
+    ).transform(stage, "m_curated")
     head = lakelog.read_snapshot(spark, dt)
-    ref_support = curation.gate(head).localCheckpoint()
+    ref_support = stage(curation.gate(head), "ref_support")
     ref_curated = curation.elect_keepers(ref_support)
     support_missing, support_extra = _ann_key_diff(
         m_support, ref_support, ["fp", "doc_id", "n_tokens"]
@@ -1001,20 +994,20 @@ def _bench_incremental_curation(spark: SparkSession, sf_dir: str):
     dt = _curation_source(spark, sf_dir, "icur_bench_docs")
     g0 = curation.gate(
         lakelog.read_snapshot(spark, dt, 0)
-    ).localCheckpoint()
-    curated_0 = curation.elect_keepers(g0).localCheckpoint()
+    ).transform(freeze, "untimed bench setup")
+    curated_0 = freeze(curation.elect_keepers(g0), "untimed bench setup")
     ins = (
         lakelog.table_changes(spark, dt, 0, 1)
         .filter(F.col("_change_type") == "insert")
         .select("doc_id", "text")
-        .localCheckpoint()
+        .transform(freeze, "untimed bench setup")
     )
     gone = (
         lakelog.table_changes(spark, dt, 1, 2)
         .filter(F.col("_change_type") == "delete")
         .select(F.col("doc_id").alias("__gone"))
         .distinct()
-        .localCheckpoint()
+        .transform(freeze, "untimed bench setup")
     )
 
     def _maintained() -> DataFrame:
@@ -1127,20 +1120,12 @@ def streaming_curation_live(
         dels, ins_rows = live_index.split_version_changes(vdf)
         gone = dels.select(F.col("doc_id").alias("__gone")).distinct()
         if not gone.isEmpty():
-            state.delete(gone.localCheckpoint())
+            state.delete(freeze(gone, "outlives its batch"))
         ins = ins_rows.select("doc_id", "text")
         if not ins.isEmpty():
-            state.append(curation.gate(ins).localCheckpoint())
+            state.append(freeze(curation.gate(ins), "outlives its batch"))
 
-    def sink(batch_df, epoch_id):
-        b = batch_df.localCheckpoint()
-        versions = sorted(
-            r[0]
-            for r in b.select("_commit_version").distinct().collect()
-        )
-        for v in versions:  # commit order inside the micro-batch
-            _apply_version(b.filter(F.col("_commit_version") == v))
-
+    sink = live_index.per_version_sink(_apply_version)
     ckpt = sinks.scratch_path(f"ckpt_scur_{uuid.uuid4().hex}")
     q = (
         spark.readStream.format("lakelog_cdf")
@@ -1154,10 +1139,10 @@ def streaming_curation_live(
     )
     q.awaitTermination()
 
-    support = state.view().localCheckpoint()
-    curated = curation.elect_keepers(support).localCheckpoint()
+    support = stage(state.view(), "support")
+    curated = stage(curation.elect_keepers(support), "curated")
     head = lakelog.read_snapshot(spark, dt)
-    ref_support = curation.gate(head).localCheckpoint()
+    ref_support = stage(curation.gate(head), "ref_support")
     ref_curated = curation.elect_keepers(ref_support)
     support_missing, support_extra = _ann_key_diff(
         support, ref_support, ["fp", "doc_id", "n_tokens"]
@@ -1433,7 +1418,7 @@ def pipeline_incremental_neardup_curation_cdf(
         .filter(F.col("_change_type") == "insert")
         .select("doc_id", "text")
     )
-    tokd = _trigram_sets(_gated_docs(ins)).localCheckpoint()
+    tokd = _trigram_sets(_gated_docs(ins))
     tokd.write.parquet(f"{ct}/tok/t1")
     tokd = spark.read.parquet(f"{ct}/tok/t1")
     standing = lakelog.read_table_snapshot(spark, ct, "tok")
@@ -1470,7 +1455,7 @@ def pipeline_incremental_neardup_curation_cdf(
         .filter(F.col("_change_type") == "delete")
         .select(F.col("doc_id").alias("__gone"))
         .distinct()
-        .localCheckpoint()
+        .transform(stage, "gone")
     )
     tok_cur = lakelog.read_table_snapshot(spark, ct, "tok")
     tok_new = tok_cur.join(
@@ -1502,19 +1487,19 @@ def pipeline_incremental_neardup_curation_cdf(
     )
 
     # --- audits: from-scratch on the head snapshot
-    m_tok = lakelog.read_table_snapshot(spark, ct, "tok").localCheckpoint()
+    m_tok = stage(lakelog.read_table_snapshot(spark, ct, "tok"), "m_tok")
     m_pairs = lakelog.read_table_snapshot(
         spark, ct, "pairs"
-    ).localCheckpoint()
+    ).transform(stage, "m_pairs")
     m_curated = lakelog.read_table_snapshot(
         spark, ct, "curated"
-    ).localCheckpoint()
+    ).transform(stage, "m_curated")
     head_g = _gated_docs(lakelog.read_snapshot(spark, dt))
-    ref_tok = _trigram_sets(head_g).localCheckpoint()
+    ref_tok = stage(_trigram_sets(head_g), "ref_tok")
     ref_pairs = (
         setsim.jaccard_self_join(ref_tok, _ND_T)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .transform(stage, "ref_pairs")
     )
     ref_curated = _elect(ref_pairs, ref_tok)
     tok_missing, tok_extra = _ann_key_diff(
@@ -1716,7 +1701,7 @@ def lake_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     g0 = curation.gate(lakelog.read_snapshot(spark, dt, 0))
     g0.write.parquet(f"{ct}/support/s0")
     g0 = spark.read.parquet(f"{ct}/support/s0")
-    c0 = curation.elect_keepers(g0).localCheckpoint()
+    c0 = stage(curation.elect_keepers(g0), "c0")
     c0.write.parquet(f"{ct}/curated/c0")
     _manifest_row(0, 0, 0, c0, g0.count())
     lakelog.commit(
@@ -1752,21 +1737,21 @@ def lake_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_change_type") == "delete")
         .select(F.col("doc_id").alias("__gone"))
         .distinct()
-        .localCheckpoint()
+        .transform(stage, "gone")
     )
     support_cur = lakelog.read_table_snapshot(spark, ct, "support")
     support_new = support_cur.join(
         F.broadcast(gone),
         F.col("doc_id") == F.col("__gone"),
         "left_anti",
-    ).localCheckpoint()
+    ).transform(stage, "support_new")
     curated_cur = lakelog.read_table_snapshot(spark, ct, "curated")
     removed, promoted = curation.delete_deltas(
         support_new, curated_cur, gone
     )
     c2 = curated_cur.join(
         removed.select("fp"), "fp", "left_anti"
-    ).unionByName(promoted).localCheckpoint()
+    ).unionByName(promoted).transform(stage, "c2")
     support_new.write.parquet(f"{ct}/support/s2")
     c2.write.parquet(f"{ct}/curated/c2")
     _manifest_row(2, 2, 2, c2, support_new.count())
@@ -1790,7 +1775,7 @@ def lake_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1, 2):
         man_v = lakelog.read_table_snapshot(
             spark, ct, "manifest", v
-        ).localCheckpoint()
+        ).transform(stage, "man_v")
         if man_v.count() != v + 1:
             lockstep_ok = 0
         rec = man_v.filter(F.col("epoch") == v).first()
@@ -1802,7 +1787,7 @@ def lake_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source version, from scratch
     manifest = lakelog.read_table_snapshot(
         spark, ct, "manifest"
-    ).localCheckpoint()
+    ).transform(stage, "manifest")
     replay_mismatch = 0
     for rec in manifest.collect():
         src = lakelog.read_snapshot(spark, dt, int(rec["src_version"]))
@@ -2008,7 +1993,7 @@ def sketch_kmv_incremental_cdf(
     )
     merged = lakelog.read_table_snapshot(
         spark, it, "sketch"
-    ).localCheckpoint()
+    ).transform(stage, "merged")
     v1_state = lakelog.read_snapshot(spark, dt, 1)
     merge_ref = kmv.kmv_topk(_hashes(v1_state), ["grp"], _SKI_K)
     merge_missing, merge_extra = _ann_key_diff(
@@ -2016,7 +2001,7 @@ def sketch_kmv_incremental_cdf(
     )
 
     # --- delete epoch: the contamination dial, then the rebuild
-    head = lakelog.read_snapshot(spark, dt).localCheckpoint()
+    head = stage(lakelog.read_snapshot(spark, dt), "head")
     gone_keys = _hashes(v1_state).exceptAll(_hashes(head))
     contaminated_n = merged.join(
         gone_keys, ["grp", "v"], "left_semi"
@@ -2029,7 +2014,7 @@ def sketch_kmv_incremental_cdf(
     )
     post = lakelog.read_table_snapshot(
         spark, it, "sketch"
-    ).localCheckpoint()
+    ).transform(stage, "post")
     post_ref_sql_equiv = kmv.kmv_topk(_hashes(head), ["grp"], _SKI_K)
     post_missing, post_extra = _ann_key_diff(
         post, post_ref_sql_equiv, ["grp", "v"]

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from etl_lens_spark.dedup import minhash as mh
 from etl_lens_spark.operators.partitioning import parallelize_compute
+from etl_lens_spark.operators.staging import stage
 from etl_lens_spark.queries import query
 from etl_lens_spark.sources.tables import load_table
 from etl_lens_spark.text import pipeline as tp
@@ -338,18 +339,12 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     bi = docs.select(F.explode(tp.word_ngrams(toks, 2)).alias("g"))
     # ONE tokenize+explode pass feeds the bigram count table; the
     # corpus-wide total then aggregates that (small) table instead of
-    # re-tokenizing the corpus a third time
-    # localCheckpoint (NOT persist): materializes the bigram count
-    # table once so the nbi total and the PMI join both read it
-    # without re-tokenizing, but — unlike persist, which pins an
-    # entry in the CacheManager until an explicit unpersist that a
-    # lazily-returned plan can never safely issue — checkpoint blocks
-    # are reclaimed by the ContextCleaner when the query's references
-    # are dropped, so repeated registry runs don't accumulate cache.
+    # re-tokenizing the corpus a third time (staged: the nbi total
+    # and the PMI join both read it)
     cb_all = (
         bi.groupBy("g")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(stage, "pmi_bigram_counts")
     )
     nbi = cb_all.agg(F.sum("c").cast("long").alias("nbi"))
     cb = (

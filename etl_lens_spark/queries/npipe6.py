@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from etl_lens_spark.operators.kmv import SCALE as _MD5_SCALE
 from etl_lens_spark.operators.kmv import kmv_value
+from etl_lens_spark.operators.staging import freeze, stage
 from etl_lens_spark.queries import query
 from etl_lens_spark.queries.mlprep_q import _md5_sql
 from etl_lens_spark.similarity.knn import dot as _dot
@@ -133,12 +134,12 @@ def pref_bradley_terry_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ij = (
         sym.groupBy("i", "j")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(stage, "n_ij")
     )
     wins = (
         pairs.groupBy(F.col("w").alias("i"))
         .agg(F.count(F.lit(1)).cast("long").alias("wn"))
-        .localCheckpoint(eager=True)
+        .transform(stage, "wins")
     )
     p = n_ij.select("i").distinct().select("i", F.lit(1.0).alias("v"))
     for _ in range(_BT_ITERS):
@@ -166,7 +167,7 @@ def pref_bradley_terry_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("double").alias("np"),
             F.sum("v").alias("sv"),
         )
-        # checkpoint the |players|-row rating frame per round: it is
+        # freeze the |players|-row rating frame per round: it is
         # referenced three times next round (two join sides + the
         # normalizer) and unbroken lineage re-executes the whole
         # prior chain per reference — the same 3^iters blowup the
@@ -176,7 +177,7 @@ def pref_bradley_terry_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "i", (F.col("v") * F.col("np") / F.col("sv")).alias("v")
             )
-            .localCheckpoint(eager=True)
+            .transform(freeze, "bounded loop lineage")
         )
     return (
         p.join(n_ij, "i")
@@ -483,7 +484,7 @@ def graph_triangle_count_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.user_id").alias("ub"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(stage, "edges")
     )
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
@@ -843,7 +844,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("y").cast("long").alias("pos"),
         )
-        .localCheckpoint(eager=True)
+        .transform(stage, "bins")
     )
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     pre = bins.select(
@@ -854,7 +855,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").over(w).alias("cp"),
         (F.sum("n").over(w) - F.col("n")).alias("cn_prev"),
         (F.sum("pos").over(w) - F.col("pos")).alias("cp_prev"),
-    ).localCheckpoint(eager=True)
+    ).transform(stage, "pre")
     j = pre.select(
         F.col("bin").alias("jb"),
         F.col("cn_prev").alias("j_cn_prev"),
@@ -1156,7 +1157,7 @@ def events_shapley_attribution(
             .cast("double")
             .alias("v")
         )
-        .localCheckpoint(eager=True)
+        .transform(stage, "shapley_values")
     )
     # factorial weight by coalition size, shared literals both engines
     size = F.bit_count(F.col("s"))
@@ -1303,7 +1304,7 @@ def label_agreement_krippendorff(
         .filter(F.col("c").isNotNull() & F.col("k").isNotNull())
     )
     o = pairs.groupBy("c", "k").agg(F.sum("w").alias("o"))
-    o = o.localCheckpoint(eager=True)
+    o = stage(o, "kripp_coincidences")
     marg = o.groupBy("c").agg(F.sum("o").alias("nc"))
     m2 = marg.select(F.col("c").alias("c2"), F.col("nc").alias("nc2"))
     cross = (

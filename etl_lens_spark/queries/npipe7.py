@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from etl_lens_spark.queries import query
 from etl_lens_spark.similarity.knn import dot as _dot
 from etl_lens_spark.sources.tables import load_table
-from etl_lens_spark.operators.staging import stage
+from etl_lens_spark.operators.staging import freeze, stage
 
 # ---------------------------------------------------------------------------
 # Uniform-k negative sampling with positive exclusion
@@ -854,7 +854,7 @@ def dataset_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("e"),
         )
-        .localCheckpoint(eager=True)
+        .transform(stage, "kcenter_emb")
     )
 
     def d2(a, b):
@@ -869,7 +869,7 @@ def dataset_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     picked = [(1, 0, None)]  # (rank, vec_id, radius_before)
     for step in range(2, _KC_K + 1):
-        cur = cur.localCheckpoint(eager=True)
+        cur = freeze(cur, "bounded loop lineage")
         far = cur.agg(
             F.max_by(
                 F.struct("vec_id", "e"),

@@ -803,25 +803,18 @@ def sketch_kmv_set_operations(
         .select("event_type", "user_id")
     )
     # ONE corpus pass: the exact-anchor distinct (type, user) frame is
-    # computed first and checkpointed; the KMV value is a pure
-    # function of user_id, so distinct (type, v) over raw events ==
-    # distinct (type, v) over this already-deduped frame — the md5
-    # hashing and the second dedup now run on O(distinct pairs) rows
-    # instead of the whole event stream (was two separate corpus
-    # scans + dedups)
-    du = ev.dropDuplicates(["event_type", "user_id"]).localCheckpoint(
-        eager=False
+    # staged first; the KMV value is a pure function of user_id, so
+    # distinct (type, v) over it == over raw events, and the md5
+    # hashing and second dedup run on O(distinct pairs) rows
+    du = stage(
+        ev.dropDuplicates(["event_type", "user_id"]), "kmv_distinct_pairs"
     )
     hv = du.select(
         "event_type", kmv.kmv_value(F.col("user_id")).alias("v")
     ).dropDuplicates(["event_type", "v"])
     # the per-type sketch is referenced THREE times (union build +
-    # both membership marks) and the distinct pair set twice more —
-    # materialize each once (O(types*k) and O(distinct pairs) rows)
-    # instead of re-running the corpus dedup per reference
-    sk = kmv.kmv_topk(hv, ["event_type"], _SO_K).localCheckpoint(
-        eager=False
-    )
+    # both membership marks) and the distinct pairs twice more
+    sk = stage(kmv.kmv_topk(hv, ["event_type"], _SO_K), "kmv_type_sketch")
     types = sk.select("event_type").distinct()
     pairs = (
         types.select(F.col("event_type").alias("ta"))
@@ -878,7 +871,7 @@ def sketch_kmv_set_operations(
         "ta", "tb", "n_u", "n_both", est_union.alias("est_union")
     )
     # exact anchors
-    # exact anchors ride the SAME checkpointed distinct frame the
+    # exact anchors ride the SAME staged distinct frame the
     # sketches were built from (one corpus dedup, not two)
     da = du.select(F.col("event_type").alias("ta"), "user_id")
     db = du.select(F.col("event_type").alias("tb"), "user_id")

@@ -265,7 +265,7 @@ def sim_ann_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan budget buys how much recall.
 
     Sweep discipline: the index is built ONCE (centroids trained
-    once, the corpus cell assignment localCheckpointed once — at
+    once, the corpus cell assignment staged once — at
     100 TB that corpus shuffle is the dominant cost and a naive
     sweep would repeat it per point); each sweep point re-probes only
     the 20-query side (tiny) and re-joins against the cached
@@ -297,7 +297,7 @@ def sim_ann_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell",
         )
         .withColumn("__cnorm", norm(F.col("__cvec")))
-        .localCheckpoint()  # the corpus shuffle happens ONCE
+        .transform(stage, "ivf_sweep_corpus")  # one corpus shuffle
     )
     cell_sizes = {
         r["cell"]: r["n"]
@@ -384,7 +384,7 @@ def sim_ann_lsh_operating_curve(
     The plateau recall is itself part of the emitted artifact.
 
     Same sweep discipline as the IVF curve: the corpus is hashed
-    ONCE (localCheckpointed); each point re-probes only the 20-query
+    ONCE (staged); each point re-probes only the 20-query
     side. Rows-only by design; contracts in tests/test_npipe9.py."""
     from etl_lens_spark.similarity import knn
     from etl_lens_spark.similarity.knn import (
@@ -410,7 +410,7 @@ def sim_ann_lsh_operating_curve(
         )
         .withColumn("__bucket", _srp_bits(F.col("__cvec"), planes))
         .withColumn("__cnorm", norm(F.col("__cvec")))
-        .localCheckpoint()  # hashed once for the whole sweep
+        .transform(stage, "srp_sweep_corpus")  # hashed once
     )
     sizes = {
         r["__bucket"]: r["n"]

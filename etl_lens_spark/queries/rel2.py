@@ -763,7 +763,7 @@ def recursive_cte_org_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_suppkey").alias("emp"),
             F.floor(F.col("s_suppkey") / 2).cast("long").alias("mgr"),
         )
-        .localCheckpoint(eager=True)
+        .transform(stage, "org_edges")
     )
     base = edges.select(
         "emp", F.col("mgr").alias("anc"), F.lit(1).cast("long").alias("depth")

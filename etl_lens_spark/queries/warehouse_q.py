@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from etl_lens_spark.queries import query
 from etl_lens_spark.sources.tables import load_table
-from etl_lens_spark.operators.staging import stage
+from etl_lens_spark.operators.staging import freeze, stage
 
 
 @query(
@@ -2436,7 +2436,7 @@ def events_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "p"
             ),
         )
-        .localCheckpoint(eager=True)
+        .transform(stage, "markov_edges")
     )
     v = None  # round 0: every non-absorbing state has v = 0
     for i in range(1, _MARKOV_ROUNDS + 1):
@@ -2467,7 +2467,7 @@ def events_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = (
             cur.groupBy("scenario", F.col("src").alias("state"))
             .agg(F.sum(F.col("p") * vdst).alias("v"))
-            .localCheckpoint(eager=True)
+            .transform(freeze, "bounded loop lineage")
         )
     base = v.filter(
         (F.col("scenario") == "full") & (F.col("state") == "start")

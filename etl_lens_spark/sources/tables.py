@@ -100,6 +100,10 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     hit = _FOOTER_SCHEMAS.get(real)
     if hit is not None and hit[0] == stamp:
         return spark.read.schema(hit[1]).parquet(path)
+    if hit is not None:
+        # the file changed: drop cached frames over the old bytes, or
+        # a persisted plan that matches would serve the stale rows
+        spark.catalog.refreshByPath(path)
     df = spark.read.parquet(path)
     _FOOTER_SCHEMAS[real] = (stamp, df.schema)
     return df

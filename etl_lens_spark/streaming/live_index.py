@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_lens_spark.operators.staging import freeze
+
 # The CDF → index-maintenance rule mapping every maintainer shares:
 # an upsert's postimage row is an insert of the new value and its
 # preimage a delete of the old one, so a maintainer that handles
@@ -63,13 +65,29 @@ def split_version_changes(
     return dels, ins
 
 
+def per_version_sink(apply_version):
+    """A ``foreachBatch`` sink that freezes each micro-batch (its frames
+    outlive the batch in the index state) and hands ``apply_version``
+    one commit version at a time, in commit order."""
+
+    def sink(batch_df, epoch_id):
+        b = freeze(batch_df, "outlives its batch")
+        versions = sorted(
+            r[0] for r in b.select("_commit_version").distinct().collect()
+        )
+        for v in versions:
+            apply_version(b.filter(F.col("_commit_version") == v))
+
+    return sink
+
+
 class LiveIndexState:
     """Ordered parts + tombstones with bounded plan depth.
 
     ``id_col`` is the index rows' key column; ``delete`` takes a
     one-column frame named ``gone_col``. Frames passed to ``append``
-    /``delete`` should already be localCheckpointed (the caller owns
-    epoch materialization so it can batch it with its other state).
+    /``delete`` should already be ``freeze``-d (the caller owns epoch
+    materialization so it can batch it with its other state).
     """
 
     def __init__(
@@ -118,7 +136,7 @@ class LiveIndexState:
         if len(self.events) > self.compact_every:
             view = self.view()
             self.events = (
-                [("part", view.localCheckpoint())]
+                [("part", freeze(view, "compaction truncates lineage"))]
                 if view is not None
                 else []
             )

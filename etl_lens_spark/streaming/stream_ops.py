@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_lens_spark.sources.tables import parquet_schema
+from etl_lens_spark.sources.tables import load_table, parquet_schema
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,7 +520,6 @@ def late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from etl_lens_spark.sources.sinks import scratch_path
-    from etl_lens_spark.sources.tables import load_table
 
     base = (
         load_table(spark, sf_dir, "events")
@@ -578,6 +577,19 @@ def late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def eviction_safe_cutoff_us(spark: SparkSession, sf_dir: str) -> int:
+    """max(events.ts) - 4h in epoch µs: the output cutoff the outer
+    attribution joins keep rows below (delay 2h + join window 1h +
+    1h slack). Read through ``load_table`` so both ``ts`` layouts
+    give the same instant."""
+    max_us = (
+        load_table(spark, sf_dir, "events")
+        .agg(F.max(F.unix_micros("ts")))
+        .collect()[0][0]
+    )
+    return max_us - 4 * 3600 * 1_000_000
+
+
 def attribution_join_left_outer(
     spark: SparkSession,
     sf_dir: str,
@@ -607,12 +619,7 @@ def attribution_join_left_outer(
     8 missing null rows that motivated this note.
     """
     ev = events_stream(spark, sf_dir)
-    max_us = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        .agg(F.max(F.unix_micros(F.col("ts").cast("timestamp"))))
-        .collect()[0][0]
-    )
-    cutoff_us = max_us - 4 * 3600 * 1_000_000
+    cutoff_us = eviction_safe_cutoff_us(spark, sf_dir)
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .select(
@@ -668,12 +675,7 @@ def attribution_join_full_outer(
     cutoff (max(ts) - 4h on both sides' timestamps), making the
     batch full-join oracle exact."""
     ev = events_stream(spark, sf_dir)
-    max_us = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        .agg(F.max(F.unix_micros(F.col("ts").cast("timestamp"))))
-        .collect()[0][0]
-    )
-    cutoff_us = max_us - 4 * 3600 * 1_000_000
+    cutoff_us = eviction_safe_cutoff_us(spark, sf_dir)
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .select(

@@ -251,12 +251,9 @@ def segment_dedup(
     # and the reassembly join — materialize the segmented corpus once
     # so tokenization + segment concat run a single pass (guide §5).
     # This is the one CORPUS-sized intermediate in the library, so it
-    # uses persist(MEMORY_AND_DISK), NOT localCheckpoint: persist
-    # keeps the lineage, so an executor loss at 100 TB recomputes the
-    # lost blocks instead of killing the job (localCheckpoint blocks
-    # are non-replicated and unrecoverable — ADVICE r11), and
-    # MEMORY_AND_DISK spills rather than OOMs. The alternative is
-    # re-tokenizing the corpus per consumer.
+    # is a managed persist(MEMORY_AND_DISK), not stage(): the lineage
+    # survives an executor loss whatever the stage mode, and
+    # MEMORY_AND_DISK spills rather than OOMs.
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
 
     exploded = base.select(

@@ -1,6 +1,7 @@
 """load_table's footer-schema memo: a repeat read of an unchanged file
-runs no Spark job, a rewritten file re-infers, and every call still
-returns its own DataFrame."""
+runs no Spark job, a rewritten file re-infers (and is not served from
+a frame cached over its old bytes), and every call still returns its
+own DataFrame."""
 
 import datetime as dt
 import functools
@@ -9,6 +10,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from etl_lens_spark.sources.tables import load_table
+from etl_lens_spark.streaming.stream_ops import eviction_safe_cutoff_us
 
 
 def _jobs_in(spark, group, fn):
@@ -69,6 +71,20 @@ def test_rewritten_part_in_table_dir_shows_new_column(spark, tmp_path):
     assert load().columns == ["r_regionkey", "r_extra"]
 
 
+def test_rewritten_file_is_not_served_from_a_persisted_frame(
+    spark, tmp_path
+):
+    path = tmp_path / "nation.parquet"
+    _write(path, n_nationkey=list(range(5)), n_name=list("ABCDE"))
+    cached = load_table(spark, str(tmp_path), "nation").persist()
+    try:
+        assert cached.count() == 5
+        _write(path, n_nationkey=[0, 1], n_name=["A", "B"])
+        assert load_table(spark, str(tmp_path), "nation").count() == 2
+    finally:
+        cached.unpersist()
+
+
 def test_two_loads_self_join(spark, sf_dir):
     a = load_table(spark, sf_dir, "nation")
     b = load_table(spark, sf_dir, "nation")
@@ -88,22 +104,31 @@ def test_two_loads_self_join(spark, sf_dir):
     assert sorted(tuple(r) for r in rows) == want
 
 
-def test_events_ts_ns_and_us_layouts_load_alike(spark, tmp_path):
+def _events_layouts(tmp_path):
+    """The same five events written once per ``ts`` layout (ns with a
+    sub-µs remainder the load floors away, and plain µs). Returns
+    {unit: table dir} and the expected µs instants."""
     base = dt.datetime(2024, 3, 1, 12, 0, 0)
     us = [base + dt.timedelta(microseconds=k * 1_000_003) for k in range(5)]
-    # the ns layout carries a sub-µs remainder that the load floors away
     ns = pa.array(
         [_epoch_us(t) * 1000 + 999 for t in us],
         pa.timestamp("ns"),
     )
-    layouts = {"ns": ns, "us": pa.array(us, pa.timestamp("us"))}
-    got = {}
-    for unit, ts in layouts.items():
+    dirs = {}
+    for unit, ts in {"ns": ns, "us": pa.array(us, pa.timestamp("us"))}.items():
         d = tmp_path / unit
         d.mkdir()
         _write(d / "events.parquet", event_id=list(range(5)), ts=ts)
+        dirs[unit] = str(d)
+    return dirs, [_epoch_us(t) for t in us]
+
+
+def test_events_ts_ns_and_us_layouts_load_alike(spark, tmp_path):
+    dirs, want_us = _events_layouts(tmp_path)
+    got = {}
+    for unit, d in dirs.items():
         for call in ("first", "second"):
-            df = load_table(spark, str(d), "events")
+            df = load_table(spark, d, "events")
             assert dict(df.dtypes)["ts"] == "timestamp", (unit, call)
             got[unit, call] = sorted(
                 (r.event_id, r.ts_us)
@@ -111,5 +136,12 @@ def test_events_ts_ns_and_us_layouts_load_alike(spark, tmp_path):
                     "event_id", "unix_micros(ts) AS ts_us"
                 ).collect()
             )
-    want = sorted((i, _epoch_us(t)) for i, t in enumerate(us))
+    want = sorted(enumerate(want_us))
     assert all(v == want for v in got.values()), got
+
+
+def test_watermark_cutoff_same_for_both_ts_layouts(spark, tmp_path):
+    dirs, want_us = _events_layouts(tmp_path)
+    want = max(want_us) - 4 * 3600 * 1_000_000
+    got = {u: eviction_safe_cutoff_us(spark, d) for u, d in dirs.items()}
+    assert got == {"ns": want, "us": want}

@@ -10,6 +10,7 @@ and value hash. Use while iterating: ``python tools/oracle_check.py
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import os
 import sys
@@ -93,17 +94,18 @@ def main(names):
     from etl_lens_spark import TABLE_NAMES, get_spark
     from etl_lens_spark.queries import REGISTRY, _load
 
-    json_out = None
-    if "--json" in names:
-        i = names.index("--json")
-        if i + 1 >= len(names):
-            print("usage: oracle_check.py [--json FILE] [query ...]")
-            return 2
-        json_out = names[i + 1]
-        names = names[:i] + names[i + 2 :]
+    ap = argparse.ArgumentParser(prog="oracle_check.py")
+    ap.add_argument("--json", metavar="FILE")
+    ap.add_argument("--conf", action="append", default=[], metavar="KEY=VALUE")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_intermixed_args(names)
+    if any("=" not in c for c in args.conf):
+        ap.error("--conf takes key=value")
+    conf = dict(c.split("=", 1) for c in args.conf)
+    json_out, names = args.json, args.queries
 
     _load()
-    spark = get_spark(shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8, extra_conf=conf)
 
     con = duckdb.connect()
     for t in TABLE_NAMES:
@@ -204,6 +206,7 @@ def main(names):
             json.dump(
                 {
                     "sf_dir": SF_DIR,
+                    "conf": conf,
                     "n_pass": n_pass,
                     "n_fail": n_fail,
                     "n_rows_only": n_skip,
