@@ -10,7 +10,12 @@ On-disk layout of a table directory:
   ``txn``, the metadata families ``metaData`` / ``columnMapping`` /
   ``partitionSpec`` / ``constraint`` / ``dropConstraint``, ``cdc``,
   and markers (``op``, ``wap``, ``restore``, ``gdprPurge``).
-  Created with O_EXCL; read only through ``commit_actions``.
+  Created with O_EXCL; read only through ``commit_actions``. Every
+  add that a DML writer (``merge_upsert``, ``delete_where``,
+  ``apply_cdc``, ``optimize_compact``,
+  ``materialize_deletion_vectors``) makes for a rel it just wrote
+  carries ``num_records``, read from the written parquet footers, so
+  ``optimize_compact`` sizes those files from the log with no scan.
 - ``_log/{v:08d}.checkpoint.json`` — the folded state at ``v``: the
   active ``add`` actions in first-added order, then
   ``{"txns": {appId: version}}`` when any app committed one, then
@@ -570,6 +575,32 @@ def _next_version(table_dir: str) -> int:
     return latest_version(table_dir) + 1
 
 
+def _written_add(table_dir: str, rel: str, **extra) -> dict:
+    """The add action for a rel this writer just wrote, carrying its
+    ``num_records`` from the written files' parquet footers — no Spark
+    job — so OPTIMIZE sizes it from the log instead of scanning it."""
+    import pyarrow.parquet as pq
+
+    n = sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in _list_parquet_files(os.path.join(table_dir, rel))
+    )
+    return {"add": rel, "num_records": n, **extra}
+
+
+def _adds_unless_empty(table_dir: str, rel: str) -> list[dict]:
+    """``[add]`` for a rewrite rel just written, or ``[]`` with the rel
+    removed when it holds no rows — a rewrite whose every row was
+    deleted leaves no empty-file litter."""
+    add = _written_add(table_dir, rel)
+    if add["num_records"]:
+        return [add]
+    import shutil
+
+    shutil.rmtree(os.path.join(table_dir, rel))
+    return []
+
+
 def _write_cdc(
     spark: SparkSession,
     table_dir: str,
@@ -657,7 +688,7 @@ def merge_upsert(
             os.path.join(table_dir, rewrite_rel)
         )
         actions += [{"remove": f} for f in touched]
-        actions.append({"add": rewrite_rel})
+        actions.append(_written_add(table_dir, rewrite_rel))
         if cdf:
             pre = spark.read.parquet(*touched_paths).join(
                 F.broadcast(keys), key_cols, "left_semi"
@@ -682,7 +713,7 @@ def merge_upsert(
         source.write.mode("overwrite").parquet(
             os.path.join(table_dir, insert_rel)
         )
-        actions.append({"add": insert_rel})
+        actions.append(_written_add(table_dir, insert_rel))
         if cdf:
             actions.append(
                 _write_cdc(
@@ -731,13 +762,13 @@ def delete_where(
     if touched:
         touched_paths = [os.path.join(table_dir, f) for f in touched]
         survivors = spark.read.parquet(*touched_paths).filter(~condition)
-        if survivors.limit(1).count() > 0:
-            rewrite_rel = f"delete_{version:08d}"
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(table_dir, rewrite_rel)
-            )
-            actions.append({"add": rewrite_rel})
-            n_rewritten = 1
+        rewrite_rel = f"delete_{version:08d}"
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(table_dir, rewrite_rel)
+        )
+        adds = _adds_unless_empty(table_dir, rewrite_rel)
+        actions += adds
+        n_rewritten = len(adds)
         if cdf:
             deleted = (
                 spark.read.parquet(*touched_paths)
@@ -980,11 +1011,10 @@ def apply_cdc(
         out = survivors.unionByName(upserts)
     else:
         out = upserts
-    if out.limit(1).count() > 0:
-        out.write.mode("overwrite").parquet(
-            os.path.join(table_dir, rewrite_rel)
-        )
-        actions.append({"add": rewrite_rel})
+    out.write.mode("overwrite").parquet(
+        os.path.join(table_dir, rewrite_rel)
+    )
+    actions += _adds_unless_empty(table_dir, rewrite_rel)
     if cdf:
         ct = "_change_type"
         up_keys = changes.filter(F.col(op_col) != "D").select(
@@ -1202,16 +1232,11 @@ def optimize_compact(
     df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(table_dir, rel)
     )
-    add: dict = {"add": rel, "data_change": False}
-    if all(a.get("num_records") is not None for a in small_active.values()):
-        add["num_records"] = sum(
-            int(a["num_records"]) - int(a.get("dv_count", 0))
-            for a in small_active.values()
-        )
     commit(
         table_dir,
         version,
-        [{"remove": r, "data_change": False} for r in small] + [add],
+        [{"remove": r, "data_change": False} for r in small]
+        + [_written_add(table_dir, rel, data_change=False)],
     )
     return {
         "n_files_compacted": len(small),
@@ -2210,7 +2235,9 @@ def materialize_deletion_vectors(
     actions: list[dict] = [
         {"remove": r, "data_change": False} for r in dvd
     ]
-    actions.append({"add": rewrite_rel, "data_change": False})
+    actions.append(
+        _written_add(table_dir, rewrite_rel, data_change=False)
+    )
     commit(table_dir, version, actions)
     return {"version": version, "n_files_rewritten": len(dvd)}
 

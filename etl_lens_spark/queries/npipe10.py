@@ -980,7 +980,7 @@ def lake_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     s0 AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS live
-      FROM v0 WHERE k % 2 = 0 AND k % 20 <> 4
+      FROM v0 WHERE k % 20 <> 4
     )
     SELECT CAST(version AS INT) AS version,
            operation,
@@ -990,7 +990,7 @@ def lake_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
            has_cdc,
            CAST(2 AS INT) AS n_active_files,
            s0.live AS live_known_rows,
-           CAST(1 AS INT) AS n_files_unknown_stats
+           CAST(0 AS INT) AS n_files_unknown_stats
     FROM h CROSS JOIN s0
     ORDER BY version
     """,
@@ -1010,9 +1010,10 @@ def lake_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     live rows among stats-carrying files computed as num_records
     MINUS dv_count straight from the log (zero parquet opens; the
     same numbers the zero-job OPTIMIZE sizing reads), and the count
-    of files whose writer recorded no stats (the merge rewrite,
-    sentinel -1). The oracle pins history structurally (the DML
-    sequence fixes it) and live_known_rows relationally.
+    of files whose writer recorded no stats (sentinel -1; none here,
+    since the merge rewrite records ``num_records`` from its footers).
+    The oracle pins history structurally (the DML sequence fixes it)
+    and live_known_rows relationally.
 
     100 TB posture: both tables are pure driver-side log replay —
     O(commits) and O(active files) metadata with zero data reads,

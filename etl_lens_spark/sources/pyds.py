@@ -218,34 +218,113 @@ class JsonLinesSinkDataSource(DataSource):
 # (downstream aggregations, CDC appliers, index maintainers) tail a
 # lakehouse table without re-scanning it — the streaming dual of
 # lakelog.change_feed's batch diff.
+#
+# Both lake-log readers plan a micro-batch as physical-file slices and
+# pack them into at most one partition per usable core, balanced by
+# file bytes; a task reads its slices with pyarrow and yields Arrow
+# record batches cast to the declared schema — no per-row Python.
 # ---------------------------------------------------------------------------
 
 
-def _ddl_column_names(ddl: str) -> list[str]:
-    """Column names from a DDL string, splitting on TOP-LEVEL commas
-    only — ``decimal(18,2)`` / ``map<string,int>`` / ``struct<...>``
-    carry commas inside their type parameters that a naive
-    ``split(',')`` would turn into phantom columns (round-8 review
-    fix)."""
-    cols, depth, cur = [], 0, []
-    for ch in ddl:
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            cols.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    cols.append("".join(cur))
-    return [c.strip().split()[0] for c in cols if c.strip()]
+class _FileSlice:
+    """One physical parquet file of a micro-batch and what to emit from
+    it. ``change_type`` is the literal ``_change_type`` of its rows;
+    ``None`` means a cdc record that carries its own (or, in the plain
+    lake stream, no change columns at all). ``take`` keeps only the
+    listed row positions (deletion-vector-derived deletes); ``drop``
+    removes them (rows already dead when their file was removed)."""
 
-
-class _RelSlice(InputPartition):
-    def __init__(self, path: str, columns: list[str]):
+    def __init__(self, path, version, change_type=None, take=None,
+                 drop=()):
         self.path = path
-        self.columns = columns
+        self.version = version
+        self.change_type = change_type
+        self.take = take
+        self.drop = drop
+
+
+class _PackedSlices(InputPartition):
+    """One Spark task's share of a micro-batch's file slices."""
+
+    def __init__(self, slices: list[_FileSlice]):
+        self.slices = slices
+
+
+def _pack(slices: list[_FileSlice]) -> list[_PackedSlices]:
+    """Pack slices into at most ``len(os.sched_getaffinity(0))``
+    partitions balanced by file bytes: the largest file goes first onto
+    the lightest partition. Every Python task costs a worker round trip
+    however small its file, so one task per file (a typical
+    change-feed drain has dozens of few-row files) paid that cost per
+    file. Within a partition the slices keep their planned order."""
+    import heapq
+    import os
+
+    if not slices:
+        return []
+    sizes = [os.path.getsize(s.path) for s in slices]
+    n = min(len(slices), len(os.sched_getaffinity(0)))
+    loads = [(0, i) for i in range(n)]
+    bins: list[list[int]] = [[] for _ in range(n)]
+    for j in sorted(range(len(slices)), key=lambda j: -sizes[j]):
+        load, i = heapq.heappop(loads)
+        bins[i].append(j)
+        heapq.heappush(loads, (load + sizes[j], i))
+    return [_PackedSlices([slices[j] for j in sorted(b)]) for b in bins]
+
+
+def _conform(col, typ):
+    """Cast one column to the Arrow type of its declared Spark type.
+    Spark checks only the first batch's column count and names, so a
+    type mismatch would otherwise reach the engine unnoticed.
+    Nanosecond timestamps are floored to µs (Spark holds µs; the same
+    rule ``load_table`` applies to ``events.ts``); a naive value read
+    as ``timestamp`` is taken as UTC, the session time zone."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if (
+        pa.types.is_timestamp(col.type)
+        and col.type.unit == "ns"
+        and pa.types.is_timestamp(typ)
+    ):
+        col = pc.floor_temporal(col, unit="microsecond")
+    return col.cast(typ)
+
+
+def _slice_batches(s: _FileSlice, target, cdf: bool):
+    """The record batches of one slice, in the ``target`` Arrow schema:
+    the data columns, then (``cdf``) ``_change_type`` and
+    ``_commit_version``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = target.names[:-2] if cdf else target.names
+    own_type = cdf and s.change_type is None
+    t = pq.read_table(
+        s.path, columns=cols + ["_change_type"] if own_type else cols
+    )
+    if s.take is not None:
+        t = t.take(s.take)
+    if s.drop:
+        keep = np.ones(t.num_rows, dtype=bool)
+        keep[s.drop] = False
+        t = t.filter(keep)
+    if cdf:
+        if not own_type:
+            t = t.append_column(
+                "_change_type", pa.repeat(s.change_type, t.num_rows)
+            )
+        t = t.append_column(
+            "_commit_version",
+            pa.repeat(pa.scalar(s.version, pa.int64()), t.num_rows),
+        )
+    t = pa.Table.from_arrays(
+        [_conform(t.column(f.name), f.type) for f in target],
+        schema=target,
+    )
+    yield from t.to_batches()
 
 
 class LakeLogStreamReader(DataSourceStreamReader):
@@ -288,12 +367,21 @@ class LakeLogStreamReader(DataSourceStreamReader):
     ignoreChanges caveat: rewritten rows may re-emit); data-
     preserving commits (``data_change: false`` — OPTIMIZE) never
     emit and never raise; deletion-vector actions always raise.
-    Executors read the added files with pyarrow directly — no
-    driver fan-in."""
 
-    def __init__(self, options):
+    Reading: ``partitions`` plans one slice per physical parquet file
+    of the range's adds and packs the slices into at most
+    ``len(os.sched_getaffinity(0))`` partitions balanced by file bytes
+    (one Spark task each). ``read`` yields pyarrow record batches cast
+    to the declared schema — the one Spark passes to ``streamReader``
+    — so values reach Spark typed; nanosecond timestamps are floored
+    to µs and naive ones read as UTC (see ``_conform``). Executors
+    read the files directly — no driver fan-in."""
+
+    _CDF = False  # append _change_type / _commit_version columns
+
+    def __init__(self, options, schema):
         self.table_dir = options["path"]
-        self.columns = _ddl_column_names(options["schema_ddl"])
+        self.schema = schema
         self.ignore_changes = (
             str(options.get("ignore_changes", "false")).lower() == "true"
         )
@@ -330,61 +418,64 @@ class LakeLogStreamReader(DataSourceStreamReader):
         return {"version": self._pos}
 
     def partitions(self, start, end):
-        import os as _os
-
-        from etl_lens_spark.operators import lakelog
-
         s, e = int(start["version"]), int(end["version"])
         # clamp the pacing cursor to observed progress: an
         # uncommitted-batch replay after restart re-anchors here
         self._pos = max(self._pos if self._pos is not None else -1, s, e)
-        slices = []
+        slices: list[_FileSlice] = []
         for v in range(s + 1, e + 1):
-            actions = lakelog.commit_actions(self.table_dir, v)
-            if actions and all(
-                a.get("data_change") is False
-                for a in actions
-                if "add" in a or "remove" in a
-            ):
-                # a data-preserving commit (OPTIMIZE compaction /
-                # re-clustering) rearranges bytes without changing
-                # the logical table: nothing to emit, nothing to
-                # violate — exactly Delta's dataChange=false rule
-                continue
-            for a in actions:
-                if a.get("dv"):
-                    raise ValueError(
-                        f"commit {v} attached a deletion vector — "
-                        "not an append; stream from a materialized "
-                        "table"
-                    )
-                if "remove" in a and not self.ignore_changes:
-                    raise ValueError(
-                        f"commit {v} removed {a['remove']!r}: the "
-                        "streamed range must be append-only (set "
-                        "ignore_changes=true to accept Delta's "
-                        "ignoreChanges caveat)"
-                    )
-            slices.extend(
-                _RelSlice(
-                    _os.path.join(self.table_dir, a["add"]),
-                    self.columns,
+            slices.extend(self._commit_slices(v))
+        return _pack(slices)
+
+    def _commit_slices(self, v: int) -> list[_FileSlice]:
+        import os
+
+        from etl_lens_spark.operators import lakelog
+
+        actions = lakelog.commit_actions(self.table_dir, v)
+        if actions and all(
+            a.get("data_change") is False
+            for a in actions
+            if "add" in a or "remove" in a
+        ):
+            # a data-preserving commit (OPTIMIZE compaction /
+            # re-clustering) rearranges bytes without changing the
+            # logical table: nothing to emit, nothing to violate —
+            # exactly Delta's dataChange=false rule
+            return []
+        for a in actions:
+            if a.get("dv"):
+                raise ValueError(
+                    f"commit {v} attached a deletion vector — not an "
+                    "append; stream from a materialized table"
                 )
-                for a in actions
-                if "add" in a
-            )
+            if "remove" in a and not self.ignore_changes:
+                raise ValueError(
+                    f"commit {v} removed {a['remove']!r}: the "
+                    "streamed range must be append-only (set "
+                    "ignore_changes=true to accept Delta's "
+                    "ignoreChanges caveat)"
+                )
+        slices = []
+        for a in actions:
+            if "add" in a:
+                full = os.path.join(self.table_dir, a["add"])
+                if not os.path.exists(full):
+                    raise ValueError(
+                        f"commit {v}'s data {a['add']!r} is missing"
+                    )
+                slices.extend(
+                    _FileSlice(p, v)
+                    for p in lakelog._list_parquet_files(full)
+                )
         return slices
 
     def read(self, partition):
-        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        table = pq.read_table(
-            partition.path, columns=partition.columns
-        )
-        for batch in table.to_batches():
-            cols = [batch.column(i) for i in range(batch.num_columns)]
-            for i in range(batch.num_rows):
-                yield tuple(c[i].as_py() for c in cols)
+        target = to_arrow_schema(self.schema)
+        for s in partition.slices:
+            yield from _slice_batches(s, target, self._CDF)
 
     def commit(self, end):
         pass
@@ -403,7 +494,7 @@ class LakeLogStreamDataSource(DataSource):
         return self.options["schema_ddl"]
 
     def streamReader(self, schema):
-        return LakeLogStreamReader(self.options)
+        return LakeLogStreamReader(self.options, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -425,79 +516,39 @@ class LakeLogStreamDataSource(DataSource):
 # ---------------------------------------------------------------------------
 
 
-class _CdfFileSlice(InputPartition):
-    """Whole-file emission: change_type None → the file carries its
-    own _change_type column (a cdc record); else the literal type."""
-
-    def __init__(self, path, columns, change_type, version,
-                 exclude_positions=None):
-        self.path = path
-        self.columns = columns
-        self.change_type = change_type
-        self.version = version
-        self.exclude_positions = exclude_positions or []
-
-
-class _CdfPositionsSlice(InputPartition):
-    """Emit only the listed row positions of one physical file
-    (deletion-vector-derived deletes)."""
-
-    def __init__(self, path, positions, columns, version):
-        self.path = path
-        self.positions = positions
-        self.columns = columns
-        self.version = version
-
-
 class LakeLogCDFStreamReader(LakeLogStreamReader):
-    def partitions(self, start, end):
+    """Same offsets, pacing, packing and Arrow reads as
+    LakeLogStreamReader; the slices come from
+    ``lakelog.commit_change_plan`` and every batch carries
+    ``_change_type`` and ``_commit_version``.
+
+    Timestamps: the stream casts to the declared type, so a file of
+    nanosecond timestamps streamed as ``timestamp`` / ``timestamp_ntz``
+    yields the values floored to µs. ``table_changes`` reads the same
+    file through Spark's parquet reader, which returns such a column
+    as ``bigint`` nanoseconds under
+    ``spark.sql.legacy.parquet.nanosAsLong`` (set by ``get_spark``,
+    and by ``load_table`` when it reads ``events``); µs files agree
+    with it exactly."""
+
+    _CDF = True
+
+    def _commit_slices(self, v: int) -> list[_FileSlice]:
         from etl_lens_spark.operators import lakelog
 
-        s, e = int(start["version"]), int(end["version"])
-        self._pos = max(self._pos if self._pos is not None else -1, s, e)
-        slices: list[InputPartition] = []
-        for v in range(s + 1, e + 1):
-            plan = lakelog.commit_change_plan(self.table_dir, v)
-            for p in plan["cdc_files"]:
-                slices.append(
-                    _CdfFileSlice(p, self.columns, None, v)
-                )
-            for p in plan["insert_files"]:
-                slices.append(
-                    _CdfFileSlice(p, self.columns, "insert", v)
-                )
-            for p, exclude in plan["delete_files"]:
-                slices.append(
-                    _CdfFileSlice(p, self.columns, "delete", v, exclude)
-                )
-            for p, positions in plan["position_deletes"]:
-                slices.append(
-                    _CdfPositionsSlice(p, positions, self.columns, v)
-                )
-        return slices
-
-    def read(self, partition):
-        import pyarrow.parquet as pq
-
-        if isinstance(partition, _CdfPositionsSlice):
-            table = pq.read_table(
-                partition.path, columns=partition.columns
-            ).take(partition.positions)
-            for row in zip(*[c.to_pylist() for c in table.columns]):
-                yield (*row, "delete", partition.version)
-            return
-        cdc = partition.change_type is None
-        cols = partition.columns + (["_change_type"] if cdc else [])
-        table = pq.read_table(partition.path, columns=cols)
-        exclude = set(partition.exclude_positions)
-        data = [c.to_pylist() for c in table.columns]
-        for i, row in enumerate(zip(*data)):
-            if i in exclude:
-                continue
-            if cdc:
-                yield (*row[:-1], row[-1], partition.version)
-            else:
-                yield (*row, partition.change_type, partition.version)
+        plan = lakelog.commit_change_plan(self.table_dir, v)
+        return (
+            [_FileSlice(p, v) for p in plan["cdc_files"]]
+            + [_FileSlice(p, v, "insert") for p in plan["insert_files"]]
+            + [
+                _FileSlice(p, v, "delete", drop=exclude)
+                for p, exclude in plan["delete_files"]
+            ]
+            + [
+                _FileSlice(p, v, "delete", take=positions)
+                for p, positions in plan["position_deletes"]
+            ]
+        )
 
 
 class LakeLogCDFStreamDataSource(DataSource):
@@ -517,4 +568,4 @@ class LakeLogCDFStreamDataSource(DataSource):
         )
 
     def streamReader(self, schema):
-        return LakeLogCDFStreamReader(self.options)
+        return LakeLogCDFStreamReader(self.options, schema)

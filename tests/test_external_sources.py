@@ -181,6 +181,35 @@ def test_synth_events_empty_relation_n_rows_zero(spark):
     assert df.columns == ["rid", "h", "category", "score"]
 
 
+def _lake_reader(spark, source, **options):
+    """A lake-log stream reader built the way Spark builds one: from
+    its DataSource, given the parsed declared schema."""
+    ds = source(options)
+    return ds.streamReader(spark.createDataFrame([], ds.schema()).schema)
+
+
+def _read_rows(reader, parts):
+    """Every row the reader's Arrow batches carry for ``parts``, as
+    tuples."""
+    return [
+        tuple(row.values())
+        for p in parts
+        for batch in reader.read(p)
+        for row in batch.to_pylist()
+    ]
+
+
+def _slice_rels(parts):
+    """The add rel (parent directory) of each packed file slice."""
+    import os
+
+    return sorted(
+        os.path.basename(os.path.dirname(s.path))
+        for p in parts
+        for s in p.slices
+    )
+
+
 def _mk_lake(spark, base):
     from etl_lens_spark.operators import lakelog
 
@@ -199,12 +228,13 @@ def test_lakelog_stream_reader_offset_contract(spark, tmp_path):
     per latestOffset call and stop at head; partitions(start, end]
     yields exactly that range's added files; read() returns their
     rows via pyarrow."""
-    from etl_lens_spark.sources.pyds import LakeLogStreamReader
+    from etl_lens_spark.sources.pyds import LakeLogStreamDataSource
 
     base = str(tmp_path / "t")
     _mk_lake(spark, base)
-    r = LakeLogStreamReader(
-        {"path": base, "schema_ddl": "k long, tag string"}
+    r = _lake_reader(
+        spark, LakeLogStreamDataSource, path=base,
+        schema_ddl="k long, tag string",
     )
     assert r.initialOffset() == {"version": -1}
     # one commit per micro-batch, clamped at head
@@ -212,12 +242,12 @@ def test_lakelog_stream_reader_offset_contract(spark, tmp_path):
         0, 1, 2, 2, 2,
     ]
     parts = r.partitions({"version": -1}, {"version": 0})
-    assert len(parts) == 1 and parts[0].path.endswith("b0")
-    rows = sorted(r.read(parts[0]))
+    assert len(parts) == 1 and _slice_rels(parts) == ["b0"]
+    rows = sorted(_read_rows(r, parts))
     assert rows == [(0, "v0"), (1, "v0"), (2, "v0")]
     # restart-safety: an uncommitted multi-version range re-plans
     parts = r.partitions({"version": 0}, {"version": 2})
-    assert sorted(p.path[-2:] for p in parts) == ["b1", "b2"]
+    assert _slice_rels(parts) == ["b1", "b2"]
     assert r.partitions({"version": 2}, {"version": 2}) == []
 
 
@@ -233,19 +263,20 @@ def test_lakelog_stream_reader_append_only_contract(spark, tmp_path):
     lakelog.commit(base, 3, [{"remove": "b0"}, {"add": "b3x"}])
     spark.createDataFrame([(99, "x")], "k long, tag string")\
         .coalesce(1).write.parquet(f"{base}/b3x")
-    from etl_lens_spark.sources.pyds import LakeLogStreamReader
+    from etl_lens_spark.sources.pyds import LakeLogStreamDataSource
 
-    r = LakeLogStreamReader(
-        {"path": base, "schema_ddl": "k long, tag string"}
+    r = _lake_reader(
+        spark, LakeLogStreamDataSource, path=base,
+        schema_ddl="k long, tag string",
     )
     with _pytest.raises(ValueError, match="append-only"):
         r.partitions({"version": 2}, {"version": 3})
-    r2 = LakeLogStreamReader(
-        {"path": base, "schema_ddl": "k long, tag string",
-         "ignore_changes": "true"}
+    r2 = _lake_reader(
+        spark, LakeLogStreamDataSource, path=base,
+        schema_ddl="k long, tag string", ignore_changes="true",
     )
     parts = r2.partitions({"version": 2}, {"version": 3})
-    assert [p.path[-3:] for p in parts] == ["b3x"]
+    assert _slice_rels(parts) == ["b3x"]
     # a deletion-vector commit is never streamable
     lakelog.delete_where_mor(spark, base, F.col("k") == 11)
     with _pytest.raises(ValueError, match="deletion vector"):
@@ -258,44 +289,47 @@ def test_lakelog_stream_restart_safety_and_pacing(spark, tmp_path):
     latest offset below committed progress; its first answer is head.
     A FRESH reader (initialOffset called) paces one commit per batch
     as before, and max_commits_per_batch widens the stride."""
-    from etl_lens_spark.sources.pyds import LakeLogStreamReader
+    from etl_lens_spark.sources.pyds import LakeLogStreamDataSource
 
     base = str(tmp_path / "t")
     _mk_lake(spark, base)  # commits 0..2
     opts = {"path": base, "schema_ddl": "k long, tag string"}
 
+    def make_reader(options):
+        return _lake_reader(spark, LakeLogStreamDataSource, **options)
+
     # restarted reader, fully-committed checkpoint at version 1:
     # latestOffset fires FIRST and must jump to head (2), never 0
-    r = LakeLogStreamReader(opts)
+    r = make_reader(opts)
     assert r.latestOffset() == {"version": 2}
-    assert [p.path[-2:] for p in r.partitions(
-        {"version": 1}, {"version": 2})] == ["b2"]
+    assert _slice_rels(r.partitions(
+        {"version": 1}, {"version": 2})) == ["b2"]
 
     # restarted reader, uncommitted last batch: Spark replays it via
     # partitions(logged start, logged end) BEFORE any latestOffset —
     # the cursor re-anchors there and pacing resumes without regress
-    r2 = LakeLogStreamReader(opts)
+    r2 = make_reader(opts)
     r2.partitions({"version": 1}, {"version": 2})
     assert r2.latestOffset() == {"version": 2}  # head; no regress
 
     # fresh reader paces 1/batch (the original pinned contract)
-    r3 = LakeLogStreamReader(opts)
+    r3 = make_reader(opts)
     assert r3.initialOffset() == {"version": -1}
     assert [r3.latestOffset()["version"] for _ in range(4)] == [
         0, 1, 2, 2,
     ]
 
     # max_commits_per_batch strides the backlog
-    r4 = LakeLogStreamReader({**opts, "max_commits_per_batch": "2"})
+    r4 = make_reader({**opts, "max_commits_per_batch": "2"})
     assert r4.initialOffset() == {"version": -1}
     assert [r4.latestOffset()["version"] for _ in range(3)] == [1, 2, 2]
     parts = r4.partitions({"version": -1}, {"version": 1})
-    assert sorted(p.path[-2:] for p in parts) == ["b0", "b1"]
+    assert _slice_rels(parts) == ["b0", "b1"]
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="max_commits_per_batch"):
-        LakeLogStreamReader({**opts, "max_commits_per_batch": "0"})
+        make_reader({**opts, "max_commits_per_batch": "0"})
 
 
 def test_lakelog_stream_skips_data_change_false(spark, tmp_path):
@@ -303,14 +337,15 @@ def test_lakelog_stream_skips_data_change_false(spark, tmp_path):
     is a pure layout change: the streaming source emits nothing for
     it and does NOT raise the append-only error."""
     from etl_lens_spark.operators import lakelog
-    from etl_lens_spark.sources.pyds import LakeLogStreamReader
+    from etl_lens_spark.sources.pyds import LakeLogStreamDataSource
 
     base = str(tmp_path / "t")
     _mk_lake(spark, base)  # commits 0..2, files b0..b2
     st = lakelog.optimize_compact(spark, base)  # commit 3
     assert st["version"] == 3
-    r = LakeLogStreamReader(
-        {"path": base, "schema_ddl": "k long, tag string"}
+    r = _lake_reader(
+        spark, LakeLogStreamDataSource, path=base,
+        schema_ddl="k long, tag string",
     )
     assert r.partitions({"version": 2}, {"version": 3}) == []
     # a real append after the compaction still emits
@@ -318,7 +353,7 @@ def test_lakelog_stream_skips_data_change_false(spark, tmp_path):
         .coalesce(1).write.parquet(f"{base}/b4")
     lakelog.commit(base, 4, [{"add": "b4"}])
     parts = r.partitions({"version": 3}, {"version": 4})
-    assert [p.path[-2:] for p in parts] == ["b4"]
+    assert _slice_rels(parts) == ["b4"]
 
 
 def test_lakelog_cdf_stream_matches_batch(spark, tmp_path):
@@ -330,7 +365,10 @@ def test_lakelog_cdf_stream_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from etl_lens_spark.operators import lakelog
-    from etl_lens_spark.sources.pyds import LakeLogCDFStreamReader
+    from etl_lens_spark.sources.pyds import LakeLogCDFStreamDataSource
+
+    def make_reader(options):
+        return _lake_reader(spark, LakeLogCDFStreamDataSource, **options)
 
     base = str(tmp_path / "t")
     spark.createDataFrame(
@@ -345,11 +383,11 @@ def test_lakelog_cdf_stream_matches_batch(spark, tmp_path):
     lakelog.delete_where_mor(spark, base, F.col("k").isin(2, 3))
     head = lakelog.latest_version(base)
 
-    r = LakeLogCDFStreamReader(
+    r = make_reader(
         {"path": base, "schema_ddl": "k long, c long"}
     )
     parts = r.partitions({"version": -1}, {"version": head})
-    got = sorted(t for p in parts for t in r.read(p))
+    got = sorted(_read_rows(r, parts))
     want = sorted(
         (x.k, x.c, x._change_type, x._commit_version)
         for x in lakelog.table_changes(spark, base, -1, head).collect()
@@ -357,11 +395,11 @@ def test_lakelog_cdf_stream_matches_batch(spark, tmp_path):
     assert got == want
     assert (2, 20, "delete", 2) in got and (1, 10, "update_preimage", 1) in got
     # per-commit pacing and restart clamp inherited
-    r2 = LakeLogCDFStreamReader(
+    r2 = make_reader(
         {"path": base, "schema_ddl": "k long, c long"}
     )
     assert r2.latestOffset() == {"version": head}  # restart-safe jump
-    r3 = LakeLogCDFStreamReader(
+    r3 = make_reader(
         {"path": base, "schema_ddl": "k long, c long"}
     )
     r3.initialOffset()
@@ -383,7 +421,10 @@ def test_lakelog_cdf_stream_starting_version_after_retention(
     from pyspark.sql import functions as F
 
     from etl_lens_spark.operators import lakelog
-    from etl_lens_spark.sources.pyds import LakeLogCDFStreamReader
+    from etl_lens_spark.sources.pyds import LakeLogCDFStreamDataSource
+
+    def make_reader(options):
+        return _lake_reader(spark, LakeLogCDFStreamDataSource, **options)
 
     base = str(tmp_path / "sv")
     spark.createDataFrame(
@@ -401,29 +442,50 @@ def test_lakelog_cdf_stream_starting_version_after_retention(
     lakelog.vacuum(base, retain_versions=3, cdf_retain_versions=1)
     head = lakelog.latest_version(base)  # 3; records v1 reclaimed
     opts = {"path": base, "schema_ddl": "k long, c long"}
-    fresh = LakeLogCDFStreamReader(opts)
+    fresh = make_reader(opts)
     assert fresh.initialOffset() == {"version": -1}
     with pytest.raises(ValueError, match="reclaimed by CDF retention"):
         fresh.partitions({"version": -1}, {"version": head})
-    above = LakeLogCDFStreamReader({**opts, "starting_version": 1})
+    above = make_reader({**opts, "starting_version": 1})
     start = above.initialOffset()
     assert start == {"version": 1}
     parts = above.partitions(start, {"version": head})
-    got = sorted(t for p in parts for t in above.read(p))
+    got = sorted(_read_rows(above, parts))
     assert {t[3] for t in got} == {2, 3}  # commits above the horizon
     assert (2, 200, "update_postimage", 2) in got
 
 
-def test_ddl_column_names_handles_parametrized_types():
+def test_ddl_column_names_handles_parametrized_types(spark, tmp_path):
     """Round-8 review fix: top-level-comma splitting — decimal/map/
-    struct type parameters must not become phantom columns."""
-    from etl_lens_spark.sources.pyds import _ddl_column_names
+    struct type parameters must not become phantom columns. The
+    reader now takes its columns from the parsed declared schema, and
+    its Arrow batches carry these types through."""
+    import decimal
 
-    assert _ddl_column_names(
+    from etl_lens_spark.operators import lakelog
+    from etl_lens_spark.sources.pyds import LakeLogStreamDataSource
+
+    ddl = (
         "k long, price decimal(18,2), m map<string,int>, "
         "s struct<a:int,b:string>, v string"
-    ) == ["k", "price", "m", "s", "v"]
-    assert _ddl_column_names("k long") == ["k"]
+    )
+    base = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, decimal.Decimal("2.50"), {"x": 3}, (4, "y"), "z")], ddl
+    ).coalesce(1).write.parquet(f"{base}/a")
+    lakelog.commit(base, 0, [{"add": "a"}])
+    r = _lake_reader(
+        spark, LakeLogStreamDataSource, path=base, schema_ddl=ddl
+    )
+    assert r.schema.fieldNames() == ["k", "price", "m", "s", "v"]
+    parts = r.partitions({"version": -1}, {"version": 0})
+    assert _read_rows(r, parts) == [
+        (1, decimal.Decimal("2.50"), [("x", 3)], {"a": 4, "b": "y"}, "z")
+    ]
+    r1 = _lake_reader(
+        spark, LakeLogStreamDataSource, path=base, schema_ddl="k long"
+    )
+    assert r1.schema.fieldNames() == ["k"]
 
 
 def test_lakelog_cdf_stream_serves_restore_commits(spark, tmp_path):
@@ -436,7 +498,10 @@ def test_lakelog_cdf_stream_serves_restore_commits(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from etl_lens_spark.operators import lakelog
-    from etl_lens_spark.sources.pyds import LakeLogCDFStreamReader
+    from etl_lens_spark.sources.pyds import LakeLogCDFStreamDataSource
+
+    def make_reader(options):
+        return _lake_reader(spark, LakeLogCDFStreamDataSource, **options)
 
     base = str(tmp_path / "t")
     spark.createDataFrame(
@@ -450,13 +515,11 @@ def test_lakelog_cdf_stream_serves_restore_commits(spark, tmp_path):
     lakelog.commit(base, 2, [{"add": "s1"}])
     lakelog.restore_table(spark, base, 0, cdf=True)  # v3
 
-    r = LakeLogCDFStreamReader(
+    r = make_reader(
         {"path": base, "schema_ddl": "k long, c long"}
     )
     got = sorted(
-        t
-        for p in r.partitions({"version": 2}, {"version": 3})
-        for t in r.read(p)
+        _read_rows(r, r.partitions({"version": 2}, {"version": 3}))
     )
     want = sorted(
         (x.k, x.c, x._change_type, x._commit_version)
@@ -477,8 +540,145 @@ def test_lakelog_cdf_stream_serves_restore_commits(spark, tmp_path):
     ).coalesce(1).write.parquet(f"{base2}/b")
     lakelog.commit(base2, 1, [{"add": "b"}])
     lakelog.restore_table(spark, base2, 0)  # no change record
-    r2 = LakeLogCDFStreamReader(
+    r2 = make_reader(
         {"path": base2, "schema_ddl": "k long, c long"}
     )
     with pytest.raises(ValueError, match="RESTORE without a change"):
         r2.partitions({"version": 1}, {"version": 2})
+
+
+def _stream_job_tasks(spark, query_name):
+    """Task count of every job a streaming query ran (its micro-batch
+    job descriptions start with the query name)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    tasks = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        desc = job.description()
+        if desc.isDefined() and desc.get().startswith(query_name + "\n"):
+            tasks.append(job.numTasks())
+    return tasks
+
+
+def test_lakelog_cdf_stream_drain_packs_files(spark, tmp_path):
+    """An availableNow drain of the lakelog_cdf source over appends, a
+    merge, a merge-on-read delete and an OPTIMIZE commit streams
+    exactly table_changes' rows, and its read stage runs at most one
+    task per usable core however many files the range touches."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from etl_lens_spark.operators import lakelog
+    from etl_lens_spark.sources.pyds import LakeLogCDFStreamDataSource
+    from etl_lens_spark.streaming import stream_ops
+
+    base = str(tmp_path / "t")
+    for v in range(6):
+        spark.createDataFrame(
+            [(v * 10 + i, v) for i in range(4)], "k long, c long"
+        ).coalesce(1).write.parquet(f"{base}/s{v}")
+        lakelog.commit(base, v, [{"add": f"s{v}"}])
+    lakelog.merge_upsert(
+        spark, base,
+        spark.createDataFrame([(11, 99), (70, 7)], "k long, c long"),
+        ["k"], cdf=True,
+    )
+    lakelog.delete_where_mor(spark, base, F.col("k").isin(2, 31))
+    assert lakelog.optimize_compact(spark, base)["n_files_compacted"] > 1
+    head = lakelog.latest_version(base)
+
+    spark.dataSource.register(LakeLogCDFStreamDataSource)
+    stream = (
+        spark.readStream.format("lakelog_cdf")
+        .option("path", base)
+        .option("schema_ddl", "k long, c long")
+        .load()
+    )
+    name = "cdf_drain_packs_files"
+    out = stream_ops.run_to_memory(stream, name, available_now=True)
+    got = sorted(tuple(r) for r in out.collect())
+    spark.sql(f"DROP VIEW IF EXISTS {name}")
+    want = sorted(
+        tuple(r)
+        for r in lakelog.table_changes(spark, base, -1, head).collect()
+    )
+    assert got == want
+    assert (2, 0, "delete", 7) in got and (11, 99, "update_postimage", 6) in got
+    tasks = _stream_job_tasks(spark, name)
+    assert tasks and max(tasks) <= len(os.sched_getaffinity(0))
+
+
+def test_lakelog_cdf_stream_timestamps(spark, tmp_path):
+    """Naive timestamps as pandas writes them (ns) and at µs, streamed
+    as ``timestamp`` and ``timestamp_ntz``: µs columns equal
+    table_changes exactly; ns columns stream without raising and equal
+    the written values floored to µs (table_changes itself returns
+    them as bigint ns under the session's nanosAsLong)."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_lens_spark.operators import lakelog
+    from etl_lens_spark.sources.pyds import LakeLogCDFStreamDataSource
+    from etl_lens_spark.streaming import stream_ops
+
+    ns = pd.to_datetime([
+        "2024-03-01 10:00:00.123456789",
+        "1969-12-31 23:59:59.999999999",
+        "2001-01-01 00:00:00.000000001",
+    ])
+    us = ns.floor("us")
+    pdf = pd.DataFrame({
+        "k": [1, 2, 3],
+        "us_ltz": us, "us_ntz": us, "ns_ltz": ns, "ns_ntz": ns,
+    })
+    table = pa.Table.from_pandas(pdf, preserve_index=False)
+    table = table.cast(pa.schema([
+        ("k", pa.int64()),
+        ("us_ltz", pa.timestamp("us")), ("us_ntz", pa.timestamp("us")),
+        ("ns_ltz", pa.timestamp("ns")), ("ns_ntz", pa.timestamp("ns")),
+    ]))
+    base = str(tmp_path / "t")
+    os.makedirs(f"{base}/a")
+    pq.write_table(table, f"{base}/a/part-00000.parquet")
+    lakelog.commit(base, 0, [{"add": "a"}])
+
+    spark.dataSource.register(LakeLogCDFStreamDataSource)
+    stream = (
+        spark.readStream.format("lakelog_cdf")
+        .option("path", base)
+        .option(
+            "schema_ddl",
+            "k long, us_ltz timestamp, us_ntz timestamp_ntz, "
+            "ns_ltz timestamp, ns_ntz timestamp_ntz",
+        )
+        .load()
+    )
+    name = "cdf_timestamps"
+    got = stream_ops.run_to_memory(stream, name, available_now=True)
+
+    def micros(df, cols):
+        # epoch µs; a naive value is read in the session time zone (UTC)
+        return sorted(
+            tuple(r)
+            for r in df.selectExpr(
+                "k", *(f"unix_micros(CAST({c} AS TIMESTAMP))" for c in cols)
+            ).collect()
+        )
+
+    want = lakelog.table_changes(spark, base, -1, 0)
+    assert dict(want.dtypes)["ns_ntz"] == "bigint"
+    assert micros(got, ["us_ltz", "us_ntz"]) == micros(
+        want, ["us_ltz", "us_ntz"]
+    )
+    floored = [int(x) // 1000 for x in ns.asi8]
+    assert micros(got, ["ns_ltz", "ns_ntz"]) == [
+        (k, f, f) for k, f in zip([1, 2, 3], floored)
+    ]
+    assert floored[1] == -1  # floored, not truncated toward zero
+    spark.sql(f"DROP VIEW IF EXISTS {name}")

@@ -1210,6 +1210,84 @@ def test_optimize_compact_sizes_from_log_stats(spark, tmp_path):
     assert len(jobs2) <= 6, f"fallback OPTIMIZE planned {len(jobs2)} jobs"
 
 
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number
+    of Spark jobs the group saw."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dml_adds_carry_num_records_so_maybe_optimize_reads_the_log(
+    spark, tmp_path
+):
+    """merge_upsert and delete_where record ``num_records`` on the adds
+    they write (from the written footers), so maybe_optimize sizes
+    every file from the log: over its file threshold with fewer than
+    two small files it plans no Spark job, and a compaction plans only
+    the rewrite plus its read's one-task schema inference."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "t")
+    acts = []
+    for i in range(4):
+        spark.createDataFrame(
+            [(i * 100 + j, j) for j in range(50)], "k long, c long"
+        ).coalesce(1).write.parquet(f"{base}/f{i}")
+        acts.append({"add": f"f{i}", "num_records": 50})
+    lakelog.commit(base, 0, acts)
+    lakelog.merge_upsert(
+        spark, base,
+        spark.createDataFrame([(1, 9), (999, 9)], "k long, c long"),
+        ["k"], cdf=True,
+    )
+    lakelog.delete_where(spark, base, F.col("k") == 205, cdf=True)
+    active = lakelog.snapshot_actions(base)
+    assert {r: a.get("num_records") for r, a in active.items()} == {
+        "f1": 50, "f3": 50, "merge_00000001": 51, "delete_00000002": 49,
+    }
+    res, n_jobs = _jobs_in(
+        spark, "opt_idle",
+        lambda: lakelog.maybe_optimize(spark, base, 2, 10),
+    )
+    assert res["triggered"] and res["n_files_compacted"] == 0
+    assert n_jobs == 0
+    res, n_jobs = _jobs_in(
+        spark, "opt_run",
+        lambda: lakelog.maybe_optimize(spark, base, 2, 60),
+    )
+    assert res["n_files_compacted"] == 4
+    assert n_jobs == 2  # schema inference of the read + the rewrite
+    [(rel, action)] = lakelog.snapshot_actions(base).items()
+    assert action["num_records"] == 200
+    assert lakelog.read_snapshot(spark, base).count() == 200
+
+
+def test_delete_where_all_rows_of_touched_files_leaves_no_rel(
+    spark, tmp_path
+):
+    """A copy-on-write delete that empties every touched file commits
+    their removal with no replacement add, and leaves no rewrite
+    directory behind."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "t")
+    for i in range(2):
+        spark.createDataFrame(
+            [(i * 10 + j,) for j in range(3)], "k long"
+        ).coalesce(1).write.parquet(f"{base}/f{i}")
+    lakelog.commit(base, 0, [{"add": "f0"}, {"add": "f1"}])
+    res = lakelog.delete_where(spark, base, F.col("k") < 10)
+    assert res["n_files_touched"] == 1 and res["n_files_rewritten"] == 0
+    assert list(lakelog.snapshot_actions(base)) == ["f1"]
+    assert not os.path.exists(os.path.join(base, "delete_00000001"))
+
+
 def test_delete_where_mor_driver_traffic_per_file(spark, tmp_path, monkeypatch):
     """The round-8 executor-side DV build: delete_where_mor's collect
     returns one row PER PHYSICAL FILE (positions pre-grouped and
