@@ -132,7 +132,7 @@ def enum_decode(
     map_lit = F.create_map(*pairs)
     return df.withColumn(
         out_col,
-        F.coalesce(map_lit.getItem(F.col(col)), F.col(col).cast("string")),
+        F.coalesce(map_lit[F.col(col)], F.col(col).cast("string")),
     )
 
 

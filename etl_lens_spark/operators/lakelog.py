@@ -46,7 +46,9 @@ level, at FILE level instead:
 
 Scale posture: the log is O(commits) tiny JSON on the driver-visible
 store; data files are never rewritten on commit (append/remove are
-metadata). Reading version V = ``spark.read.parquet(*active_files)``
+metadata). Reading version V = ``scan(spark, active_files)``: a
+plain parquet read of the active files whose schema comes from the
+first file's memoized footer, so it runs no schema-inference job
 — pushdown/pruning apply per file exactly as on a plain directory.
 The reference has no storage management at all (it re-scans one .etl
 file per query, src/main.cpp:1081); this is [L]/[N] lakehouse surface
@@ -476,6 +478,77 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> dict:
     }
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``_``/``.`` prefixes, unless
+    a ``_`` name holds a partition ``=``, and in-flight copies)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(paths: list[str]) -> str | None:
+    """The file whose footer alone decides Spark's inferred schema for
+    ``spark.read.parquet(*paths)`` with mergeSchema off: the first
+    data file, in path order, over every path's listing (absolute,
+    normalized, hidden names skipped). None where that rule is not the
+    whole story or cannot be checked here: a glob pattern, a path
+    ``os.stat`` cannot reach, a hidden root file, a summary file
+    (``_metadata``/``_common_metadata``), or a subdirectory (partition
+    discovery)."""
+    files: list[str] = []
+    for p in paths:
+        if any(c in p for c in "*?[]{}"):
+            return None
+        full = os.path.normpath(os.path.abspath(p))
+        if os.path.isfile(full):
+            if _hidden(os.path.basename(full)):
+                return None
+            files.append(full)
+            continue
+        try:
+            entries = list(os.scandir(full))
+        except OSError:
+            return None
+        for e in entries:
+            if e.name.startswith(("_metadata", "_common_metadata")):
+                return None
+            if _hidden(e.name):
+                continue
+            if e.is_dir():
+                return None
+            files.append(e.path)
+    return min(files) if files else None
+
+
+def scan(
+    spark: SparkSession, paths: list[str], *, merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without its schema-inference job
+    — the one way this module reads its own parquet. Spark infers a
+    multi-path read's schema from the first data file's footer
+    (``_first_data_file``); that file's schema comes from the
+    ``load_table`` footer memo (a Spark-written footer carries it, so
+    no job), and the read runs with it as the user schema, which is
+    the same answer. With ``merge_schema`` (or the session's
+    ``spark.sql.parquet.mergeSchema``) every footer counts, so the
+    read stays Spark's own merging one, as it does when no first file
+    can be named."""
+    from etl_lens_spark.sources.tables import parquet_schema
+
+    paths = list(paths)
+    reader = spark.read
+    conf_merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    elif conf_merge.lower() != "true":
+        first = _first_data_file(paths)
+        if first is not None:
+            reader = reader.schema(parquet_schema(spark, first))
+    return reader.parquet(*paths)
+
+
 def _replay(
     table_dir: str, version: int
 ) -> tuple[dict[str, dict], int, int]:
@@ -656,7 +729,7 @@ def merge_upsert(
     if not active:
         raise ValueError("merge into empty snapshot")
     files = [os.path.join(table_dir, r) for r in active]
-    snap = spark.read.parquet(*files).withColumn(
+    snap = scan(spark, files).withColumn(
         "_file", _rel_file_expr(table_dir, list(active))
     )
     # the distinct source keys feed the prune semi-join, the rewrite
@@ -680,7 +753,7 @@ def merge_upsert(
     if touched:
         touched_paths = [os.path.join(table_dir, f) for f in touched]
         survivors = (
-            spark.read.parquet(*touched_paths)
+            scan(spark, touched_paths)
             .join(F.broadcast(keys), key_cols, "left_anti")
         )
         rewrite_rel = f"merge_{version:08d}"
@@ -690,7 +763,7 @@ def merge_upsert(
         actions += [{"remove": f} for f in touched]
         actions.append(_written_add(table_dir, rewrite_rel))
         if cdf:
-            pre = spark.read.parquet(*touched_paths).join(
+            pre = scan(spark, touched_paths).join(
                 F.broadcast(keys), key_cols, "left_semi"
             )
             mk = pre.select(*key_cols).distinct()
@@ -749,7 +822,7 @@ def delete_where(
     if not active:
         raise ValueError("delete from empty snapshot")
     files = [os.path.join(table_dir, r) for r in active]
-    snap = spark.read.parquet(*files).withColumn(
+    snap = scan(spark, files).withColumn(
         "_file", _rel_file_expr(table_dir, list(active))
     )
     touched = [
@@ -761,7 +834,7 @@ def delete_where(
     n_rewritten = 0
     if touched:
         touched_paths = [os.path.join(table_dir, f) for f in touched]
-        survivors = spark.read.parquet(*touched_paths).filter(~condition)
+        survivors = scan(spark, touched_paths).filter(~condition)
         rewrite_rel = f"delete_{version:08d}"
         survivors.write.mode("overwrite").parquet(
             os.path.join(table_dir, rewrite_rel)
@@ -771,7 +844,7 @@ def delete_where(
         n_rewritten = len(adds)
         if cdf:
             deleted = (
-                spark.read.parquet(*touched_paths)
+                scan(spark, touched_paths)
                 .filter(condition)
                 .withColumn("_change_type", F.lit("delete"))
             )
@@ -803,7 +876,7 @@ def file_stats(spark: SparkSession, path: str, cols: list[str]) -> dict:
     (one tiny agg job; in production this rides the writer)."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path)
+    df = scan(spark, [path])
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
@@ -819,7 +892,7 @@ def file_stats_with_count(
     metadata-only COUNT/MIN/MAX forever after."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path)
+    df = scan(spark, [path])
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
@@ -913,9 +986,7 @@ def read_snapshot_pruned(
         kept.append(rel)
     if not kept:
         raise ValueError("predicate prunes every file")
-    df = spark.read.parquet(
-        *(os.path.join(table_dir, r) for r in kept)
-    )
+    df = scan(spark, [os.path.join(table_dir, r) for r in kept])
     return df, len(active), len(kept)
 
 
@@ -948,9 +1019,7 @@ def read_snapshot_pruned_2d(
             kept.append(rel)
     if not kept:
         raise ValueError("predicate prunes every file")
-    df = spark.read.parquet(
-        *(os.path.join(table_dir, r) for r in kept)
-    )
+    df = scan(spark, [os.path.join(table_dir, r) for r in kept])
     return df, len(active), len(kept)
 
 
@@ -988,7 +1057,7 @@ def apply_cdc(
     if not active:
         raise ValueError("apply_cdc into empty snapshot")
     files = [os.path.join(table_dir, r) for r in active]
-    snap = spark.read.parquet(*files).withColumn(
+    snap = scan(spark, files).withColumn(
         "_file", _rel_file_expr(table_dir, list(active))
     )
     keys = changes.select(*key_cols).distinct()
@@ -1005,7 +1074,7 @@ def apply_cdc(
     rewrite_rel = f"cdc_{version:08d}"
     if touched:
         touched_paths = [os.path.join(table_dir, f) for f in touched]
-        survivors = spark.read.parquet(*touched_paths).join(
+        survivors = scan(spark, touched_paths).join(
             F.broadcast(keys), key_cols, "left_anti"
         )
         out = survivors.unionByName(upserts)
@@ -1031,7 +1100,7 @@ def apply_cdc(
         )
         if touched:
             touched_paths = [os.path.join(table_dir, f) for f in touched]
-            old = spark.read.parquet(*touched_paths)
+            old = scan(spark, touched_paths)
             pre = old.join(
                 F.broadcast(up_keys), key_cols, "left_semi"
             ).withColumn(ct, F.lit("update_preimage"))
@@ -1094,7 +1163,7 @@ def file_bloom(
 
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path)
+    df = scan(spark, [path])
     positions = [
         r[0]
         for r in df.select(
@@ -1152,9 +1221,7 @@ def read_snapshot_bloom_pruned(
         kept.append(rel)
     if not kept:
         raise ValueError("bloom prunes every file")
-    df = spark.read.parquet(
-        *(os.path.join(table_dir, r) for r in kept)
-    )
+    df = scan(spark, [os.path.join(table_dir, r) for r in kept])
     return df, len(active), len(kept)
 
 
@@ -1205,9 +1272,7 @@ def optimize_compact(
             from pyspark.sql import functions as F
 
             counts = (
-                spark.read.parquet(
-                    *(os.path.join(table_dir, r) for r in unsized)
-                )
+                scan(spark, [os.path.join(table_dir, r) for r in unsized])
                 .withColumn("_file", _rel_file_expr(table_dir, unsized))
                 .groupBy("_file")
                 .count()
@@ -1364,7 +1429,9 @@ def _recover_purge_debris(dir_path: str) -> None:
             os.rename(full, base)  # crash between renames: recover
 
 
-def _recover_staged_rel_debris(table_dir: str) -> None:
+def _recover_staged_rel_debris(
+    table_dir: str, head_rels: list[str] | None = None
+) -> None:
     """Nested-rel debris recovery (round-10 review fix, twice over):
     the purge's in-place swap operates at the FULL rel path, so a
     mid-swap crash on a NESTED rel (e.g. ``era/part=1``) parks
@@ -1386,9 +1453,10 @@ def _recover_staged_rel_debris(table_dir: str) -> None:
         for a in entry["actions"]:
             if a.get("add"):
                 rels.add(a["add"])
-    head = latest_version(table_dir)
-    if head >= 0:
-        rels |= set(_replay(table_dir, head)[0])
+    if head_rels is None:
+        head = latest_version(table_dir)
+        head_rels = list(_replay(table_dir, head)[0]) if head >= 0 else []
+    rels |= set(head_rels)
     seen: set[str] = set()
     for rel in rels:
         if "/" not in rel:
@@ -1456,6 +1524,24 @@ def vacuum(
     time-travel snapshot."""
     import shutil
 
+    head = latest_version(table_dir)
+    # fold once at the window start, then step through each later
+    # commit (every commit file opens once): the window's retained
+    # actions are the start's active set plus every later add, and
+    # the walk ends on head's active set
+    active: dict[str, dict] = {}
+    retained: list[tuple[str, dict]] = []
+    if head >= 0:
+        start = max(0, head - retain_versions)
+        active = _fold(table_dir, start).active
+        retained += active.items()
+        for v in range(start + 1, head + 1):
+            for a in commit_actions(table_dir, v):
+                if "add" in a:
+                    active[a["add"]] = a
+                    retained.append((a["add"], a))
+                elif "remove" in a:
+                    active.pop(a["remove"], None)
     # crashed-purge recovery BEFORE any reclamation decision: a
     # mid-swap crash leaves a rel only as .old/.purge_tmp, and the
     # loops below must see the restored base (protected if staged/
@@ -1465,15 +1551,10 @@ def vacuum(
     # can never resurrect a record past its retention decision.
     _recover_purge_debris(table_dir)
     _recover_purge_debris(os.path.join(table_dir, "_cdc"))
-    _recover_staged_rel_debris(table_dir)
-    head = latest_version(table_dir)
-    protected: set[str] = set()
-    live_dv: set[str] = set()
-    for v in range(max(0, head - retain_versions), head + 1):
-        active = _replay(table_dir, v)[0]
-        protected |= {a.split("/", 1)[0] for a in active}
-        # a DV sidecar rel rides in the action dict, not the key
-        live_dv |= {a["dv"] for a in active.values() if a.get("dv")}
+    _recover_staged_rel_debris(table_dir, list(active))
+    protected = {rel.split("/", 1)[0] for rel, _ in retained}
+    # a DV sidecar rel rides in the action dict, not the key
+    live_dv = {a["dv"] for _, a in retained if a.get("dv")}
     for entry in _staged_entries(table_dir).values():
         for a in entry["actions"]:
             if "add" in a:
@@ -1553,7 +1634,7 @@ def read_table_snapshot(
     ]
     if not files:
         raise ValueError(f"empty snapshot for table {table!r}")
-    return spark.read.parquet(*files)
+    return scan(spark, files)
 
 
 # ---------------------------------------------------------------------------
@@ -1589,8 +1670,10 @@ def read_snapshot_evolved(
     _assert_no_dv(state.active, "read_snapshot_evolved")
     if not state.active:
         raise ValueError("empty snapshot")
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_dir, r) for r in state.active]
+    df = scan(
+        spark,
+        [os.path.join(table_dir, r) for r in state.active],
+        merge_schema=True,
     )
     schema = state.meta["metaData"]
     if schema is None:
@@ -2058,23 +2141,17 @@ def _read_active(
     plain = [r for r, a in active.items() if not a.get("dv")]
     dvd = {r: a for r, a in active.items() if a.get("dv")}
     if not dvd:
-        return spark.read.parquet(
-            *[os.path.join(table_dir, r) for r in plain]
-        )
+        return scan(spark, [os.path.join(table_dir, r) for r in plain])
     parts = []
     if plain:
         parts.append(
-            spark.read.parquet(
-                *[os.path.join(table_dir, r) for r in plain]
-            )
+            scan(spark, [os.path.join(table_dir, r) for r in plain])
         )
     parts.append(
         _anti_join_dead(
             spark,
             table_dir,
-            spark.read.parquet(
-                *[os.path.join(table_dir, r) for r in dvd]
-            ),
+            scan(spark, [os.path.join(table_dir, r) for r in dvd]),
             dvd,
         )
     )
@@ -2082,15 +2159,6 @@ def _read_active(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def read_snapshot_mor(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> DataFrame:
-    """Merge-on-read snapshot. Since the round-7 review fix
-    read_snapshot itself is DV-aware; this name is kept as the
-    explicit entry point."""
-    return read_snapshot(spark, table_dir, version)
 
 
 def delete_where_mor(
@@ -2125,18 +2193,16 @@ def delete_where_mor(
             "is unsupported — materialize the clone first"
         )
     # direct file scan (the hidden _metadata column only resolves on
-    # a physical scan, not through read_snapshot_mor's projection):
+    # a physical scan, not through read_snapshot's anti-join):
     # tag positions, drop already-dead rows, then apply the predicate
-    scan = (
-        spark.read.parquet(
-            *[os.path.join(table_dir, r) for r in active]
-        )
+    tagged = (
+        scan(spark, [os.path.join(table_dir, r) for r in active])
         .withColumn("__phys", _phys_rel_col(table_dir))
         .withColumn("__ri", F.col("_metadata.row_index"))
     )
     already_dead = _load_dv_positions(table_dir, active)
     if already_dead:
-        scan = scan.join(
+        tagged = tagged.join(
             F.broadcast(
                 spark.createDataFrame(
                     already_dead, "__phys string, __ri long"
@@ -2146,7 +2212,7 @@ def delete_where_mor(
             "left_anti",
         )
     hits = (
-        scan.filter(condition)
+        tagged.filter(condition)
         .groupBy("__phys")
         .agg(F.sort_array(F.collect_list("__ri")).alias("__pos"))
         .collect()
@@ -2223,7 +2289,7 @@ def materialize_deletion_vectors(
     live = _anti_join_dead(
         spark,
         table_dir,
-        spark.read.parquet(*[os.path.join(table_dir, r) for r in dvd]),
+        scan(spark, [os.path.join(table_dir, r) for r in dvd]),
         {r: active[r] for r in dvd},
     )
     rewrite_rel = f"dvmat_{version:08d}"
@@ -2651,11 +2717,11 @@ def _commit_change_frames(
     parts: list[DataFrame] = []
     if plan["cdc_files"]:
         parts.append(
-            spark.read.parquet(*plan["cdc_files"]).select("*", ver)
+            scan(spark, plan["cdc_files"]).select("*", ver)
         )
     if plan["insert_files"]:
         parts.append(
-            spark.read.parquet(*plan["insert_files"]).select(
+            scan(spark, plan["insert_files"]).select(
                 "*",
                 F.lit("insert").alias("_change_type"),
                 ver,
@@ -2665,7 +2731,7 @@ def _commit_change_frames(
     excl_deletes = [(p, ex) for p, ex in plan["delete_files"] if ex]
     if full_deletes:
         parts.append(
-            spark.read.parquet(*full_deletes).select(
+            scan(spark, full_deletes).select(
                 "*",
                 F.lit("delete").alias("_change_type"),
                 ver,
@@ -2674,7 +2740,7 @@ def _commit_change_frames(
     pairs = [(p, int(pos)) for p, ex in excl_deletes for pos in ex]
     if excl_deletes:
         dead = spark.createDataFrame(pairs, "__p string, __ri long")
-        df = spark.read.parquet(*[p for p, _ in excl_deletes])
+        df = scan(spark, [p for p, _ in excl_deletes])
         cols = df.columns
         parts.append(
             df.withColumn("__p", norm_path)
@@ -2693,9 +2759,7 @@ def _commit_change_frames(
     ]
     if pd_pairs:
         hit = spark.createDataFrame(pd_pairs, "__p string, __ri long")
-        df = spark.read.parquet(
-            *sorted({p for p, _ in plan["position_deletes"]})
-        )
+        df = scan(spark, sorted({p for p, _ in plan["position_deletes"]}))
         cols = df.columns
         parts.append(
             df.withColumn("__p", norm_path)
@@ -2950,7 +3014,7 @@ def read_snapshot_mapped(
     files = [os.path.join(table_dir, r) for r in state.active]
     if not files:
         raise ValueError("empty snapshot")
-    df = spark.read.option("mergeSchema", "true").parquet(*files)
+    df = scan(spark, files, merge_schema=True)
     return _project_mapping(df, fields)
 
 
@@ -3303,9 +3367,7 @@ def _restore_change_record(
             for r in repoints
             if any(p == r or p.startswith(r + "/") for p in phys_set)
         )
-        raw = spark.read.parquet(
-            *[os.path.join(table_dir, r) for r in rels]
-        )
+        raw = scan(spark, [os.path.join(table_dir, r) for r in rels])
         cols = raw.columns
         hit = spark.createDataFrame(
             labelled, "__phys string, __ri long, _change_type string"
@@ -3323,7 +3385,7 @@ def _restore_change_record(
         # over the commit must serve zero rows, not refuse
         some_rel = next(iter({**re_add, **repoints, **current}))
         return (
-            spark.read.parquet(os.path.join(table_dir, some_rel))
+            scan(spark, [os.path.join(table_dir, some_rel)])
             .limit(0)
             .withColumn("_change_type", F.lit("insert"))
         )
@@ -3537,7 +3599,7 @@ def gdpr_purge_change_records(
         # single-file staged adds, leaving the subject on disk while
         # reporting success); a purged file rel becomes a dir rel,
         # which every reader already handles via _list_parquet_files
-        df = spark.read.parquet(full)
+        df = scan(spark, [full])
         hits = df.filter(cond).count()
         if not hits:
             return 0

@@ -3484,7 +3484,7 @@ def lake_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     and after the second — identical, so
     data_files_rewritten_by_mor = 0 by observation, not assertion.
     Every version stays time-travel readable through
-    read_snapshot_mor (v1 applies the first vector, v2 the union,
+    read_snapshot (v1 applies the first vector, v2 the union,
     v3 the clean rewrite); the oracle replays each version's
     predicate algebra. At 100 TB this is what makes a 10-row GDPR
     delete on a 1 GB file an O(10) metadata commit, with the
@@ -3523,7 +3523,7 @@ def lake_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         active = lakelog.snapshot_actions(base, v)
         n_dv = sum(1 for a in active.values() if a.get("dv"))
         parts.append(
-            lakelog.read_snapshot_mor(spark, base, v)
+            lakelog.read_snapshot(spark, base, v)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.sum("o_orderkey").cast("long").alias("key_sum"),

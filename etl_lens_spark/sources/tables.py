@@ -21,16 +21,32 @@ no job. A path ``os.stat`` cannot reach (a non-local scheme) is
 read plainly. The DataFrame itself is never memoized: two reads
 must stay distinct Datasets, or a self-join of two ``load_table``
 results fails as ambiguous.
+
+A miss on a single file whose footer carries the schema Spark wrote
+(key ``org.apache.spark.sql.parquet.row.metadata``) runs no job
+either: Spark's inference returns exactly that schema, made nullable
+all the way down, so the memo stores the same from one pyarrow
+footer read. Files without the key (written by pyarrow) infer once
+per file, as before. The memo grows by one small entry per distinct
+path read and is bounded by the files a session touches;
+``lakelog.scan`` adds one entry per scan (its first data file).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 TABLE_NAMES = (
     "region",
@@ -63,6 +79,9 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.int96AsTimestamp",
 )
 
+# the footer key under which Spark's writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 # realpath -> (footer stamp, inferred schema); one entry per path. Two
 # threads missing at once both infer and store the same value.
 _FOOTER_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
@@ -89,30 +108,80 @@ def _footer_stamp(spark: SparkSession, real: str) -> tuple | None:
     return stats, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the inferred schema memoized
-    (see the module docstring): a fresh DataFrame every call, but no
-    schema-inference job while the footers and confs are unchanged."""
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every struct field, array element and map value
+    nullable, field metadata kept — Spark's ``asNullable``, which its
+    parquet reader applies to the schema it infers."""
+    if isinstance(t, StructType):
+        return StructType(
+            [
+                StructField(
+                    f.name, _as_nullable(f.dataType), True, f.metadata
+                )
+                for f in t.fields
+            ]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _spark_footer_schema(path: str) -> StructType | None:
+    """The schema Spark's reader infers for one Spark-written parquet
+    file, from the schema Spark stored in its footer; None when the
+    footer has no such key (or pyarrow cannot read it)."""
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if raw is None:
+            return None
+        schema = StructType.fromJson(json.loads(raw))
+    except (OSError, ValueError, KeyError, TypeError):
+        # unreadable footer or a legacy key format: Spark infers
+        return None
+    return _as_nullable(schema)
+
+
+def _memo_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The memoized inferred schema of ``path`` (module docstring), or
+    None when the path cannot be stat'ed locally."""
     real = os.path.realpath(path)
     stamp = _footer_stamp(spark, real)
     if stamp is None:
-        return spark.read.parquet(path)
+        return None
     hit = _FOOTER_SCHEMAS.get(real)
     if hit is not None and hit[0] == stamp:
-        return spark.read.schema(hit[1]).parquet(path)
+        return hit[1]
     if hit is not None:
         # the file changed: drop cached frames over the old bytes, or
         # a persisted plan that matches would serve the stale rows
         spark.catalog.refreshByPath(path)
-    df = spark.read.parquet(path)
-    _FOOTER_SCHEMAS[real] = (stamp, df.schema)
-    return df
+    schema = _spark_footer_schema(real) if os.path.isfile(real) else None
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    _FOOTER_SCHEMAS[real] = (stamp, schema)
+    return schema
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized
+    (see the module docstring): a fresh DataFrame every call, but no
+    schema-inference job while the footers and confs are unchanged."""
+    schema = _memo_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema Spark infers for the parquet at ``path``, from the
-    same memo as ``load_table`` (no Spark job on a hit)."""
-    return _read_parquet(spark, path).schema
+    same memo as ``load_table`` (no Spark job, no DataFrame on a
+    hit)."""
+    schema = _memo_schema(spark, path)
+    return schema if schema is not None else spark.read.parquet(path).schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

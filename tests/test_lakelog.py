@@ -9,6 +9,7 @@ import os
 import pytest
 
 from etl_lens_spark.operators import lakelog
+from etl_lens_spark.sources.tables import parquet_schema
 
 
 def test_optimistic_concurrency_one_winner(tmp_path):
@@ -807,7 +808,7 @@ def test_deletion_vectors_mor_roundtrip(spark, tmp_path):
     assert inv2 == inv
     # time travel applies each version's own vector
     ks = lambda v: sorted(  # noqa: E731
-        r["k"] for r in lakelog.read_snapshot_mor(spark, base, v).collect()
+        r["k"] for r in lakelog.read_snapshot(spark, base, v).collect()
     )
     assert ks(0) == list(range(20)) + list(range(100, 110))
     assert ks(1) == [k for k in ks(0) if k % 5 != 3]
@@ -1230,7 +1231,7 @@ def test_dml_adds_carry_num_records_so_maybe_optimize_reads_the_log(
     they write (from the written footers), so maybe_optimize sizes
     every file from the log: over its file threshold with fewer than
     two small files it plans no Spark job, and a compaction plans only
-    the rewrite plus its read's one-task schema inference."""
+    the rewrite: its read takes the schema from the footer memo."""
     from pyspark.sql import functions as F
 
     base = str(tmp_path / "t")
@@ -1262,10 +1263,204 @@ def test_dml_adds_carry_num_records_so_maybe_optimize_reads_the_log(
         lambda: lakelog.maybe_optimize(spark, base, 2, 60),
     )
     assert res["n_files_compacted"] == 4
-    assert n_jobs == 2  # schema inference of the read + the rewrite
+    assert n_jobs == 1  # the rewrite alone: the read infers nothing
     [(rel, action)] = lakelog.snapshot_actions(base).items()
     assert action["num_records"] == 200
     assert lakelog.read_snapshot(spark, base).count() == 200
+
+
+def _churned_table(spark, base):
+    """A Spark-written lake table after a CDF merge, a CDF delete and
+    an append (commits 1-3)."""
+    from pyspark.sql import functions as F
+
+    for i in range(3):
+        spark.createDataFrame(
+            [(i * 100 + j, j) for j in range(20)], "k long, c long"
+        ).coalesce(1).write.parquet(f"{base}/f{i}")
+    lakelog.commit(base, 0, [{"add": f"f{i}"} for i in range(3)])
+    src = spark.createDataFrame(
+        [(105, -1), (900, -2)], "k long, c long"
+    )
+    lakelog.merge_upsert(spark, base, src, ["k"], cdf=True)
+    lakelog.delete_where(spark, base, F.col("k") == 203, cdf=True)
+    spark.createDataFrame([(700, 7)], "k long, c long").write.parquet(
+        f"{base}/app_3"
+    )
+    lakelog.commit(base, 3, [{"add": "app_3"}])
+    return src
+
+
+def test_lake_reads_plan_no_job_and_merge_drops_its_inference_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """Snapshot, time-travel and change-feed reads over a merge, a
+    delete and an append plan no Spark job; a CDF merge on a warm
+    table plans 3 jobs fewer than the same merge whose reads each
+    infer their schema (its snapshot, survivor and pre-image reads)."""
+    import shutil
+
+    base = str(tmp_path / "t")
+    src = _churned_table(spark, base)
+    for name, build in (
+        ("latest", lambda: lakelog.read_snapshot(spark, base)),
+        ("travel", lambda: lakelog.read_snapshot(spark, base, 1)),
+        ("changes", lambda: lakelog.table_changes(spark, base, 0, 3)),
+    ):
+        df, n_jobs = _jobs_in(spark, f"lake_read_{name}", build)
+        assert n_jobs == 0, name
+    assert sorted(
+        r["k"] for r in lakelog.table_changes(spark, base, 0, 3).collect()
+    ) == [105, 105, 203, 700, 900]
+    twin = str(tmp_path / "twin")
+    shutil.copytree(base, twin)
+    _, n_scan = _jobs_in(
+        spark, "merge_scan",
+        lambda: lakelog.merge_upsert(spark, base, src, ["k"], cdf=True),
+    )
+    monkeypatch.setattr(
+        lakelog, "scan",
+        lambda spark, paths, merge_schema=False: spark.read.parquet(*paths),
+    )
+    _, n_infer = _jobs_in(
+        spark, "merge_infer",
+        lambda: lakelog.merge_upsert(spark, twin, src, ["k"], cdf=True),
+    )
+    assert n_infer - n_scan == 3
+
+
+def _two_column_set_rels(spark, base):
+    """Rel ``b`` (k, extra) and rel ``a`` (k, a_only), NOT NULL columns
+    as Spark writes them; returns their paths in first-added order,
+    which is not path order."""
+    for rel, other in (("b", "extra"), ("a", "a_only")):
+        spark.createDataFrame(
+            [(1, 2)], f"k long not null, {other} long not null"
+        ).coalesce(1).write.parquet(f"{base}/{rel}")
+    return [f"{base}/b", f"{base}/a"]
+
+
+def test_scan_schema_is_sparks_inferred_one(spark, tmp_path):
+    """``scan`` answers with the schema Spark infers for the same
+    paths: the path-sorted first file's, made nullable — not the
+    first-added rel's."""
+    base = str(tmp_path / "t")
+    paths = _two_column_set_rels(spark, base)
+    want = spark.read.parquet(*paths)
+    got = lakelog.scan(spark, paths)
+    assert got.schema == want.schema
+    # the schema scan hands the reader, before Spark's own nullability
+    first = lakelog._first_data_file(paths)
+    assert parquet_schema(spark, first) == want.schema
+    assert got.columns == ["k", "a_only"]
+    assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+    lakelog.commit(base, 0, [{"add": "b"}, {"add": "a"}])
+    assert lakelog.read_snapshot(spark, base).schema == want.schema
+
+
+def test_scan_merges_under_the_merge_schema_conf(spark, tmp_path):
+    base = str(tmp_path / "t")
+    paths = _two_column_set_rels(spark, base)
+    key = "spark.sql.parquet.mergeSchema"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        got = lakelog.scan(spark, paths).schema
+    finally:
+        spark.conf.set(key, before)
+    assert got == spark.read.option("mergeSchema", "true").parquet(
+        *paths
+    ).schema
+    assert sorted(got.names) == ["a_only", "extra", "k"]
+
+
+def test_lakelog_reads_parquet_only_through_scan():
+    """Every read of lake data goes through ``scan`` (no inference
+    job): a ``<x>.read[...].parquet(`` call anywhere else in the
+    module fails this test."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(lakelog.__file__).read_text()
+    tree = ast.parse(src)
+    scan_def = next(
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "scan"
+    )
+
+    def reads(call: ast.Call) -> bool:
+        node = call.func
+        if not (isinstance(node, ast.Attribute) and node.attr == "parquet"):
+            return False
+        node = node.value
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return False
+
+    hits = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and reads(n)
+        and not scan_def.lineno <= n.lineno <= scan_def.end_lineno
+    ]
+    assert not hits, f"read lake parquet through scan(): lines {hits}"
+
+
+def test_vacuum_folds_the_retention_window_once(tmp_path, monkeypatch):
+    """vacuum protects the union of the window's active sets — the
+    same rels and DV sidecars as replaying every retained version —
+    while opening each commit file at most once, with a checkpoint
+    inside the window."""
+    from collections import Counter
+
+    base = str(tmp_path / "t")
+    commits = [
+        [{"add": "a"}, {"add": "b"}],
+        [{"add": "c"}, {"remove": "a"}],
+        [{"add": "b", "dv": "_dv/b.v2.json"}],
+        [{"add": "d"}, {"remove": "c"}],
+        [{"add": "e"}, {"remove": "b"}],
+        [{"add": "d", "dv": "_dv/d.v5.json"}, {"add": "f/p=1"}],
+        [{"remove": "e"}],
+    ]
+    for v, actions in enumerate(commits):
+        lakelog.commit(base, v, actions)
+    lakelog.write_checkpoint(base, 4)
+    for rel in ("a", "b", "c", "d", "e", "f/p=1", "z"):
+        os.makedirs(os.path.join(base, rel, "part-0"))
+    os.makedirs(os.path.join(base, "_dv"))
+    for dv in ("b.v2.json", "d.v5.json", "stale.json"):
+        with open(os.path.join(base, "_dv", dv), "w") as f:
+            f.write("{}")
+    head, window = 6, 4
+    want_rels: set[str] = set()
+    want_dv: set[str] = set()
+    for v in range(head - window, head + 1):  # replay every version
+        active = lakelog.snapshot_actions(base, v)
+        want_rels |= {r.split("/", 1)[0] for r in active}
+        want_dv |= {a["dv"] for a in active.values() if a.get("dv")}
+    assert want_rels == {"b", "c", "d", "e", "f"}
+    assert want_dv == {"_dv/b.v2.json", "_dv/d.v5.json"}
+    opened: Counter = Counter()
+    real = lakelog.commit_actions
+
+    def counted(table_dir, version):
+        opened[version] += 1
+        return real(table_dir, version)
+
+    monkeypatch.setattr(lakelog, "commit_actions", counted)
+    res = lakelog.vacuum(base, retain_versions=window)
+    assert opened and max(opened.values()) == 1, opened
+    kept = {
+        e for e in os.listdir(base) if e not in ("_log", "_dv")
+    }
+    assert kept == want_rels
+    assert {f"_dv/{f}" for f in os.listdir(f"{base}/_dv")} == want_dv
+    assert res["n_dirs_deleted"] == 2  # a and z
+    assert res["n_dv_sidecars_deleted"] == 1
 
 
 def test_delete_where_all_rows_of_touched_files_leaves_no_rel(

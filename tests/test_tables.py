@@ -5,11 +5,18 @@ own DataFrame."""
 
 import datetime as dt
 import functools
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
 
-from etl_lens_spark.sources.tables import load_table
+from etl_lens_spark.sources.tables import (
+    _INFERENCE_CONFS,
+    load_table,
+    parquet_schema,
+)
 from etl_lens_spark.streaming.stream_ops import eviction_safe_cutoff_us
 
 
@@ -145,3 +152,48 @@ def test_watermark_cutoff_same_for_both_ts_layouts(spark, tmp_path):
     want = max(want_us) - 4 * 3600 * 1_000_000
     got = {u: eviction_safe_cutoff_us(spark, d) for u, d in dirs.items()}
     assert got == {"ns": want, "us": want}
+
+
+# one column per type family Spark's parquet writer stores, NOT NULL
+# where a literal makes it so, plus all-null columns and field metadata
+_ZOO = """
+SELECT CAST(1 AS TINYINT) ti, CAST(2 AS SMALLINT) si, 3 i,
+  CAST(4 AS BIGINT) bi, CAST(1.5 AS FLOAT) fl, 2.5D db,
+  CAST(1.234 AS DECIMAL(12,3)) d12, CAST(1.234 AS DECIMAL(30,3)) d30,
+  'abc' s, CAST('ab' AS VARCHAR(5)) vc, CAST('x' AS BINARY) bin,
+  true bo, DATE'2024-01-02' dt, TIMESTAMP'2024-01-02 03:04:05' ts,
+  TIMESTAMP_NTZ'2024-01-02 03:04:05' ntz, array(1, 2) arr,
+  map('a', named_struct('v', 1)) mp,
+  named_struct('x', 1, 'y', named_struct('z', 'q')) st,
+  CAST(NULL AS INT) null_i, CAST(NULL AS STRING) null_s, NULL null_v
+"""
+
+
+@pytest.mark.parametrize("flip", [None, *_INFERENCE_CONFS])
+def test_parquet_schema_of_spark_written_file_is_sparks_inference(
+    spark, tmp_path, flip
+):
+    """On a Spark-written file the memo reads the schema from the
+    footer with no Spark job, and it equals what Spark infers — under
+    the default confs and with each inference conf flipped."""
+    out = str(tmp_path / "zoo")
+    spark.sql(_ZOO).withColumn(
+        "tagged", F.col("i").alias("tagged", metadata={"comment": "c"})
+    ).coalesce(1).write.parquet(out)
+    [part] = [
+        f"{out}/{f}" for f in os.listdir(out) if f.endswith(".parquet")
+    ]
+    before = spark.conf.get(flip) if flip else None
+    if flip:
+        spark.conf.set(flip, "false" if before == "true" else "true")
+    try:
+        got, n_jobs = _jobs_in(
+            spark, f"zoo_{flip}", lambda: parquet_schema(spark, part)
+        )
+        want = spark.read.parquet(part).schema
+    finally:
+        if flip:
+            spark.conf.set(flip, before)
+    assert n_jobs == 0
+    assert got == want
+    assert want["tagged"].metadata == {"comment": "c"}
