@@ -46,10 +46,17 @@ level, at FILE level instead:
 
 Scale posture: the log is O(commits) tiny JSON on the driver-visible
 store; data files are never rewritten on commit (append/remove are
-metadata). Reading version V = ``scan(spark, active_files)``: a
-plain parquet read of the active files whose schema comes from the
-first file's memoized footer, so it runs no schema-inference job
-— pushdown/pruning apply per file exactly as on a plain directory.
+metadata). Reading version V = ``_read_active``: one
+``scan(spark, active_files)``, a plain parquet read of the active
+files whose schema comes from the first file's memoized footer, so
+it runs no schema-inference job — pushdown/pruning apply per file
+exactly as on a plain directory. Every snapshot reader (plain,
+staged, pruned, bloom, hidden-partition, multi-table, evolved,
+mapped) goes through it, so every one applies deletion vectors: the
+dead row positions of DV files are anti-joined away, and a DV-free
+set is the plain scan alone. Only writers that rewrite or reference
+raw parquet (``merge_upsert``, ``delete_where``, ``apply_cdc``,
+``shallow_clone``) refuse DV files — materialize first.
 The reference has no storage management at all (it re-scans one .etl
 file per query, src/main.cpp:1081); this is [L]/[N] lakehouse surface
 Spark users expect from an analytics engine.
@@ -60,7 +67,7 @@ from __future__ import annotations
 import json
 import os
 import re
-from typing import Iterator, NamedTuple
+from typing import Callable, Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from etl_lens_spark.operators.staging import stage as stage_frame
@@ -571,10 +578,8 @@ def snapshot_files(table_dir: str, version: int | None = None) -> list[str]:
 def read_snapshot(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Snapshot read; deletion-vector-aware (round-7 review fix: a
-    plain ``spark.read.parquet`` here would silently resurrect
-    MOR-deleted rows — every file carrying a DV now routes through
-    the anti-join path, DV-free snapshots read exactly as before)."""
+    """Snapshot read through ``_read_active``: deletion vectors
+    apply, and a DV-free snapshot is one plain ``scan``."""
     if version is None:
         version = latest_version(table_dir)
     active = _replay(table_dir, version)[0]
@@ -584,8 +589,10 @@ def read_snapshot(
 
 
 def _assert_no_dv(active: dict[str, dict], op: str) -> None:
-    """Guard for paths that read or rewrite raw parquet and would
-    silently include MOR-deleted rows; materialize first."""
+    """Guard for the writers that rewrite or reference raw parquet
+    (``merge_upsert``, ``delete_where``, ``apply_cdc``,
+    ``shallow_clone``) and would silently resurrect MOR-deleted rows;
+    materialize first. Every snapshot reader applies DVs instead."""
     dvd = sorted(r for r, a in active.items() if a.get("dv"))
     if dvd:
         raise ValueError(
@@ -609,29 +616,20 @@ def _assert_no_dv(active: dict[str, dict], op: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _rel_file_expr(table_dir: str, rels: list[str] | None = None):
+def _rel_file_expr(table_dir: str, rels: list[str]):
     """Column mapping each row to the add-action relpath it was read
     from, via ``input_file_name`` — file identity without
     one-DataFrame-per-file plans (which would be O(files) plan
     nodes).
 
-    With ``rels`` (the active snapshot's add paths) identity is
+    ``rels`` are the add paths of the files read; identity is
     resolved by the file's parent-directory ABSOLUTE path through a
     literal map — correct even when a shallow clone references files
-    outside ``table_dir`` (add = "../src/f"), where the legacy
-    first-segment regex fails. The map is O(active files) literals;
-    production at 10⁵ files swaps it for a broadcast join — same
-    plan role, fixture file counts are ≤ hundreds. Without ``rels``
-    the legacy regex is kept (single-table layouts)."""
-    import re
-
+    outside ``table_dir`` (add = "../src/f"). The map is O(active
+    files) literals; production at 10⁵ files swaps it for a broadcast
+    join — same plan role, fixture file counts are ≤ hundreds."""
     from pyspark.sql import functions as F
 
-    if rels is None:
-        base = os.path.basename(os.path.normpath(table_dir))
-        return F.regexp_extract(
-            F.input_file_name(), "/" + re.escape(base) + "/([^/]+)/", 1
-        )
     pairs = []
     for r in rels:
         abs_dir = os.path.normpath(os.path.join(table_dir, r))
@@ -872,24 +870,17 @@ def delete_where(
 
 
 def file_stats(spark: SparkSession, path: str, cols: list[str]) -> dict:
-    """Genuine min/max per column collected from the written file
-    (one tiny agg job; in production this rides the writer)."""
-    from pyspark.sql import functions as F
-
-    df = scan(spark, [path])
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-    row = df.agg(*aggs).collect()[0]
-    return {c: [row[f"mn_{c}"], row[f"mx_{c}"]] for c in cols}
+    """``file_stats_with_count`` without the count."""
+    return file_stats_with_count(spark, path, cols)[0]
 
 
 def file_stats_with_count(
     spark: SparkSession, path: str, cols: list[str]
 ) -> tuple[dict, int]:
-    """Like file_stats, plus the file's row count — the Delta
-    ``numRecords`` field. One agg job per file at write time buys
-    metadata-only COUNT/MIN/MAX forever after."""
+    """Genuine min/max per column collected from the written file,
+    plus its row count — the Delta ``numRecords`` field. One agg job
+    per file at write time (in production this rides the writer)
+    buys metadata-only COUNT/MIN/MAX forever after."""
     from pyspark.sql import functions as F
 
     df = scan(spark, [path])
@@ -962,6 +953,30 @@ def snapshot_actions(
     return _replay(table_dir, version)[0]
 
 
+def _read_kept(
+    spark: SparkSession,
+    table_dir: str,
+    version: int | None,
+    keep: Callable[[dict], bool],
+    what: str,
+) -> tuple[DataFrame, int, int]:
+    """The pruned readers' shared step: read the files of ``version``
+    whose add action ``keep`` accepts, through ``_read_active`` (so
+    deletion vectors apply). Returns ``(df, n_files_total,
+    n_files_scanned)``; raises when ``what`` prunes every file.
+
+    Pruning stays sound on DV files: an add action keeps its
+    write-time stats and bloom bits when a vector is attached, and
+    dead rows can only make those wider than the live rows, never
+    narrower — so a file whose live rows could match is never
+    skipped."""
+    active = snapshot_actions(table_dir, version)
+    kept = {r: a for r, a in active.items() if keep(a)}
+    if not kept:
+        raise ValueError(f"{what} prunes every file")
+    return _read_active(spark, table_dir, kept), len(active), len(kept)
+
+
 def read_snapshot_pruned(
     spark: SparkSession,
     table_dir: str,
@@ -971,23 +986,13 @@ def read_snapshot_pruned(
     version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Read only the files whose ``col`` [min, max] intersects
-    [lo, hi] (missing stats → conservatively kept). Returns
-    ``(df, n_files_total, n_files_scanned)``. The caller still
-    applies the row-level predicate — pruning is file-granular."""
-    active = snapshot_actions(table_dir, version)
-    _assert_no_dv(active, "read_snapshot_pruned")
-    kept = []
-    for rel, action in active.items():
-        stats = action.get("stats", {}).get(col)
-        if stats is not None:
-            mn, mx = stats
-            if mn is not None and mx is not None and (mx < lo or mn > hi):
-                continue
-        kept.append(rel)
-    if not kept:
-        raise ValueError("predicate prunes every file")
-    df = scan(spark, [os.path.join(table_dir, r) for r in kept])
-    return df, len(active), len(kept)
+    [lo, hi] (missing stats → conservatively kept) — the one-column
+    case of ``read_snapshot_pruned_2d``. Returns ``(df,
+    n_files_total, n_files_scanned)``. The caller still applies the
+    row-level predicate — pruning is file-granular."""
+    return read_snapshot_pruned_2d(
+        spark, table_dir, {col: (lo, hi)}, version
+    )
 
 
 def read_snapshot_pruned_2d(
@@ -1002,25 +1007,17 @@ def read_snapshot_pruned_2d(
     Z-order/Hilbert clustering pay off (after a curve-clustered
     write each file has a tight bounding BOX, so both dimensions
     prune; on a linear sort only the lead key does). Missing stats
-    → conservatively kept, same contract as read_snapshot_pruned."""
-    active = snapshot_actions(table_dir, version)
-    _assert_no_dv(active, "read_snapshot_pruned_2d")
-    kept = []
-    for rel, action in active.items():
-        skip = False
+    → conservatively kept. Deletion vectors apply, and pruning by
+    write-time stats stays sound on DV files (see ``_read_kept``)."""
+
+    def keep(action: dict) -> bool:
         for col, (lo, hi) in preds.items():
-            stats = action.get("stats", {}).get(col)
-            if stats is not None:
-                mn, mx = stats
-                if mn is not None and mx is not None and (mx < lo or mn > hi):
-                    skip = True
-                    break
-        if not skip:
-            kept.append(rel)
-    if not kept:
-        raise ValueError("predicate prunes every file")
-    df = scan(spark, [os.path.join(table_dir, r) for r in kept])
-    return df, len(active), len(kept)
+            mn, mx = action.get("stats", {}).get(col) or (None, None)
+            if mn is not None and mx is not None and (mx < lo or mn > hi):
+                return False
+        return True
+
+    return _read_kept(spark, table_dir, version, keep, "predicate")
 
 
 def apply_cdc(
@@ -1193,7 +1190,9 @@ def read_snapshot_bloom_pruned(
     filter-less files are conservatively kept. ``dtype`` must be the
     column's Spark type — xxhash64 hashes the physical encoding, so
     probing an int64 column with an int32 literal would miss every
-    bit. Returns ``(df, n_files_total, n_files_scanned)``."""
+    bit. Returns ``(df, n_files_total, n_files_scanned)``. Deletion
+    vectors apply, and a DV file's write-time filter stays a sound
+    superset of its live keys (see ``_read_kept``)."""
     import base64
 
     from pyspark.sql import functions as F
@@ -1207,22 +1206,15 @@ def read_snapshot_bloom_pruned(
         )
         .collect()[0]["p"]
     )
-    active = snapshot_actions(table_dir, version)
-    _assert_no_dv(active, "read_snapshot_bloom_pruned")
-    kept = []
-    for rel, action in active.items():
+
+    def keep(action: dict) -> bool:
         b64 = action.get(f"bloom_{col}")
-        if b64 is not None:
-            bits = base64.b64decode(b64)
-            if not all(
-                bits[p >> 3] & (1 << (p & 7)) for p in positions
-            ):
-                continue
-        kept.append(rel)
-    if not kept:
-        raise ValueError("bloom prunes every file")
-    df = scan(spark, [os.path.join(table_dir, r) for r in kept])
-    return df, len(active), len(kept)
+        if b64 is None:
+            return True
+        bits = base64.b64decode(b64)
+        return all(bits[p >> 3] & (1 << (p & 7)) for p in positions)
+
+    return _read_kept(spark, table_dir, version, keep, "bloom")
 
 
 def optimize_compact(
@@ -1625,16 +1617,14 @@ def read_table_snapshot(
     uniform / multi-table-txn property; single-table Delta gets this
     only within one table). State resolution is the same log replay;
     this just projects the active set onto one subtree."""
-    active = snapshot_actions(parent_dir, version)
-    _assert_no_dv(active, "read_table_snapshot")
-    files = [
-        os.path.join(parent_dir, r)
-        for r in active
+    active = {
+        r: a
+        for r, a in snapshot_actions(parent_dir, version).items()
         if r.startswith(table + "/")
-    ]
-    if not files:
+    }
+    if not active:
         raise ValueError(f"empty snapshot for table {table!r}")
-    return scan(spark, files)
+    return _read_active(spark, parent_dir, active)
 
 
 # ---------------------------------------------------------------------------
@@ -1667,14 +1657,9 @@ def read_snapshot_evolved(
     from pyspark.sql import functions as F
 
     state = _fold(table_dir, version)
-    _assert_no_dv(state.active, "read_snapshot_evolved")
     if not state.active:
         raise ValueError("empty snapshot")
-    df = scan(
-        spark,
-        [os.path.join(table_dir, r) for r in state.active],
-        merge_schema=True,
-    )
+    df = _read_active(spark, table_dir, state.active, merge_schema=True)
     schema = state.meta["metaData"]
     if schema is None:
         return df
@@ -1786,8 +1771,8 @@ def read_staged_snapshot(
             active.pop(action["remove"], None)
     if not active:
         raise ValueError("empty staged snapshot")
-    # deletion-vector-aware (round-7 review fix): an audit over a
-    # DV-carrying table must not count dead rows as violations
+    # an audit over a DV-carrying table must not count dead rows as
+    # violations: _read_active applies the vectors
     return _read_active(spark, table_dir, active)
 
 
@@ -2042,12 +2027,8 @@ def read_hidden_pruned(
     """Snapshot read for a date-range predicate with hidden-partition
     pruning applied first; the exact predicate must still be filtered
     by the caller (partition intervals are coarser than row truth).
-
-    Deletion-vector-aware (round-8 review fix): the surviving file
-    set routes through ``_read_active``, so a hidden-partitioned
-    table that received a ``delete_where_mor`` does not silently
-    resurrect its dead rows — the same guarantee every other
-    snapshot-read path already carries."""
+    The surviving file set reads through ``_read_active``, so
+    deletion vectors apply as on every snapshot reader."""
     if version is None:
         version = latest_version(table_dir)
     stats = prune_date_range(table_dir, lo, hi, version)
@@ -2070,34 +2051,61 @@ def read_hidden_pruned(
 # (copy-on-write, delete_where), the commit attaches a DELETION
 # VECTOR to the file — the positions of its dead rows — and readers
 # apply it as an anti-filter. DELETE cost becomes O(rows deleted)
-# metadata; the data file is never rewritten. Reads of DV-carrying
-# files pay one broadcast anti-join on (physical file, row position);
-# files without DVs read at full native speed. OPTIMIZE materializes
+# metadata; the data file is never rewritten. A read whose file set
+# holds a DV pays one broadcast anti-join on (physical file, row
+# position) over its one scan; a DV-free read runs at full native
+# speed. Every row-position join goes through _join_positions, every
+# file-set read through _read_active. OPTIMIZE materializes
 # accumulated DVs back into clean files when read amplification
 # grows. Stored here as sorted position lists in JSON sidecars under
 # _dv/ (production would use roaring bitmaps — same semantics).
 # ---------------------------------------------------------------------------
 
 
-def _phys_rel_col(table_dir: str):
-    """Physical parquet path relative to ``table_dir``, derived from
-    the hidden ``_metadata.file_path`` column (scheme-normalized)."""
+def _join_positions(
+    spark: SparkSession,
+    df: DataFrame,
+    rows: list[tuple],
+    how: str,
+    extra: str = "",
+) -> DataFrame:
+    """Join a parquet ``scan`` to ``rows`` on physical row position —
+    the one place the module reads the scan's hidden ``_metadata``
+    column, so every position consumer (DV reads, the MOR delete,
+    the CDF delete frames, the restore record) matches rows the same
+    way. A row is ``(path, row index, *extra)``; ``extra`` declares
+    the extra columns' DDL (``", _change_type string"``). Both sides
+    key by the absolute, normalized file path: ``rows`` paths go
+    through ``os.path.abspath`` here (once per distinct path), the
+    scan's through Hadoop's own normalization. The small side is
+    broadcast; an anti-join with no rows is the identity and only
+    tags. The result keeps the tags ``__p`` (path) and ``__ri`` (row
+    index) beside ``df``'s columns and the extra ones."""
     from pyspark.sql import functions as F
 
-    prefix = os.path.abspath(table_dir) + "/"
-    norm = F.regexp_replace(
-        F.col("_metadata.file_path"), "^file:/+", "/"
+    path = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+    tagged = df.withColumn("__p", path).withColumn(
+        "__ri", F.col("_metadata.row_index")
     )
-    return F.substring(norm, len(prefix) + 1, 1 << 20)
+    if not rows and how == "left_anti":
+        return tagged
+    norm = {p: os.path.abspath(p) for p in {r[0] for r in rows}}
+    keys = spark.createDataFrame(
+        [(norm[r[0]], *r[1:]) for r in rows],
+        "__p string, __ri long" + extra,
+    )
+    return tagged.join(F.broadcast(keys), ["__p", "__ri"], how)
 
 
 def _load_dv_positions(
     table_dir: str, active: dict[str, dict]
 ) -> list[tuple[str, int]]:
-    """(physical_rel, row_index) pairs of every dead row across the
-    active file set — O(deleted rows), the read-side DV state."""
+    """(path, row index) of every dead row across the active file
+    set — O(deleted rows), the read-side DV state. Sidecars key their
+    files relative to ``table_dir``; the path here is joined onto it,
+    as ``_join_positions`` takes it."""
     return [
-        (phys, p)
+        (os.path.join(table_dir, phys), p)
         for action in active.values()
         for phys, positions in _dv_positions_by_phys(
             table_dir, action.get("dv")
@@ -2106,59 +2114,32 @@ def _load_dv_positions(
     ]
 
 
-def _anti_join_dead(
+def _read_active(
     spark: SparkSession,
     table_dir: str,
-    df: DataFrame,
     active: dict[str, dict],
+    *,
+    merge_schema: bool = False,
 ) -> DataFrame:
-    """Shared DV application: tag the physical scan with (file, row
-    position) and anti-join the (tiny, broadcast) dead-position set.
-    One definition for all three MOR paths (read / delete /
-    materialize) so position-matching fixes land once."""
-    from pyspark.sql import functions as F
-
-    cols = df.columns
-    dead = spark.createDataFrame(
-        _load_dv_positions(table_dir, active),
-        "__phys string, __ri long",
+    """Read an active action set — the one way a snapshot reader
+    turns a file set into a DataFrame (only the writers guarded by
+    ``_assert_no_dv`` still scan raw). One ``scan`` over every file,
+    so the schema is the one a DV-free read of the same set gets;
+    the dead positions of files carrying deletion vectors are then
+    anti-joined away. A DV-free set — at 100 TB, almost every
+    snapshot — is exactly ``scan(paths)``: no position tag, no
+    join."""
+    df = scan(
+        spark,
+        [os.path.join(table_dir, r) for r in active],
+        merge_schema=merge_schema,
     )
-    return (
-        df.withColumn("__phys", _phys_rel_col(table_dir))
-        .withColumn("__ri", F.col("_metadata.row_index"))
-        .join(F.broadcast(dead), ["__phys", "__ri"], "left_anti")
-        .select(*cols)
+    dead = _load_dv_positions(table_dir, active)
+    if not dead:
+        return df
+    return _join_positions(spark, df, dead, "left_anti").select(
+        *df.columns
     )
-
-
-def _read_active(
-    spark: SparkSession, table_dir: str, active: dict[str, dict]
-) -> DataFrame:
-    """Read an active action set: files carrying deletion vectors are
-    anti-joined against their dead positions; DV-free files — at
-    100 TB, almost all of them — read plain with zero overhead (a
-    fully DV-free set is exactly the pre-DV plain read)."""
-    plain = [r for r, a in active.items() if not a.get("dv")]
-    dvd = {r: a for r, a in active.items() if a.get("dv")}
-    if not dvd:
-        return scan(spark, [os.path.join(table_dir, r) for r in plain])
-    parts = []
-    if plain:
-        parts.append(
-            scan(spark, [os.path.join(table_dir, r) for r in plain])
-        )
-    parts.append(
-        _anti_join_dead(
-            spark,
-            table_dir,
-            scan(spark, [os.path.join(table_dir, r) for r in dvd]),
-            dvd,
-        )
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def delete_where_mor(
@@ -2192,56 +2173,42 @@ def delete_where_mor(
             "MOR delete on out-of-table references (shallow clone) "
             "is unsupported — materialize the clone first"
         )
-    # direct file scan (the hidden _metadata column only resolves on
-    # a physical scan, not through read_snapshot's anti-join):
-    # tag positions, drop already-dead rows, then apply the predicate
-    tagged = (
-        scan(spark, [os.path.join(table_dir, r) for r in active])
-        .withColumn("__phys", _phys_rel_col(table_dir))
-        .withColumn("__ri", F.col("_metadata.row_index"))
+    # the anti-join against the already-dead positions keeps the
+    # position tags (a plain read drops them): the predicate runs on
+    # live rows only, and the hits group by physical file
+    tagged = _join_positions(
+        spark,
+        scan(spark, [os.path.join(table_dir, r) for r in active]),
+        _load_dv_positions(table_dir, active),
+        "left_anti",
     )
-    already_dead = _load_dv_positions(table_dir, active)
-    if already_dead:
-        tagged = tagged.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    already_dead, "__phys string, __ri long"
-                )
-            ),
-            ["__phys", "__ri"],
-            "left_anti",
-        )
     hits = (
         tagged.filter(condition)
-        .groupBy("__phys")
+        .groupBy("__p")
         .agg(F.sort_array(F.collect_list("__ri")).alias("__pos"))
         .collect()
     )
     if not hits:
         return {"version": None, "n_files_touched": 0, "n_rows_deleted": 0}
     # group dead positions by logical file (the add-action rel is the
-    # physical path's directory prefix)
+    # physical path's directory prefix); sidecars key files relative
+    # to the table, one relpath per touched file
     by_rel: dict[str, dict[str, list[int]]] = {}
     rels = sorted(active, key=len, reverse=True)
     for r in hits:
+        phys = os.path.relpath(r["__p"], table_dir)
         # an add rel is usually a directory prefix of the physical
         # path; a single-file add equals it exactly (review fix: a
         # miss is a clear error, not a bare StopIteration)
         rel = next(
-            (
-                x
-                for x in rels
-                if r["__phys"].startswith(x + "/") or r["__phys"] == x
-            ),
+            (x for x in rels if phys.startswith(x + "/") or phys == x),
             None,
         )
         if rel is None:
             raise ValueError(
-                f"physical file {r['__phys']!r} matches no active rel"
+                f"physical file {phys!r} matches no active rel"
             )
-        by_rel.setdefault(rel, {})[r["__phys"]] = [
-            int(p) for p in r["__pos"]
-        ]
+        by_rel.setdefault(rel, {})[phys] = [int(p) for p in r["__pos"]]
     os.makedirs(os.path.join(table_dir, "_dv"), exist_ok=True)
     actions = []
     n_deleted = 0
@@ -2286,12 +2253,7 @@ def materialize_deletion_vectors(
     dvd = [r for r, a in active.items() if a.get("dv")]
     if not dvd:
         return {"version": None, "n_files_rewritten": 0}
-    live = _anti_join_dead(
-        spark,
-        table_dir,
-        scan(spark, [os.path.join(table_dir, r) for r in dvd]),
-        {r: active[r] for r in dvd},
-    )
+    live = _read_active(spark, table_dir, {r: active[r] for r in dvd})
     rewrite_rel = f"dvmat_{version:08d}"
     live.write.parquet(os.path.join(table_dir, rewrite_rel))
     # materialization rearranges bytes without changing the logical
@@ -2590,9 +2552,8 @@ def commit_change_plan(table_dir: str, version: int) -> dict:
     a checkpoint): CDF can only serve commit ranges whose files
     survive, exactly like Delta after log cleanup.
     """
-    # absolute from the start: the batch reader compares these paths
-    # against _metadata.file_path (always absolute) — a relative
-    # table_dir would silently match nothing (round-8 review fix)
+    # absolute from the start, as the docstring promises, whatever
+    # form table_dir takes
     table_dir = os.path.abspath(table_dir)
     actions = commit_actions(table_dir, version)
     plan: dict = {
@@ -2709,9 +2670,6 @@ def _commit_change_frames(
     BEFORE the cross-era union."""
     from pyspark.sql import functions as F
 
-    norm_path = F.regexp_replace(
-        F.col("_metadata.file_path"), "^file:/+", "/"
-    )
     plan = commit_change_plan(table_dir, v)
     ver = F.lit(v).cast("long").alias("_commit_version")
     parts: list[DataFrame] = []
@@ -2737,40 +2695,20 @@ def _commit_change_frames(
                 ver,
             )
         )
-    pairs = [(p, int(pos)) for p, ex in excl_deletes for pos in ex]
-    if excl_deletes:
-        dead = spark.createDataFrame(pairs, "__p string, __ri long")
-        df = scan(spark, [p for p, _ in excl_deletes])
-        cols = df.columns
-        parts.append(
-            df.withColumn("__p", norm_path)
-            .withColumn("__ri", F.col("_metadata.row_index"))
-            .join(F.broadcast(dead), ["__p", "__ri"], "left_anti")
-            .select(
-                *cols,
-                F.lit("delete").alias("_change_type"),
-                ver,
+    # removed files minus their already-dead rows, and the rows a DV
+    # repoint newly kills: both are position joins
+    for files, how in (
+        (excl_deletes, "left_anti"),
+        (plan["position_deletes"], "left_semi"),
+    ):
+        if files:
+            df = scan(spark, sorted({p for p, _ in files}))
+            rows = [(p, pos) for p, positions in files for pos in positions]
+            parts.append(
+                _join_positions(spark, df, rows, how).select(
+                    *df.columns, F.lit("delete").alias("_change_type"), ver
+                )
             )
-        )
-    pd_pairs = [
-        (p, int(pos))
-        for p, positions in plan["position_deletes"]
-        for pos in positions
-    ]
-    if pd_pairs:
-        hit = spark.createDataFrame(pd_pairs, "__p string, __ri long")
-        df = scan(spark, sorted({p for p, _ in plan["position_deletes"]}))
-        cols = df.columns
-        parts.append(
-            df.withColumn("__p", norm_path)
-            .withColumn("__ri", F.col("_metadata.row_index"))
-            .join(F.broadcast(hit), ["__p", "__ri"], "left_semi")
-            .select(
-                *cols,
-                F.lit("delete").alias("_change_type"),
-                ver,
-            )
-        )
     return parts
 
 
@@ -3010,12 +2948,12 @@ def read_snapshot_mapped(
     fields = state.meta["columnMapping"]
     if fields is None:
         raise ValueError("table has no column mapping enabled")
-    _assert_no_dv(state.active, "read_snapshot_mapped")
-    files = [os.path.join(table_dir, r) for r in state.active]
-    if not files:
+    if not state.active:
         raise ValueError("empty snapshot")
-    df = scan(spark, files, merge_schema=True)
-    return _project_mapping(df, fields)
+    return _project_mapping(
+        _read_active(spark, table_dir, state.active, merge_schema=True),
+        fields,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3340,8 +3278,8 @@ def _restore_change_record(
     # inserts; positions alive at head but dead at the target emit
     # as deletes — one-directional diffing here silently omitted the
     # delete rows and poisoned every CDF consumer (review fix).
-    res_pairs: list[tuple[str, int]] = []
-    dead_pairs: list[tuple[str, int]] = []
+    labelled: list[tuple[str, int, str]] = []
+    rels: set[str] = set()
     for r, tgt_action in repoints.items():
         head_pos = _dv_positions_by_phys(
             table_dir, current[r].get("dv")
@@ -3350,33 +3288,21 @@ def _restore_change_record(
         for phys in set(head_pos) | set(tgt_pos):
             h = set(head_pos.get(phys, ()))
             t = set(tgt_pos.get(phys, ()))
-            res_pairs.extend((phys, p) for p in sorted(h - t))
-            dead_pairs.extend((phys, p) for p in sorted(t - h))
-
-    labelled = [(p, ri, "insert") for p, ri in res_pairs] + [
-        (p, ri, "delete") for p, ri in dead_pairs
-    ]
+            path = os.path.join(table_dir, phys)
+            labelled += [(path, p, "insert") for p in sorted(h - t)]
+            labelled += [(path, p, "delete") for p in sorted(t - h)]
+            if h != t:
+                rels.add(r)
     if labelled:
         # ONE scan serves both directions (the two position sets are
         # disjoint — a position cannot resurrect and re-die in the
         # same restore): scan only the rels that own a contributing
         # physical file, inner-join the broadcast labelled set
-        phys_set = {p for p, _, _ in labelled}
-        rels = sorted(
-            r
-            for r in repoints
-            if any(p == r or p.startswith(r + "/") for p in phys_set)
-        )
-        raw = scan(spark, [os.path.join(table_dir, r) for r in rels])
-        cols = raw.columns
-        hit = spark.createDataFrame(
-            labelled, "__phys string, __ri long, _change_type string"
-        )
+        raw = scan(spark, [os.path.join(table_dir, r) for r in sorted(rels)])
         parts.append(
-            raw.withColumn("__phys", _phys_rel_col(table_dir))
-            .withColumn("__ri", F.col("_metadata.row_index"))
-            .join(F.broadcast(hit), ["__phys", "__ri"])
-            .select(*cols, "_change_type")
+            _join_positions(
+                spark, raw, labelled, "inner", ", _change_type string"
+            ).select(*raw.columns, "_change_type")
         )
     if not parts:
         # cdf=True with no row-level changes (e.g. a repoint whose

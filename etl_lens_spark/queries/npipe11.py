@@ -671,7 +671,7 @@ def dedup_incremental_lsh_cdf(
         .select("doc_id", "text")
     )
     delta_banded = stage(_lsh_banded(ins), "delta_banded")
-    index0 = spark.read.parquet(*lakelog.snapshot_files(bt, 0))
+    index0 = lakelog.read_snapshot(spark, bt, 0)
     pairs = merge_support(
         pairs, _lsh_insert_deltas(delta_banded, index0)
     ).transform(stage, "pairs_2")

@@ -936,8 +936,9 @@ def test_vacuum_protects_dv_nested_and_staged(spark, tmp_path):
 def test_read_snapshot_is_dv_aware_and_guards_hold(spark, tmp_path):
     """Round-7 review fix: plain read_snapshot (and thus change_feed
     and staged reads) applies deletion vectors instead of silently
-    resurrecting dead rows; raw-parquet paths (CoW DML, pruned/
-    evolved/clone readers) refuse DV tables with a clear error."""
+    resurrecting dead rows; so does the evolved reader. The writers
+    that rewrite or reference raw parquet (CoW DML, shallow clone)
+    refuse DV tables with a clear error."""
     from pyspark.sql import functions as F
 
     from etl_lens_spark.operators import lakelog
@@ -967,7 +968,11 @@ def test_read_snapshot_is_dv_aware_and_guards_hold(spark, tmp_path):
         for r in lakelog.read_staged_snapshot(spark, base, "w").collect()
     ) == [1, 3, 5, 7, 9, 100]
     lakelog.abort_staged(base, "w", remove_data=True)
-    # raw-parquet paths refuse
+    # the evolved reader applies the vector too
+    assert sorted(
+        r["k"] for r in lakelog.read_snapshot_evolved(spark, base).collect()
+    ) == [1, 3, 5, 7, 9]
+    # raw-parquet writers refuse
     import pytest as _pytest
 
     for op in (
@@ -977,10 +982,132 @@ def test_read_snapshot_is_dv_aware_and_guards_hold(spark, tmp_path):
             spark.createDataFrame([(1, "z")], "k int, v string"), ["k"],
         ),
         lambda: lakelog.shallow_clone(base, str(tmp_path / "c")),
-        lambda: lakelog.read_snapshot_evolved(spark, base),
     ):
         with _pytest.raises(ValueError, match="deletion-vector"):
             op()
+
+
+_DV_READERS = {
+    "pruned": lambda spark, base: lakelog.read_snapshot_pruned(
+        spark, base, "k", 5, 14
+    ),
+    "pruned_2d": lambda spark, base: lakelog.read_snapshot_pruned_2d(
+        spark, base, {"k": (5, 14)}
+    ),
+    "bloom_pruned": lambda spark, base: lakelog.read_snapshot_bloom_pruned(
+        spark, base, "k", 12
+    ),
+    "table_snapshot": lambda spark, base: lakelog.read_table_snapshot(
+        spark, base, "t"
+    ),
+    "evolved": lambda spark, base: lakelog.read_snapshot_evolved(
+        spark, base
+    ),
+    "mapped": lambda spark, base: lakelog.read_snapshot_mapped(spark, base),
+}
+
+
+@pytest.mark.parametrize("reader", sorted(_DV_READERS))
+def test_every_snapshot_reader_applies_deletion_vectors(
+    spark, tmp_path, reader
+):
+    """After a merge-on-read delete each snapshot reader returns its
+    DV-free answer minus the dead keys, and the pruned readers keep
+    the same (total, scanned) file counts: a DV file's write-time
+    stats and bloom bits still prune soundly."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "p")
+    df = spark.createDataFrame(
+        [(k, f"v{k}") for k in range(30)], "k long, v string"
+    )
+    actions = []
+    for i in range(3):
+        path = f"{base}/t/f{i}"
+        df.filter(f"k >= {10 * i} and k < {10 * i + 10}").coalesce(
+            1
+        ).write.parquet(path)
+        actions.append(
+            {
+                "add": f"t/f{i}",
+                "stats": lakelog.file_stats(spark, path, ["k"]),
+                "bloom_k": lakelog.file_bloom(spark, path, "k"),
+            }
+        )
+    lakelog.commit(base, 0, actions)
+    lakelog.commit(
+        base,
+        1,
+        [
+            {"metaData": {"fields": [["k", "bigint"], ["v", "string"]]}},
+            lakelog.mapping_action(
+                [("k", "k", "bigint"), ("v", "v", "string")]
+            ),
+        ],
+    )
+
+    def answer():
+        out = _DV_READERS[reader](spark, base)
+        frame, counts = (out[0], out[1:]) if isinstance(out, tuple) else (
+            out, None
+        )
+        return sorted(tuple(r) for r in frame.collect()), counts
+
+    rows, counts = answer()
+    dead = {k for k in range(20) if k % 3 == 0}
+    res = lakelog.delete_where_mor(
+        spark, base, (F.col("k") % 3 == 0) & (F.col("k") < 20)
+    )
+    assert (res["n_files_touched"], res["n_rows_deleted"]) == (2, len(dead))
+    got, got_counts = answer()
+    assert got == [r for r in rows if r[0] not in dead]
+    assert len(got) < len(rows)
+    assert got_counts == counts == {
+        "pruned": (3, 2), "pruned_2d": (3, 2), "bloom_pruned": (3, 1),
+    }.get(reader)
+
+
+@pytest.mark.parametrize("dv_file", [0, 1], ids=["dv_on_f0", "dv_on_f1"])
+def test_dv_read_of_mixed_schema_files(spark, tmp_path, dv_file):
+    """Files that differ in columns: f0 has (k, a), f1 (k, a, b). A
+    deletion vector on either file leaves the snapshot's schema the
+    one a DV-free read infers ([k, a], from the first file), and the
+    evolved reader still merges every column. Scanning the DV files
+    apart from the rest once gave each part its own schema and broke
+    their union."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(k, 10 * k) for k in range(6)], "k long, a long"
+    ).coalesce(1).write.parquet(f"{base}/f0")
+    spark.createDataFrame(
+        [(k, 10 * k, f"b{k}") for k in range(6, 12)],
+        "k long, a long, b string",
+    ).coalesce(1).write.parquet(f"{base}/f1")
+    lakelog.commit(base, 0, [{"add": "f0"}, {"add": "f1"}])
+    lakelog.commit(
+        base,
+        1,
+        [{"metaData": {"fields": [
+            ["k", "bigint"], ["a", "bigint"], ["b", "string"],
+        ]}}],
+    )
+    plain = lakelog.read_snapshot(spark, base)
+    assert plain.columns == ["k", "a"] and plain.count() == 12
+    dead = 2 + 6 * dv_file
+    lakelog.delete_where_mor(spark, base, F.col("k") == dead)
+    live = [k for k in range(12) if k != dead]
+    snap = lakelog.read_snapshot(spark, base)
+    assert snap.columns == ["k", "a"]
+    assert sorted(tuple(r) for r in snap.collect()) == [
+        (k, 10 * k) for k in live
+    ]
+    evolved = lakelog.read_snapshot_evolved(spark, base)
+    assert evolved.columns == ["k", "a", "b"]
+    assert sorted(
+        (r.k, r.b) for r in evolved.collect()
+    ) == [(k, f"b{k}" if k >= 6 else None) for k in live]
 
 
 def test_publish_staged_retry_is_idempotent(spark, tmp_path):
@@ -1407,6 +1534,39 @@ def test_lakelog_reads_parquet_only_through_scan():
         and not scan_def.lineno <= n.lineno <= scan_def.end_lineno
     ]
     assert not hits, f"read lake parquet through scan(): lines {hits}"
+
+
+def test_row_positions_only_through_join_positions():
+    """Row positions have one owner: ``_metadata.`` (the scan's hidden
+    file path and row index) appears in the module only inside
+    ``_join_positions``; and only the writers that rewrite or
+    reference raw parquet still refuse deletion vectors — every
+    snapshot reader applies them through ``_read_active``."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(lakelog.__file__).read_text()
+    tree = ast.parse(src)
+    defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    helper = next(n for n in defs if n.name == "_join_positions")
+    hits = [
+        i
+        for i, line in enumerate(src.splitlines(), 1)
+        if "_metadata." in line
+        and not helper.lineno <= i <= helper.end_lineno
+    ]
+    assert not hits, f"tag row positions in _join_positions: lines {hits}"
+    guarded = {
+        d.name
+        for d in defs
+        for n in ast.walk(d)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "_assert_no_dv"
+    }
+    assert guarded == {
+        "merge_upsert", "delete_where", "apply_cdc", "shallow_clone",
+    }
 
 
 def test_vacuum_folds_the_retention_window_once(tmp_path, monkeypatch):
@@ -2117,8 +2277,9 @@ def test_apply_cdc_refuses_dv_tables(spark, tmp_path):
 
 def test_table_changes_relative_table_dir(spark, tmp_path):
     """Round-8 review fix: a relative table_dir must serve
-    DV-derived deletes identically to an absolute one (paths are
-    compared against the absolute _metadata.file_path)."""
+    DV-derived deletes, and apply the DV on a snapshot read,
+    identically to an absolute one (paths are compared against the
+    absolute _metadata.file_path)."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -2139,6 +2300,10 @@ def test_table_changes_relative_table_dir(spark, tmp_path):
     finally:
         _os.chdir(cwd)
     assert got == [(1, "delete"), (3, "delete")]
+    # a read resolves a relative table_dir against the session's
+    # working directory, which is this process's own here
+    live = lakelog.read_snapshot(spark, _os.path.relpath(base)).collect()
+    assert sorted(r.k for r in live) == [0, 2, 4, 5]
 
 
 def test_unreadable_staged_entry_fails_safe(spark, tmp_path):
