@@ -16,8 +16,9 @@ reference bundled but never wired (SQLite at ``src/main.cpp:37``):
     python -m etl_lens_spark.cli explain q3_shipping_priority
 
 Every subcommand is a thin veneer over the library (catalog.py, the
-query registry, load_table) — the CLI holds no query logic of its own,
-so anything it prints is exactly what the tested API returns. Output
+query registry, the session's shared table frames) — the CLI holds no
+query logic of its own, so anything it prints is exactly what the
+tested API returns. Output
 is ``df.show()`` (human) or ``--format tsv`` (machine), both computed
 with a LIMIT pushed into the plan, never a driver-side collect of an
 unbounded result.
@@ -58,11 +59,13 @@ def _emit(df: DataFrame, limit: int, fmt: str, out=sys.stdout) -> None:
 
 
 def cmd_catalog(spark: SparkSession, args, out=sys.stdout) -> int:
-    """EP1 + EP3: build the event-type catalog, sort interactively."""
+    """EP1 + EP3: build the event-type catalog, sort interactively.
+    ``events`` is the session's shared frame (``shared_table``), read
+    again only when its file changed."""
     from etl_lens_spark.catalog import build_catalog, multi_key_sort
-    from etl_lens_spark.sources.tables import load_table
+    from etl_lens_spark.sources.tables import shared_table
 
-    cat = build_catalog(load_table(spark, args.sf_dir, "events"))
+    cat = build_catalog(shared_table(spark, args.sf_dir, "events"))
     specs = _parse_sort(args.sort) or [("event_type", True)]
     cat = multi_key_sort(cat, specs, tiebreak=["event_type"])
     _emit(
@@ -76,11 +79,13 @@ def cmd_catalog(spark: SparkSession, args, out=sys.stdout) -> int:
 
 def cmd_query(spark: SparkSession, args, out=sys.stdout) -> int:
     """EP2: the per-type interactive query (filter → project →
-    first-N under event-time order)."""
+    first-N under event-time order) over the session's shared
+    ``events`` frame: a click reads no footer and analyzes no scan
+    while the file is unchanged."""
     from etl_lens_spark.catalog import per_type_query
-    from etl_lens_spark.sources.tables import load_table
+    from etl_lens_spark.sources.tables import shared_table
 
-    ev = load_table(spark, args.sf_dir, "events")
+    ev = shared_table(spark, args.sf_dir, "events")
     res = per_type_query(ev, args.type, limit=args.limit)
     if args.columns:
         res = res.select(*[c.strip() for c in args.columns.split(",")])
@@ -90,7 +95,10 @@ def cmd_query(spark: SparkSession, args, out=sys.stdout) -> int:
 
 def cmd_sql(spark: SparkSession, args, out=sys.stdout) -> int:
     """The latent SQL surface: every fixture table registered as a
-    view, arbitrary Spark SQL against them."""
+    view, arbitrary Spark SQL against them. A view is registered again
+    only when its file changed or the session's view of that name is
+    no longer ours (``register_views``), so a repeat statement reads
+    no table."""
     from etl_lens_spark.sources.tables import register_views
 
     register_views(spark, args.sf_dir)

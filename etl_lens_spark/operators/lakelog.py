@@ -1726,34 +1726,46 @@ def stage(table_dir: str, tag: str, actions: list[dict]) -> dict:
 
 
 def staged_entry(table_dir: str, tag: str) -> dict:
-    with open(os.path.join(_staged_dir(table_dir), f"{tag}.json")) as f:
-        return json.load(f)
+    """The entry staged under ``tag``: FileNotFoundError when none is,
+    ValueError when its file does not parse."""
+    for entry in _staged_entries(table_dir, tag).values():
+        return entry
+    raise ValueError(f"staged entry {tag!r} does not parse")
 
 
-def _staged_entries(table_dir: str) -> dict[str, dict]:
-    """Every parseable staged entry, keyed by its file path, in tag
-    order. Unparseable ``.json`` files (crash debris from pre-atomic
-    ``stage`` writers) are skipped defensively so one truncated entry
-    can never turn table-wide maintenance (vacuum / find_orphans /
-    the GDPR purge) into a JSON outage; since stage() became atomic
-    such files cannot be produced anymore.
+def _staged_entries(
+    table_dir: str, tag: str | None = None
+) -> dict[str, dict]:
+    """Every parseable staged entry (only ``tag``'s when given), keyed
+    by its file path, in tag order — the one parser of
+    ``_log/_staged/*.json``. Unparseable ``.json`` files (crash debris
+    from pre-atomic ``stage`` writers) are skipped defensively so one
+    truncated entry can never turn table-wide maintenance (vacuum /
+    find_orphans / the GDPR purge) into a JSON outage; since stage()
+    became atomic such files cannot be produced anymore. A named tag
+    that is not staged raises FileNotFoundError.
 
     Only PARSE failures are skipped: an entry that cannot even be
     READ (EACCES, I/O error) propagates — deleting data because its
     protection record was temporarily unreadable would be
     fail-unsafe (round-8 review fix)."""
     staged_dir = os.path.join(_log_dir(table_dir), "_staged")
+    if tag is not None:
+        names = [f"{tag}.json"]
+    elif os.path.isdir(staged_dir):
+        names = sorted(
+            f for f in os.listdir(staged_dir) if f.endswith(".json")
+        )
+    else:
+        names = []
     out: dict[str, dict] = {}
-    if os.path.isdir(staged_dir):
-        for f in sorted(os.listdir(staged_dir)):
-            if not f.endswith(".json"):
-                continue
-            path = os.path.join(staged_dir, f)
-            try:
-                with open(path) as fh:
-                    out[path] = json.load(fh)
-            except (json.JSONDecodeError, UnicodeDecodeError):
-                continue
+    for f in names:
+        path = os.path.join(staged_dir, f)
+        try:
+            with open(path) as fh:
+                out[path] = json.load(fh)
+        except (json.JSONDecodeError, UnicodeDecodeError):
+            continue
     return out
 
 
@@ -2075,24 +2087,34 @@ def _join_positions(
     the CDF delete frames, the restore record) matches rows the same
     way. A row is ``(path, row index, *extra)``; ``extra`` declares
     the extra columns' DDL (``", _change_type string"``). Both sides
-    key by the absolute, normalized file path: ``rows`` paths go
+    key by the absolute, normalized OS path: ``rows`` paths go
     through ``os.path.abspath`` here (once per distinct path), the
-    scan's through Hadoop's own normalization. The small side is
-    broadcast; an anti-join with no rows is the identity and only
-    tags. The result keeps the tags ``__p`` (path) and ``__ri`` (row
-    index) beside ``df``'s columns and the extra ones."""
+    scan's through Hadoop's own normalization and then URL-decoding,
+    since ``_metadata.file_path`` is a URI (a space is ``%20``, a
+    ``%`` is ``%25``; a ``+`` stays raw, so it is escaped first or
+    ``url_decode`` would turn it into a space). The small side is
+    one Arrow table, a local relation: no Python worker and no job
+    builds it. It is broadcast; an anti-join with no rows is the
+    identity and only tags. The result keeps the tags ``__p`` (path)
+    and ``__ri`` (row index) beside ``df``'s columns and the extra
+    ones."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
-    path = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+    uri = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+    path = F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B")))
     tagged = df.withColumn("__p", path).withColumn(
         "__ri", F.col("_metadata.row_index")
     )
     if not rows and how == "left_anti":
         return tagged
+    schema = StructType.fromDDL("__p string, __ri long" + extra)
     norm = {p: os.path.abspath(p) for p in {r[0] for r in rows}}
+    cols = [list(c) for c in zip(*rows)] or [[] for _ in schema.fields]
+    cols[0] = [norm[p] for p in cols[0]]
     keys = spark.createDataFrame(
-        [(norm[r[0]], *r[1:]) for r in rows],
-        "__p string, __ri long" + extra,
+        pa.table(dict(zip(schema.names, cols))), schema
     )
     return tagged.join(F.broadcast(keys), ["__p", "__ri"], how)
 

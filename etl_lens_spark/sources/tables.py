@@ -30,6 +30,29 @@ footer read. Files without the key (written by pyarrow) infer once
 per file, as before. The memo grows by one small entry per distinct
 path read and is bounded by the files a session touches;
 ``lakelog.scan`` adds one entry per scan (its first data file).
+
+The CLI answers many actions from one session, as the reference viewer
+answers every click from one loaded trace. Its actions read tables
+through a per-session handle instead of ``load_table``
+(``shared_table``, ``register_views``). A handle is keyed by
+(session, table realpath) and holds the footer stamp its frame was
+read under (the memo's key above: file stats plus inference confs),
+one DataFrame shared by the session's actions, and the temp view it
+registered. The frame is read again, through ``load_table``, only when
+the file's current stamp differs, so a rewritten file is still served
+fresh (and ``_memo_schema`` still refreshes frames cached over its old
+bytes). ``register_views`` re-registers a table only when its frame
+was read again, or when the session's temp view of that name is no
+longer the one the handle registered: another caller replaced or
+dropped it, or the same name was registered for another ``sf_dir``.
+Otherwise it runs no read, no analysis and no view creation. A reused
+``events`` frame keeps the session timezone its ``ts`` cast was
+analyzed under (``load_table`` pins UTC on each read). ``load_table``
+itself stays fresh per call: a self-join of two of its results needs
+two distinct Datasets. A stopped session's handles are dropped when a
+new handle is stored. Like the memo, the handles take no lock: two
+threads reading one table at once both read it, and the last store
+wins.
 """
 
 from __future__ import annotations
@@ -37,6 +60,7 @@ from __future__ import annotations
 import json
 import os
 import stat
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -227,9 +251,61 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the Spark SQL surface)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
+@dataclass
+class _Handle:
+    stamp: tuple | None  # the footer stamp ``df`` was read under
+    df: DataFrame  # shared by every action of the session
+    view: object = None  # the TemporaryViewRelation registered for it
+
+
+# (session, table realpath) -> its handle (module docstring)
+_HANDLES: dict[tuple[SparkSession, str], _Handle] = {}
+
+
+def _handle(spark: SparkSession, sf_dir: str, name: str) -> _Handle:
+    """The session's handle of one table, read again through
+    ``load_table`` when the file's footer stamp changed. A path that
+    cannot be stat'ed gets a new handle on every call."""
+    real = os.path.realpath(table_path(sf_dir, name))
+    key = (spark, real)
+    h = _HANDLES.get(key)
+    if h is not None and h.stamp == _footer_stamp(spark, real):
+        return h
+    df = load_table(spark, sf_dir, name)
+    # the stamp the memo inferred the frame's schema under (for
+    # events, after load_table pinned its confs)
+    memo = _FOOTER_SCHEMAS.get(real)
+    if memo is None:
+        return _Handle(None, df)
+    if h is None:
+        for k in [k for k in _HANDLES if k[0].sparkContext._jsc is None]:
+            del _HANDLES[k]
+    h = _HANDLES[key] = _Handle(memo[0], df)
+    return h
+
+
+def shared_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The session's shared frame of one table (module docstring): the
+    same DataFrame on every call until the file's footer stamp
+    changes. For single-frame plans such as a CLI action; a self-join
+    needs two ``load_table`` results."""
+    return _handle(spark, sf_dir, name).df
+
+
+def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Register every table as a temp view (for the Spark SQL surface)
+    through the session's handles; returns the names it registered,
+    which is none when every view is still the handle's own (module
+    docstring)."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    registered = []
+    # events first: its read pins session confs that every stamp holds
+    for name in sorted(TABLE_NAMES, key=lambda n: n != "events"):
+        h = _handle(spark, sf_dir, name)
+        current = catalog.getRawTempView(name)
+        if h.view is not None and current.contains(h.view):
+            continue
+        h.df.createOrReplaceTempView(name)
+        h.view = catalog.getRawTempView(name).get()
+        registered.append(name)
+    return registered

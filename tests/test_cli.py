@@ -5,8 +5,18 @@ gets at a shell must be exactly what the tested library returns."""
 from __future__ import annotations
 
 import io
+import os
+import shutil
+import subprocess
+import sys
+import textwrap
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 
 from etl_lens_spark import cli
+from etl_lens_spark.sources import tables
 
 
 def _run(spark, argv):
@@ -147,3 +157,194 @@ def test_cli_config_lists_every_knob_and_reflects_sets(spark, sf_dir):
         assert "\t512\t" in row and "(set)" in row
     finally:
         spark.conf.unset("spark.etl_lens.cms.width")
+
+
+# -- the session's table handles (sources/tables.py) ---------------------
+
+
+def _copy_sf(src, dst):
+    """A writable copy of a fixture directory."""
+    dst.mkdir()
+    for name in tables.TABLE_NAMES:
+        shutil.copyfile(
+            tables.table_path(src, name), tables.table_path(str(dst), name)
+        )
+    return str(dst)
+
+
+def _sql(spark, sf, statement):
+    rc, out = _run(
+        spark, ["sql", "--sf-dir", sf, "--format", "tsv", statement]
+    )
+    assert rc == 0
+    return out.strip().splitlines()[1:]
+
+
+def _rewrite(sf, name, n, **extra):
+    """Rewrite table ``name`` in place with its first ``n`` rows plus
+    the constant columns ``extra``, in row groups of 2 rows."""
+    path = tables.table_path(sf, name)
+    t = pq.read_table(path).slice(0, n)
+    for col, value in extra.items():
+        t = t.append_column(col, pa.array([value] * t.num_rows))
+    pq.write_table(t, path, row_group_size=2)
+
+
+@pytest.fixture
+def counted(monkeypatch):
+    """The table names ``load_table`` reads and the temp views created,
+    in call order."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    loads, views = [], []
+    load = tables.load_table
+    create = DataFrame.createOrReplaceTempView
+
+    def counting_load(spark, sf_dir, name):
+        loads.append(name)
+        return load(spark, sf_dir, name)
+
+    def counting_create(df, name):
+        views.append(name)
+        return create(df, name)
+
+    monkeypatch.setattr(tables, "load_table", counting_load)
+    monkeypatch.setattr(DataFrame, "createOrReplaceTempView", counting_create)
+    return loads, views
+
+
+def test_repeat_sql_reads_no_table_and_creates_no_view(spark, sf_dir, counted):
+    loads, views = counted
+    first = _sql(spark, sf_dir, "SELECT count(*) FROM lineitem")
+    loads.clear()
+    views.clear()
+    assert _sql(spark, sf_dir, "SELECT count(*) FROM lineitem") == first
+    assert _sql(spark, sf_dir, "SELECT r_name FROM region") != []
+    assert loads == [] and views == []
+
+
+def test_rewritten_table_file_shows_its_new_rows(spark, sf_dir, tmp_path):
+    """A file rewritten at the same path is read again: its new column
+    resolves and every new row group is scanned."""
+    sf = _copy_sf(sf_dir, tmp_path / "sf")
+    assert _sql(spark, sf, "SELECT count(*) FROM region") == ["5"]
+    click = ["query", "--sf-dir", sf, "--type", "click", "--format", "tsv"]
+    assert len(_run(spark, click)[1].splitlines()) > 2
+    _rewrite(sf, "region", 3, r_extra=7)
+    stmt = "SELECT count(*), sum(r_extra) FROM region"
+    assert _sql(spark, sf, stmt) == ["3\t21"]
+    _rewrite(sf, "events", 1000, note="n")
+    n_click = pq.read_table(tables.table_path(sf, "events")).column(
+        "event_type"
+    ).to_pylist().count("click")
+    rc, out = _run(spark, click + ["--columns", "event_id,note", "--limit", "500"])
+    assert rc == 0
+    assert out.splitlines()[0] == "event_id\tnote"
+    assert len(out.splitlines()) == 1 + n_click
+
+
+def test_foreign_view_of_a_table_name_is_replaced(spark, sf_dir, counted):
+    loads, views = counted
+    n = str(pq.read_metadata(tables.table_path(sf_dir, "orders")).num_rows)
+    assert _sql(spark, sf_dir, "SELECT count(*) FROM orders") == [n]
+    spark.range(3).createOrReplaceTempView("orders")
+    loads.clear()
+    views.clear()
+    assert _sql(spark, sf_dir, "SELECT count(*) FROM orders") == [n]
+    assert loads == [] and views == ["orders"]
+
+
+def test_dropped_view_is_registered_again(spark, sf_dir):
+    assert _sql(spark, sf_dir, "SELECT count(*) FROM nation") == ["25"]
+    spark.catalog.dropTempView("nation")
+    assert _sql(spark, sf_dir, "SELECT count(*) FROM nation") == ["25"]
+
+
+def test_second_sf_dir_takes_over_the_view_names(spark, sf_dir, tmp_path):
+    other = _copy_sf(sf_dir, tmp_path / "sf")
+    _rewrite(other, "region", 2)
+    count = "SELECT count(*) FROM region"
+    assert _sql(spark, sf_dir, count) == ["5"]
+    assert _sql(spark, other, count) == ["2"]
+    assert _sql(spark, sf_dir, count) == ["5"]
+
+
+def test_inference_conf_change_registers_again(spark, sf_dir, counted):
+    loads, views = counted
+    stmt = "SELECT min(unix_micros(ts)), max(unix_micros(ts)) FROM events"
+    want = _sql(spark, sf_dir, stmt)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    loads.clear()
+    views.clear()
+    try:
+        assert _sql(spark, sf_dir, stmt) == want
+    finally:
+        spark.conf.set(conf, before)
+    assert "events" in loads and "events" in views
+
+
+def test_new_session_after_stop(sf_dir):
+    """Handles are per session: a session built after ``stop()`` gets
+    its own frames and views, not the stopped session's."""
+    script = textwrap.dedent(
+        """
+        import io, sys
+        from pyspark.sql import SparkSession
+        from etl_lens_spark import cli
+
+        def run(spark, argv):
+            buf = io.StringIO()
+            assert cli.main(argv + ["--sf-dir", sys.argv[1],
+                                    "--format", "tsv"], spark, buf) == 0
+            return buf.getvalue()
+
+        outs = []
+        for _ in range(2):
+            spark = (SparkSession.builder.master("local[1]")
+                     .config("spark.driver.memory", "512m")
+                     .config("spark.ui.enabled", "false").getOrCreate())
+            outs.append(run(spark, ["sql", "SELECT count(*) FROM orders"])
+                        + run(spark, ["query", "--type", "click",
+                                      "--limit", "5"]))
+            spark.stop()
+        assert outs[0] == outs[1] and len(outs[0].splitlines()) == 8, outs
+        print("ok")
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    res = subprocess.run(
+        [sys.executable, "-c", script, sf_dir],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0 and res.stdout.strip().endswith("ok"), (
+        res.stdout[-2000:] + res.stderr[-4000:]
+    )
+
+
+@pytest.mark.parametrize("fmt", ["tsv", "show"])
+def test_click_output_equals_the_load_table_path(spark, sf_dir, fmt):
+    from etl_lens_spark.catalog import per_type_query
+
+    assert tables.shared_table(spark, sf_dir, "events") is tables.shared_table(
+        spark, sf_dir, "events"
+    )
+    for et, limit, cols in (
+        ("click", 20, None), ("view", 100, "ts,event_id,props"),
+        ("purchase", 500, "user_id,value"),
+    ):
+        argv = ["query", "--sf-dir", sf_dir, "--type", et,
+                "--limit", str(limit), "--format", fmt]
+        rc, got = _run(spark, argv + (["--columns", cols] if cols else []))
+        assert rc == 0
+        want = per_type_query(
+            tables.load_table(spark, sf_dir, "events"), et, limit=limit
+        )
+        if cols:
+            want = want.select(*cols.split(","))
+        buf = io.StringIO()
+        cli._emit(want, limit, fmt, buf)
+        assert got == buf.getvalue()
+        assert len(got.splitlines()) > 2

@@ -2306,6 +2306,65 @@ def test_table_changes_relative_table_dir(spark, tmp_path):
     assert sorted(r.k for r in live) == [0, 2, 4, 5]
 
 
+@pytest.mark.parametrize("rel", ["s0", "s 0%2B+"])
+def test_dv_paths_with_space_percent_and_plus(spark, tmp_path, rel):
+    """``_metadata.file_path`` is a URI (``%20``, ``%25``) and ``+``
+    stays raw in it: a table under a directory (and a rel) named with
+    all three must match its row positions, so the MOR delete finds
+    its rel, the snapshot drops the dead rows, the change feed serves
+    them as deletes and a CDF restore brings them back as inserts."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "sp ace%2B+x" / "t")
+    spark.createDataFrame(
+        [(k, k) for k in range(6)], "k long, v long"
+    ).coalesce(1).write.parquet(os.path.join(base, rel))
+    lakelog.commit(base, 0, [{"add": rel}])
+    res = lakelog.delete_where_mor(spark, base, F.col("k").isin(1, 3))
+    assert res["n_rows_deleted"] == 2
+    live = lakelog.read_snapshot(spark, base).collect()
+    assert sorted(r.k for r in live) == [0, 2, 4, 5]
+    got = sorted(
+        (r.k, r._change_type)
+        for r in lakelog.table_changes(spark, base, 0, 1).collect()
+    )
+    assert got == [(1, "delete"), (3, "delete")]
+    lakelog.restore_table(spark, base, 0, cdf=True)
+    got = sorted(
+        (r.k, r._change_type)
+        for r in lakelog.table_changes(spark, base, 1, 2).collect()
+    )
+    assert got == [(1, "insert"), (3, "insert")]
+    assert lakelog.read_snapshot(spark, base).count() == 6
+
+
+def test_position_side_is_a_local_relation(spark, tmp_path):
+    """The small side of ``_join_positions`` is one Arrow table, a
+    ``LocalRelation``: rows built as Python rows (``LogicalRDD`` over a
+    Python RDD) would run a Python-worker job on every DV read, MOR
+    delete, CDF position delete and restore record."""
+    base = str(tmp_path / "t")
+    spark.range(8).coalesce(1).write.parquet(f"{base}/s0")
+    df = lakelog.scan(spark, [f"{base}/s0"])
+    part = next(
+        os.path.join(base, "s0", f)
+        for f in sorted(os.listdir(f"{base}/s0"))
+        if f.endswith(".parquet")
+    )
+    for rows, how, extra in (
+        ([(part, 1), (part, 5)], "left_anti", ""),
+        ([(part, 2, "delete")], "inner", ", _change_type string"),
+        ([], "left_semi", ""),
+    ):
+        out = lakelog._join_positions(spark, df, rows, how, extra)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    got = lakelog._join_positions(
+        spark, df, [(part, 1), (part, 5)], "left_anti"
+    ).collect()
+    assert sorted(r.id for r in got) == [0, 2, 3, 4, 6, 7]
+
+
 def test_unreadable_staged_entry_fails_safe(spark, tmp_path):
     """Round-8 review fix: an entry that cannot be READ (vs parsed)
     must propagate — vacuum deleting data because its protection
