@@ -1,14 +1,24 @@
-"""Benchmark harness: timed runs of the headline queries.
+"""Benchmark harness: timed runs of registry queries.
 
-Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``. The FINAL stdout line is the compact
-contract JSON:
+``python bench.py [query ...]`` times the named registry queries, in
+the order given (any registry name; an unknown one exits non-zero
+before a Spark session starts), or with no names the headline
+queries. Runs at ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1; a replica from ``tools/make_scale.py`` is
+``.scratch/sf1``) on ``local[$SPARK_GRAFT_CPUS]``. The FINAL stdout
+line is the compact contract JSON:
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries":
 {name: sec, ...}, "sf": ...}`` (plus the calibration summary) —
 kept under 2 kB so a bounded tail capture can never cut it mid-JSON
-(that is how round 10's comparison was lost). Per-run arrays and
+(that is how round 10's comparison was lost). The metric is
+``headline_queries_total_sec`` for the default set and
+``queries_total_sec`` for named queries. Per-run arrays and
 untimed setup timings print on their own ``"detail": "bench_runs"``
 JSON line immediately before it.
+
+An interleaved A/B is this script alternated between two checkouts,
+each run's stdout saved to a file named for its arm; the calibration
+anchor of each run makes residual box drift visible.
 
 Each query is executed via the noop sink
 (``df.write.format("noop").mode("overwrite").save()``) — every output
@@ -80,10 +90,34 @@ def _calibration_df(spark):
     )
 
 
+def timed_thunk(spark, sf_dir: str, name: str):
+    """The zero-arg callable a timed run of registry query ``name``
+    executes: its ``queries.BENCH_SETUP`` split when one is registered
+    (the fixture build runs here, untimed), else ``spec.fn`` (plan
+    construction stays inside the timed call)."""
+    from etl_lens_spark.queries import BENCH_SETUP, all_queries
+
+    fn = all_queries()[name]  # loads the registry, and BENCH_SETUP
+    prepare = BENCH_SETUP.get(name)
+    if prepare is not None:
+        return prepare(spark, sf_dir)
+    return lambda: fn(spark, sf_dir)
+
+
 def main() -> None:
+    names = list(dict.fromkeys(sys.argv[1:]))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from etl_lens_spark.queries import BENCH_SETUP, all_queries, headline_queries
+
+    # unknown names fail here, before a Spark session starts
+    known = all_queries()
+    unknown = [n for n in names if n not in known]
+    if unknown:
+        sys.exit(f"bench.py: unknown query name(s): {' '.join(unknown)}")
+    metric = "queries_total_sec" if names else "headline_queries_total_sec"
+    names = names or list(headline_queries())
+
     from etl_lens_spark import get_spark
-    from etl_lens_spark.queries import BENCH_SETUP, headline_queries
 
     spark = get_spark(app_name="etl-lens-bench")
 
@@ -91,18 +125,20 @@ def main() -> None:
         # noop sink: materializes all columns AND runs top-level sorts
         df.write.format("noop").mode("overwrite").save()
 
-    specs = headline_queries()
-    # warm-up: run the first headline query once (JVM + codegen warm)
-    first = next(iter(specs.values()))
-    run_full(first.fn(spark, sf_dir))
+    def calibration_runs() -> list[float]:
+        # 3 runs, all reported (min is the number to divide between
+        # rounds — see module docstring)
+        runs: list[float] = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            run_full(_calibration_df(spark))
+            runs.append(round(time.perf_counter() - t0, 3))
+        return runs
 
-    # calibration anchor: 3 runs, all reported (min is the number to
-    # divide between rounds — see module docstring)
-    cal_runs: list[float] = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        run_full(_calibration_df(spark))
-        cal_runs.append(round(time.perf_counter() - t0, 3))
+    # warm-up: run the first query once (JVM + codegen warm)
+    run_full(timed_thunk(spark, sf_dir, names[0])())
+
+    cal_runs = calibration_runs()
 
     # min of 2 runs per query: steady-state throughput (what a
     # resident cluster delivers), robust to one-off JIT/GC noise;
@@ -110,21 +146,17 @@ def main() -> None:
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     setup_secs: dict[str, list[float]] = {}
-    for name, spec in specs.items():
-        prepare = BENCH_SETUP.get(name)
+    for name in names:
         runs: list[float] = []
         for _ in range(2):
-            if prepare is not None:
-                s0 = time.perf_counter()
-                thunk = prepare(spark, sf_dir)
+            s0 = time.perf_counter()
+            thunk = timed_thunk(spark, sf_dir, name)
+            if name in BENCH_SETUP:
                 setup_secs.setdefault(name, []).append(
                     round(time.perf_counter() - s0, 3)
                 )
-                t0 = time.perf_counter()
-                run_full(thunk())
-            else:
-                t0 = time.perf_counter()
-                run_full(spec.fn(spark, sf_dir))
+            t0 = time.perf_counter()
+            run_full(thunk())
             runs.append(round(time.perf_counter() - t0, 3))
         all_runs[name] = runs
         timings[name] = min(runs)
@@ -132,18 +164,14 @@ def main() -> None:
     # END-of-run calibration (round-10 judge item): in-run box
     # degradation poisoned BENCH_r10 invisibly because the anchor ran
     # only at the start. Re-running the pinned anchor after the last
-    # headliner makes a degrading box readable from the JSON alone.
+    # query makes a degrading box readable from the JSON alone.
     # The invalidation test is ONE-SIDED (end slower than start by
     # >1.3x): a faster end anchor is routine JIT/codegen warm-in on
     # the anchor's own paths — measured ~0.70 start vs ~0.53 end on
     # a quiet box — while a SLOWER end anchor is the degradation
     # signature that poisoned r10. The start anchor stays unwarmed
     # so cross-round anchor ratios remain comparable with r9/r10.
-    cal_end_runs: list[float] = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        run_full(_calibration_df(spark))
-        cal_end_runs.append(round(time.perf_counter() - t0, 3))
+    cal_end_runs = calibration_runs()
     cal_start = min(cal_runs)
     cal_end = min(cal_end_runs)
     drift = round(max(cal_start, cal_end) / min(cal_start, cal_end), 3)
@@ -170,7 +198,7 @@ def main() -> None:
     }
     print(json.dumps(detail))
     out = {
-        "metric": "headline_queries_total_sec",
+        "metric": metric,
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,

@@ -1,10 +1,10 @@
 """Capture .explain("formatted") for every headline query.
 
 Writes ``plans/r12/<name>_<tag>.txt`` for each headline query (tag =
-``before``/``after`` via argv). Split queries (queries.BENCH_SETUP)
-run their untimed setup first and the plan captured is the TIMED
-thunk's — the operator the bench measures. Optionally restrict to a
-subset: ``python tools/capture_plans.py before [query ...]``.
+``before``/``after`` via argv). Each plan is that of the DataFrame
+``bench.timed_thunk`` returns — the one the bench times (a split query
+in queries.BENCH_SETUP runs its untimed setup first). Optionally
+restrict to a subset: ``python tools/capture_plans.py before [query ...]``.
 """
 
 from __future__ import annotations
@@ -29,21 +29,17 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
+    from bench import timed_thunk
     from etl_lens_spark import get_spark
-    from etl_lens_spark.queries import BENCH_SETUP, headline_queries
+    from etl_lens_spark.queries import headline_queries
 
     spark = get_spark(app_name=f"etl-lens-plans-{tag}")
-    specs = headline_queries()
-    for name, spec in specs.items():
+    for name in headline_queries():
         if only and name not in only:
             continue
         spark.sparkContext.setJobDescription(f"plan: {name}")
         try:
-            prepare = BENCH_SETUP.get(name)
-            if prepare is not None:
-                df = prepare(spark, SF_DIR)()
-            else:
-                df = spec.fn(spark, SF_DIR)
+            df = timed_thunk(spark, SF_DIR, name)()
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")

@@ -1,12 +1,18 @@
 """Synthesize a larger scale factor by FK-consistent replication.
 
 ``python tools/make_scale.py [factor]`` replicates /root/testdata/sf0.1
-``factor``x (default 10) into .scratch/sfbig/, offsetting every key
-column by copy_index * range so joins keep exactly the same selectivity
-per copy (each copy is a disjoint universe; dims region/nation are
-shared). Used by tools/scale_probe.py to measure how headline-query
-runtime scales with input size — the local stand-in for the 100 TB
-question "is anything super-linear?".
+``factor``x (default 10) into ``.scratch/sf{0.1*factor}`` (``.scratch/sf1``
+for the default), offsetting every key column by copy_index * range so
+joins keep exactly the same selectivity per copy (each copy is a
+disjoint universe; dims region/nation are shared). The replica sits
+beside the per-process ``run_<pid>`` scratch dirs, not inside one, so
+it outlives this process and the dead-run sweep of later ones. Time
+the headline queries on it with
+
+    SPARK_GRAFT_SF_DIR=.scratch/sf1 python bench.py [query ...]
+
+— the local stand-in for the 100 TB question "is anything
+super-linear?". bench's ``"sf"`` field then reads ``1.0``.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from etl_lens_spark import get_spark
-from etl_lens_spark.sources.sinks import scratch_path
+from etl_lens_spark.sources import sinks
 
 SRC = "/root/testdata/sf0.1"
 
@@ -52,9 +58,15 @@ UNITS = {
 }
 
 
+def out_dir_for(factor: int) -> str:
+    """The replica's directory: ``sf<0.1 x factor>`` under the scratch
+    root, named so bench.py reports its scale factor."""
+    return os.path.join(sinks._SCRATCH_ROOT, f"sf{0.1 * factor:g}")
+
+
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = scratch_path("sfbig")
+    out_dir = out_dir_for(factor)
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir)
     spark = get_spark(app_name="make-scale")
