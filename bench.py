@@ -39,7 +39,12 @@ separable from code drift by inspection of the JSON alone:
   rounds' calibration_sec gives the box-speed ratio; divide the
   headline totals by it before reading anything as a regression.
   DO NOT MODIFY ``_calibration_df`` — its stability across rounds
-  is the whole point.
+  is the whole point. ``calibration_end_sec`` reruns the anchor after
+  the timed loop, and ``self_invalidating`` flags a run whose end
+  anchor is over 1.3× its start. There is no two-sided ratio: the
+  start anchor runs right after a one-query warm-up, so JIT warm-in
+  alone makes the end anchor faster on a steady box, and a max/min
+  ratio cannot tell that from drift.
 - ``runs`` (on the detail line): per-query ALL run times (not just
   the min), so one-off page-cache/GC outliers are visible rather
   than silently folded away.
@@ -174,7 +179,6 @@ def main() -> None:
     cal_end_runs = calibration_runs()
     cal_start = min(cal_runs)
     cal_end = min(cal_end_runs)
-    drift = round(max(cal_start, cal_end) / min(cal_start, cal_end), 3)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -204,7 +208,6 @@ def main() -> None:
         "queries": timings,
         "calibration_sec": cal_start,
         "calibration_end_sec": cal_end,
-        "calibration_drift": drift,
         "self_invalidating": cal_end > cal_start * 1.3,
         "sf": sf_val,
     }

@@ -11,10 +11,11 @@ On-disk layout of a table directory:
   ``partitionSpec`` / ``constraint`` / ``dropConstraint``, ``cdc``,
   and markers (``op``, ``wap``, ``restore``, ``gdprPurge``).
   Created with O_EXCL; read only through ``commit_actions``. Every
-  add that a DML writer (``merge_upsert``, ``delete_where``,
+  add that a writer (``merge_upsert``, ``delete_where``,
   ``apply_cdc``, ``optimize_compact``,
-  ``materialize_deletion_vectors``) makes for a rel it just wrote
-  carries ``num_records``, read from the written parquet footers, so
+  ``materialize_deletion_vectors``, ``rewrite_minus_ids``,
+  ``constrained_append``) makes for a rel it just wrote carries
+  ``num_records``, read from the written parquet footers, so
   ``optimize_compact`` sizes those files from the log with no scan.
 - ``_log/{v:08d}.checkpoint.json`` — the folded state at ``v``: the
   active ``add`` actions in first-added order, then
@@ -55,8 +56,9 @@ staged, pruned, bloom, hidden-partition, multi-table, evolved,
 mapped) goes through it, so every one applies deletion vectors: the
 dead row positions of DV files are anti-joined away, and a DV-free
 set is the plain scan alone. Only writers that rewrite or reference
-raw parquet (``merge_upsert``, ``delete_where``, ``apply_cdc``,
-``shallow_clone``) refuse DV files — materialize first.
+raw parquet (``shallow_clone``, and the one copy-on-write path,
+``_copy_on_write``, behind ``merge_upsert``, ``delete_where`` and
+``apply_cdc``) refuse DV files — materialize first.
 The reference has no storage management at all (it re-scans one .etl
 file per query, src/main.cpp:1081); this is [L]/[N] lakehouse surface
 Spark users expect from an analytics engine.
@@ -590,9 +592,10 @@ def read_snapshot(
 
 def _assert_no_dv(active: dict[str, dict], op: str) -> None:
     """Guard for the writers that rewrite or reference raw parquet
-    (``merge_upsert``, ``delete_where``, ``apply_cdc``,
-    ``shallow_clone``) and would silently resurrect MOR-deleted rows;
-    materialize first. Every snapshot reader applies DVs instead."""
+    (``_copy_on_write``, behind ``merge_upsert``, ``delete_where`` and
+    ``apply_cdc``; ``shallow_clone``) and would silently resurrect
+    MOR-deleted rows; materialize first. Every snapshot reader applies
+    DVs instead."""
     dvd = sorted(r for r, a in active.items() if a.get("dv"))
     if dvd:
         raise ValueError(
@@ -613,6 +616,15 @@ def _assert_no_dv(active: dict[str, dict], op: str) -> None:
 # metadata. The reference has no DML at all (SURVEY §2.2 row "Tx/DML"
 # — its SQLite is unwired); this closes that row with the only shape
 # that works at scale.
+#
+# ``_copy_on_write`` is the one such writer: ``merge_upsert``,
+# ``delete_where`` and ``apply_cdc`` only name the rows they hit and
+# the rows they add. A row hits by key (``_key_hits``: broadcast
+# left-semi join on the distinct keys) or by predicate
+# (``_predicate_hits``), and the survivors are the other side of the
+# same split, so every row of a touched file is hit or kept. A row
+# whose predicate is NULL is kept, as SQL DELETE and
+# ``delete_where_mor`` keep it.
 # ---------------------------------------------------------------------------
 
 
@@ -693,6 +705,141 @@ def _write_cdc(
     return {"cdc": rel}
 
 
+def _key_hits(keys: DataFrame, key_cols: list[str]):
+    """Row split by key: ``hits(df)`` keeps the rows of ``df`` whose
+    ``key_cols`` appear in ``keys`` (distinct, broadcast), and
+    ``hits(df, False)`` the rest."""
+    from pyspark.sql import functions as F
+
+    def hits(df: DataFrame, hit: bool = True) -> DataFrame:
+        how = "left_semi" if hit else "left_anti"
+        return df.join(F.broadcast(keys), key_cols, how)
+
+    return hits
+
+
+def _predicate_hits(condition):
+    """Row split by predicate: ``hits(df)`` keeps the rows of ``df``
+    where ``condition`` is true, and ``hits(df, False)`` the rest —
+    including the rows where it is NULL, which a DELETE keeps (as
+    ``delete_where_mor`` does)."""
+    from pyspark.sql import functions as F
+
+    cond = F.coalesce(condition, F.lit(False))
+
+    def hits(df: DataFrame, hit: bool = True) -> DataFrame:
+        return df.filter(cond if hit else ~cond)
+
+    return hits
+
+
+def _copy_on_write(
+    spark: SparkSession,
+    table_dir: str,
+    hits: Callable[..., DataFrame],
+    *,
+    writer: str,
+    empty: str,
+    prefix: str,
+    new_rows: DataFrame | None = None,
+    changes: Callable[[DataFrame | None], DataFrame] | None = None,
+    op: str | None = None,
+) -> tuple[int, int, int, int]:
+    """Prune → rewrite → commit for every CoW writer: fold the
+    snapshot (refusing DV files, and an empty one with message
+    ``empty``), collect the files holding a ``hits`` row, write their
+    other rows plus ``new_rows`` under ``<prefix>_<version:08d>``,
+    record ``changes(old)`` as the ``_cdc`` file (``old``: the touched
+    files' rows, None when none was touched), and commit the removes,
+    the add, the cdc record and the ``op`` stamp, in that order. With
+    no file touched and no ``new_rows`` only the stamp is committed.
+    Returns (version, n_active, n_touched, n_added)."""
+    active = snapshot_actions(table_dir)
+    _assert_no_dv(active, writer)
+    if not active:
+        raise ValueError(empty)
+    snap = scan(spark, [os.path.join(table_dir, r) for r in active])
+    tagged = snap.withColumn("_file", _rel_file_expr(table_dir, list(active)))
+    touched = [
+        r[0] for r in hits(tagged).select("_file").distinct().collect()
+    ]
+    version = _next_version(table_dir)
+    paths = [os.path.join(table_dir, r) for r in touched]
+    out = hits(scan(spark, paths), False) if touched else None
+    if new_rows is not None:
+        out = new_rows if out is None else out.unionByName(new_rows)
+    adds: list[dict] = []
+    cdc: list[dict] = []
+    if out is not None:
+        rel = f"{prefix}_{version:08d}"
+        out.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
+        adds = _adds_unless_empty(table_dir, rel)
+        if changes is not None:
+            old = scan(spark, paths) if touched else None
+            cdc = [_write_cdc(spark, table_dir, version, changes(old))]
+    stamp = [{"op": op}] if op else []
+    commit(
+        table_dir,
+        version,
+        [{"remove": r} for r in touched] + adds + cdc + stamp,
+    )
+    return version, len(active), len(touched), len(adds)
+
+
+def _key_changes(
+    changes: DataFrame, key_cols: list[str], op_col: str | None
+):
+    """A keyed change set for ``_copy_on_write``: ``(hits, upserts,
+    record)``. Every change key hits its table rows; the rows whose
+    ``op_col`` is 'D' only delete, and every other row — all of them
+    when ``op_col`` is None (``merge_upsert``) — is upserted.
+
+    ``record(old)`` is the outgoing change feed: matched old rows are
+    ``update_preimage`` (an upserted key) or ``delete`` (a deleted
+    one), the upserts of matched keys ``update_postimage`` and the
+    rest ``insert``. Without an ``op_col`` the delete branch is not
+    built."""
+    from pyspark.sql import functions as F
+
+    # the distinct change keys feed the prune semi-join, the rewrite
+    # anti-join and (under cdf) the change classification — stage
+    # them once instead of re-running the distinct per broadcast
+    # (they are O(|change keys|), already required to fit as a
+    # broadcast)
+    keys = stage_frame(
+        changes.select(*key_cols).distinct(), "merge_source_keys"
+    )
+    hits = _key_hits(keys, key_cols)
+    if op_col is None:
+        upserts, upserted = changes, hits
+    else:
+        is_delete = _predicate_hits(F.col(op_col) == "D")
+        upserts = is_delete(changes, False).drop(op_col)
+        upserted = _key_hits(upserts.select(*key_cols).distinct(), key_cols)
+    ct = "_change_type"
+
+    def record(old: DataFrame | None) -> DataFrame:
+        if old is None:
+            return upserts.withColumn(ct, F.lit("insert"))
+        pre = upserted(old)
+        rec = pre.withColumn(ct, F.lit("update_preimage"))
+        if op_col is not None:
+            # a key that both deletes and upserts NETS to an update —
+            # emitting its old row as delete AND update_preimage would
+            # double-count it in any downstream multiset audit
+            rec = rec.unionByName(
+                upserted(hits(old), False).withColumn(ct, F.lit("delete"))
+            )
+        matched = _key_hits(pre.select(*key_cols).distinct(), key_cols)
+        return rec.unionByName(
+            matched(upserts).withColumn(ct, F.lit("update_postimage"))
+        ).unionByName(
+            matched(upserts, False).withColumn(ct, F.lit("insert"))
+        )
+
+    return hits, upserts, record
+
+
 def merge_upsert(
     spark: SparkSession,
     table_dir: str,
@@ -702,7 +849,8 @@ def merge_upsert(
 ) -> dict:
     """Copy-on-write MERGE (upsert): rows of ``source`` replace
     table rows with matching ``key_cols``; unmatched source rows are
-    inserted. Prune → rewrite-touched-only → metadata commit.
+    inserted. Prune → rewrite-touched-only → metadata commit — the
+    upsert-only case of ``apply_cdc``.
 
     Scale posture: the prune step is a left-semi join of the snapshot
     against the (broadcastable) distinct source keys, aggregated to
@@ -720,86 +868,17 @@ def merge_upsert(
     without diffing snapshots (a CoW rewrite commit without a change
     record is not CDF-servable, exactly as in Delta).
     """
-    from pyspark.sql import functions as F
-
-    active = snapshot_actions(table_dir)
-    _assert_no_dv(active, "merge_upsert")
-    if not active:
-        raise ValueError("merge into empty snapshot")
-    files = [os.path.join(table_dir, r) for r in active]
-    snap = scan(spark, files).withColumn(
-        "_file", _rel_file_expr(table_dir, list(active))
+    hits, _, record = _key_changes(source, key_cols, None)
+    version, n_active, n_touched, _ = _copy_on_write(
+        spark, table_dir, hits,
+        writer="merge_upsert", empty="merge into empty snapshot",
+        prefix="merge", new_rows=source,
+        changes=record if cdf else None, op="MERGE",
     )
-    # the distinct source keys feed the prune semi-join, the rewrite
-    # anti-join and (under cdf) both change-classification joins —
-    # stage them once instead of re-running the source's distinct per
-    # broadcast (they are O(|source keys|), already required to fit
-    # as a broadcast)
-    keys = stage_frame(
-        source.select(*key_cols).distinct(), "merge_source_keys"
-    )
-    touched = [
-        r[0]
-        for r in snap.join(F.broadcast(keys), key_cols, "left_semi")
-        .select("_file")
-        .distinct()
-        .collect()
-    ]
-    version = _next_version(table_dir)
-    actions: list[dict] = []
-    ct = "_change_type"
-    if touched:
-        touched_paths = [os.path.join(table_dir, f) for f in touched]
-        survivors = (
-            scan(spark, touched_paths)
-            .join(F.broadcast(keys), key_cols, "left_anti")
-        )
-        rewrite_rel = f"merge_{version:08d}"
-        survivors.unionByName(source).write.mode("overwrite").parquet(
-            os.path.join(table_dir, rewrite_rel)
-        )
-        actions += [{"remove": f} for f in touched]
-        actions.append(_written_add(table_dir, rewrite_rel))
-        if cdf:
-            pre = scan(spark, touched_paths).join(
-                F.broadcast(keys), key_cols, "left_semi"
-            )
-            mk = pre.select(*key_cols).distinct()
-            changes = (
-                pre.withColumn(ct, F.lit("update_preimage"))
-                .unionByName(
-                    source.join(
-                        F.broadcast(mk), key_cols, "left_semi"
-                    ).withColumn(ct, F.lit("update_postimage"))
-                )
-                .unionByName(
-                    source.join(
-                        F.broadcast(mk), key_cols, "left_anti"
-                    ).withColumn(ct, F.lit("insert"))
-                )
-            )
-            actions.append(_write_cdc(spark, table_dir, version, changes))
-    else:
-        insert_rel = f"merge_{version:08d}"
-        source.write.mode("overwrite").parquet(
-            os.path.join(table_dir, insert_rel)
-        )
-        actions.append(_written_add(table_dir, insert_rel))
-        if cdf:
-            actions.append(
-                _write_cdc(
-                    spark,
-                    table_dir,
-                    version,
-                    source.withColumn(ct, F.lit("insert")),
-                )
-            )
-    actions.append({"op": "MERGE"})
-    commit(table_dir, version, actions)
     return {
         "version": version,
-        "n_files_before": len(files),
-        "n_files_rewritten": len(touched),
+        "n_files_before": n_active,
+        "n_files_rewritten": n_touched,
     }
 
 
@@ -808,51 +887,29 @@ def delete_where(
 ) -> dict:
     """Copy-on-write DELETE: prune to the files containing any row
     matching ``condition`` (a Column), rewrite only those files with
-    the survivors, commit the swap. A file whose rows are all deleted
-    is removed with no replacement (no empty-file litter). With
-    ``cdf=True`` the deleted rows are recorded as a ``_cdc`` change
-    file (``_change_type`` = delete) riding the same touched-file
-    read, so CDF consumers can serve the commit (see merge_upsert)."""
+    the survivors, commit the swap. A row whose ``condition`` is NULL
+    survives. A file whose rows are all deleted is removed with no
+    replacement (no empty-file litter). With ``cdf=True`` the deleted
+    rows are recorded as a ``_cdc`` change file (``_change_type`` =
+    delete) riding the same touched-file read, so CDF consumers can
+    serve the commit (see merge_upsert)."""
     from pyspark.sql import functions as F
 
-    active = snapshot_actions(table_dir)
-    _assert_no_dv(active, "delete_where")
-    if not active:
-        raise ValueError("delete from empty snapshot")
-    files = [os.path.join(table_dir, r) for r in active]
-    snap = scan(spark, files).withColumn(
-        "_file", _rel_file_expr(table_dir, list(active))
+    hits = _predicate_hits(condition)
+    version, _, n_touched, n_added = _copy_on_write(
+        spark, table_dir, hits,
+        writer="delete_where", empty="delete from empty snapshot",
+        prefix="delete",
+        changes=(
+            (lambda old: hits(old).withColumn("_change_type", F.lit("delete")))
+            if cdf else None
+        ),
+        op="DELETE",
     )
-    touched = [
-        r[0]
-        for r in snap.filter(condition).select("_file").distinct().collect()
-    ]
-    version = _next_version(table_dir)
-    actions = [{"remove": f} for f in touched]
-    n_rewritten = 0
-    if touched:
-        touched_paths = [os.path.join(table_dir, f) for f in touched]
-        survivors = scan(spark, touched_paths).filter(~condition)
-        rewrite_rel = f"delete_{version:08d}"
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(table_dir, rewrite_rel)
-        )
-        adds = _adds_unless_empty(table_dir, rewrite_rel)
-        actions += adds
-        n_rewritten = len(adds)
-        if cdf:
-            deleted = (
-                scan(spark, touched_paths)
-                .filter(condition)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            actions.append(_write_cdc(spark, table_dir, version, deleted))
-    actions.append({"op": "DELETE"})
-    commit(table_dir, version, actions)
     return {
         "version": version,
-        "n_files_touched": len(touched),
-        "n_files_rewritten": n_rewritten,
+        "n_files_touched": n_touched,
+        "n_files_rewritten": n_added,
     }
 
 
@@ -1046,77 +1103,16 @@ def apply_cdc(
     delete and an upsert in one feed nets to an update (matched rows
     are dropped once, the upsert appended once), and the change
     record says exactly that — update pre/post, never a
-    contradictory delete+preimage pair for one old row."""
-    from pyspark.sql import functions as F
-
-    active = snapshot_actions(table_dir)
-    _assert_no_dv(active, "apply_cdc")
-    if not active:
-        raise ValueError("apply_cdc into empty snapshot")
-    files = [os.path.join(table_dir, r) for r in active]
-    snap = scan(spark, files).withColumn(
-        "_file", _rel_file_expr(table_dir, list(active))
+    contradictory delete+preimage pair for one old row. A row whose
+    ``op_col`` is NULL is not 'D', so it upserts."""
+    hits, upserts, record = _key_changes(changes, key_cols, op_col)
+    version, _, n_touched, _ = _copy_on_write(
+        spark, table_dir, hits,
+        writer="apply_cdc", empty="apply_cdc into empty snapshot",
+        prefix="cdc", new_rows=upserts,
+        changes=record if cdf else None,
     )
-    keys = changes.select(*key_cols).distinct()
-    touched = [
-        r[0]
-        for r in snap.join(F.broadcast(keys), key_cols, "left_semi")
-        .select("_file")
-        .distinct()
-        .collect()
-    ]
-    upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
-    version = _next_version(table_dir)
-    actions: list[dict] = [{"remove": f} for f in touched]
-    rewrite_rel = f"cdc_{version:08d}"
-    if touched:
-        touched_paths = [os.path.join(table_dir, f) for f in touched]
-        survivors = scan(spark, touched_paths).join(
-            F.broadcast(keys), key_cols, "left_anti"
-        )
-        out = survivors.unionByName(upserts)
-    else:
-        out = upserts
-    out.write.mode("overwrite").parquet(
-        os.path.join(table_dir, rewrite_rel)
-    )
-    actions += _adds_unless_empty(table_dir, rewrite_rel)
-    if cdf:
-        ct = "_change_type"
-        up_keys = changes.filter(F.col(op_col) != "D").select(
-            *key_cols
-        ).distinct()
-        # a key that both deletes and upserts NETS to an update —
-        # emitting its old row as delete AND update_preimage would
-        # double-count it in any downstream multiset audit
-        del_keys = (
-            changes.filter(F.col(op_col) == "D")
-            .select(*key_cols)
-            .distinct()
-            .join(up_keys, key_cols, "left_anti")
-        )
-        if touched:
-            touched_paths = [os.path.join(table_dir, f) for f in touched]
-            old = scan(spark, touched_paths)
-            pre = old.join(
-                F.broadcast(up_keys), key_cols, "left_semi"
-            ).withColumn(ct, F.lit("update_preimage"))
-            dels = old.join(
-                F.broadcast(del_keys), key_cols, "left_semi"
-            ).withColumn(ct, F.lit("delete"))
-            mk = pre.select(*key_cols).distinct()
-            post = upserts.join(
-                F.broadcast(mk), key_cols, "left_semi"
-            ).withColumn(ct, F.lit("update_postimage"))
-            ins = upserts.join(
-                F.broadcast(mk), key_cols, "left_anti"
-            ).withColumn(ct, F.lit("insert"))
-            rec = pre.unionByName(dels).unionByName(post).unionByName(ins)
-        else:
-            rec = upserts.withColumn(ct, F.lit("insert"))
-        actions.append(_write_cdc(spark, table_dir, version, rec))
-    commit(table_dir, version, actions)
-    return {"version": version, "n_files_rewritten": len(touched)}
+    return {"version": version, "n_files_rewritten": n_touched}
 
 
 # ---------------------------------------------------------------------------
@@ -2399,7 +2395,8 @@ def rewrite_minus_ids(
             commit(
                 table_dir,
                 version,
-                [{"remove": r} for r in active] + [{"add": rel}],
+                [{"remove": r} for r in active]
+                + [_written_add(table_dir, rel)],
             )
             return {"version": version, "rel": rel}
         except CommitConflict:
@@ -3097,22 +3094,22 @@ def constrained_append(
             validated.update(fresh)
 
     _check(table_constraints(table_dir))  # fast-path, before any write
-    written = False
+    add: dict | None = None  # set once the batch is written
     while True:
         head = latest_version(table_dir)
         try:
             _check(table_constraints(table_dir, head))
         except ConstraintViolation:
-            if written:
+            if add is not None:
                 shutil.rmtree(
                     os.path.join(table_dir, rel), ignore_errors=True
                 )
             raise
-        if not written:
+        if add is None:
             df.write.parquet(os.path.join(table_dir, rel))
-            written = True
+            add = _written_add(table_dir, rel)
         try:
-            commit(table_dir, head + 1, [{"add": rel}])
+            commit(table_dir, head + 1, [add])
             return {"version": head + 1, "rel": rel}
         except CommitConflict:
             continue  # lost the race; re-check constraints and retry

@@ -1351,8 +1351,32 @@ def _jobs_in(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.fixture(scope="module")
+def four_rels(spark, tmp_path_factory):
+    """``four_rels(base)`` makes ``base`` a table of four Spark-written
+    single-file rels of 50 rows, ``f{i}`` holding keys
+    ``i*100 .. i*100+49``, added with ``num_records`` in commit 0:
+    a copy of one template, so each table costs no Spark job."""
+    import shutil
+
+    template = str(tmp_path_factory.mktemp("four_rels") / "t")
+    acts = []
+    for i in range(4):
+        spark.createDataFrame(
+            [(i * 100 + j, j) for j in range(50)], "k long, c long"
+        ).coalesce(1).write.parquet(f"{template}/f{i}")
+        acts.append({"add": f"f{i}", "num_records": 50})
+    lakelog.commit(template, 0, acts)
+
+    def make(base):
+        shutil.copytree(template, base)
+        return base
+
+    return make
+
+
 def test_dml_adds_carry_num_records_so_maybe_optimize_reads_the_log(
-    spark, tmp_path
+    spark, tmp_path, four_rels
 ):
     """merge_upsert and delete_where record ``num_records`` on the adds
     they write (from the written footers), so maybe_optimize sizes
@@ -1361,14 +1385,7 @@ def test_dml_adds_carry_num_records_so_maybe_optimize_reads_the_log(
     the rewrite: its read takes the schema from the footer memo."""
     from pyspark.sql import functions as F
 
-    base = str(tmp_path / "t")
-    acts = []
-    for i in range(4):
-        spark.createDataFrame(
-            [(i * 100 + j, j) for j in range(50)], "k long, c long"
-        ).coalesce(1).write.parquet(f"{base}/f{i}")
-        acts.append({"add": f"f{i}", "num_records": 50})
-    lakelog.commit(base, 0, acts)
+    base = four_rels(str(tmp_path / "t"))
     lakelog.merge_upsert(
         spark, base,
         spark.createDataFrame([(1, 9), (999, 9)], "k long, c long"),
@@ -1456,6 +1473,175 @@ def test_lake_reads_plan_no_job_and_merge_drops_its_inference_jobs(
     assert n_infer - n_scan == 3
 
 
+def _merge(spark, base, cdf):
+    src = spark.createDataFrame([(1, 9), (999, 9)], "k long, c long")
+    return lakelog.merge_upsert(spark, base, src, ["k"], cdf=cdf)
+
+
+def _delete(spark, base, cdf):
+    from pyspark.sql import functions as F
+
+    return lakelog.delete_where(spark, base, F.col("k") == 205, cdf=cdf)
+
+
+def _apply(spark, base, cdf):
+    feed = spark.createDataFrame(
+        [(2, 7, "U"), (1000, 7, "I"), (105, None, "D")],
+        "k long, c long, op string",
+    )
+    return lakelog.apply_cdc(spark, base, feed, ["k"], cdf=cdf)
+
+
+@pytest.mark.parametrize(
+    "write,cdf,bound",
+    [
+        (_merge, False, 6),
+        (_merge, True, 10),
+        (_delete, False, 3),
+        (_delete, True, 4),
+        (_apply, False, 6),
+        (_apply, True, 12),
+    ],
+    ids=lambda v: getattr(v, "__name__", str(v)).lstrip("_"),
+)
+def test_dml_writer_job_counts(
+    spark, tmp_path, four_rels, write, cdf, bound
+):
+    """Each copy-on-write writer, on a warm session, plans no more
+    Spark jobs than it takes to prune, rewrite and record its change
+    feed on four single-file rels (apply_cdc planned 7 and 14 before
+    its change keys were staged)."""
+    write(spark, four_rels(str(tmp_path / "warm")), cdf)
+    base = four_rels(str(tmp_path / "t"))
+    group = f"dml_{write.__name__}_{cdf}_{os.path.basename(tmp_path)}"
+    _, n_jobs = _jobs_in(spark, group, lambda: write(spark, base, cdf))
+    assert n_jobs <= bound
+
+
+@pytest.mark.parametrize("cdf", [False, True], ids=["plain", "cdf"])
+def test_dml_commit_json(spark, tmp_path, four_rels, cdf):
+    """merge → delete → apply_cdc → a merge that touches no file:
+    each commit's actions are removes, the add with its
+    ``num_records``, the cdc record and the op stamp, in that order
+    (apply_cdc stamps none); with ``cdf`` the records say what each
+    write did."""
+    base = four_rels(str(tmp_path / "t"))
+    _merge(spark, base, cdf)  # k=1 (f0) updated, 999 inserted
+    _delete(spark, base, cdf)  # k=205 (f2)
+    feed = spark.createDataFrame(
+        [(2, 7, "U"), (1000, 7, "I"), (3, None, "D")],
+        "k long, c long, op string",
+    )
+    lakelog.apply_cdc(spark, base, feed, ["k"], cdf=cdf)  # merge rel
+    new = spark.createDataFrame([(5000, 1), (5001, 2)], "k long, c long")
+    lakelog.merge_upsert(spark, base, new, ["k"], cdf=cdf)
+
+    def cdc(v):
+        return [{"cdc": f"_cdc/cdc_{v:08d}"}] if cdf else []
+
+    assert [lakelog.commit_actions(base, v) for v in range(5)] == [
+        [{"add": f"f{i}", "num_records": 50} for i in range(4)],
+        [{"remove": "f0"}, {"add": "merge_00000001", "num_records": 51}]
+        + cdc(1) + [{"op": "MERGE"}],
+        [{"remove": "f2"}, {"add": "delete_00000002", "num_records": 49}]
+        + cdc(2) + [{"op": "DELETE"}],
+        [{"remove": "merge_00000001"},
+         {"add": "cdc_00000003", "num_records": 51}] + cdc(3),
+        [{"add": "merge_00000004", "num_records": 2}]
+        + cdc(4) + [{"op": "MERGE"}],
+    ]
+    if cdf:
+        got = sorted(
+            (r._commit_version, r.k, r._change_type)
+            for r in lakelog.table_changes(spark, base, 0, 4).collect()
+        )
+        assert got == [
+            (1, 1, "update_postimage"), (1, 1, "update_preimage"),
+            (1, 999, "insert"),
+            (2, 205, "delete"),
+            (3, 2, "update_postimage"), (3, 2, "update_preimage"),
+            (3, 3, "delete"), (3, 1000, "insert"),
+            (4, 5000, "insert"), (4, 5001, "insert"),
+        ]
+
+
+@pytest.mark.parametrize("mode", ["cow", "cow_cdf", "mor"])
+def test_delete_where_keeps_rows_whose_condition_is_null(
+    spark, tmp_path, mode
+):
+    """A DELETE keeps the rows its predicate cannot decide: copy-on-
+    write (with or without a change record) and merge-on-read agree,
+    and the change feed records only the row that was deleted."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, 10), (2, None), (3, 30)], "k long, v long"
+    ).coalesce(1).write.parquet(f"{base}/f0")
+    lakelog.commit(base, 0, [{"add": "f0"}])
+    cond = F.col("v") > 20
+    if mode == "mor":
+        lakelog.delete_where_mor(spark, base, cond)
+    else:
+        lakelog.delete_where(spark, base, cond, cdf=mode == "cow_cdf")
+    assert sorted(
+        tuple(r) for r in lakelog.read_snapshot(spark, base).collect()
+    ) == [(1, 10), (2, None)]
+    if mode == "cow_cdf":
+        assert [
+            tuple(r)
+            for r in lakelog.table_changes(spark, base, 0, 1).collect()
+        ] == [(3, 30, "delete", 1)]
+
+
+def test_apply_cdc_row_with_null_op_upserts(spark, tmp_path):
+    """A change row whose op is NULL is not a delete, so it upserts:
+    its key's old row is replaced, not dropped, and the change record
+    says so."""
+    t = _build(spark, tmp_path)
+    feed = spark.createDataFrame(
+        [(1, 111, None), (2, None, "D")], "k long, v long, op string"
+    )
+    lakelog.apply_cdc(spark, t, feed, ["k"], cdf=True)
+    assert _state(spark, t) == sorted(
+        [(k, k * 10) for k in range(8) if k not in (1, 2)] + [(1, 111)]
+    )
+    assert sorted(
+        (r.k, r.v, r._change_type)
+        for r in lakelog.table_changes(spark, t, 0, 1).collect()
+    ) == [
+        (1, 10, "update_preimage"),
+        (1, 111, "update_postimage"),
+        (2, 20, "delete"),
+    ]
+
+
+def test_minus_ids_and_constrained_append_adds_carry_num_records(
+    spark, tmp_path, four_rels
+):
+    """rewrite_minus_ids and constrained_append record ``num_records``
+    on the adds they write, so maybe_optimize sizes their files from
+    the log: below two small files it plans no Spark job."""
+    base = four_rels(str(tmp_path / "t"))
+    gone = spark.createDataFrame([(1,), (102,)], "__gone long")
+    rel = lakelog.rewrite_minus_ids(spark, base, gone, "k")["rel"]
+    assert {
+        r: a.get("num_records")
+        for r, a in lakelog.snapshot_actions(base).items()
+    } == {rel: 198}
+    batch = spark.createDataFrame(
+        [(900 + i, i) for i in range(3)], "k long, c long"
+    )
+    lakelog.constrained_append(spark, base, batch, "app")
+    assert lakelog.snapshot_actions(base)["app"]["num_records"] == 3
+    res, n_jobs = _jobs_in(
+        spark, f"minus_append_{os.path.basename(tmp_path)}",
+        lambda: lakelog.maybe_optimize(spark, base, 1, 2),
+    )
+    assert res["triggered"] and res["n_files_compacted"] == 0
+    assert n_jobs == 0
+
+
 def _two_column_set_rels(spark, base):
     """Rel ``b`` (k, extra) and rel ``a`` (k, a_only), NOT NULL columns
     as Spark writes them; returns their paths in first-added order,
@@ -1541,7 +1727,8 @@ def test_row_positions_only_through_join_positions():
     file path and row index) appears in the module only inside
     ``_join_positions``; and only the writers that rewrite or
     reference raw parquet still refuse deletion vectors — every
-    snapshot reader applies them through ``_read_active``."""
+    snapshot reader applies them through ``_read_active``. The
+    copy-on-write DML writers share one such path."""
     import ast
     import pathlib
 
@@ -1556,17 +1743,24 @@ def test_row_positions_only_through_join_positions():
         and not helper.lineno <= i <= helper.end_lineno
     ]
     assert not hits, f"tag row positions in _join_positions: lines {hits}"
-    guarded = {
-        d.name
-        for d in defs
-        for n in ast.walk(d)
-        if isinstance(n, ast.Call)
-        and isinstance(n.func, ast.Name)
-        and n.func.id == "_assert_no_dv"
-    }
-    assert guarded == {
-        "merge_upsert", "delete_where", "apply_cdc", "shallow_clone",
-    }
+
+    def callers(name):
+        return {
+            d.name
+            for d in defs
+            for n in ast.walk(d)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id == name
+        }
+
+    assert callers("_assert_no_dv") == {"_copy_on_write", "shallow_clone"}
+    # one copy-on-write path: the DML writers prune, rewrite, record
+    # and commit only through _copy_on_write
+    assert callers("_write_cdc") == {"_copy_on_write", "restore_table"}
+    dml = {"merge_upsert", "delete_where", "apply_cdc"}
+    for name in ("scan", "_rel_file_expr", "commit"):
+        assert not callers(name) & dml, name
 
 
 def test_vacuum_folds_the_retention_window_once(tmp_path, monkeypatch):
